@@ -1307,9 +1307,9 @@ def sql_select_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered under ``callcenter_analytics.gold_call_daily_summary``,
     and then Athena Q1 runs VERBATIM — bare name, no time-travel pin,
     no register_sql_view — through the SQL front-end's passthrough
-    rewriter (``sources/sql_dml.py:_rewrite_bare_names``), which
-    routes the reference through ``managed_table.read`` so the DV
-    anti-join applies. The oracle rebuilds the summary and filters the
+    read path (``sources/sql_dml.py:_read_cuts``, a walk over Spark's
+    parse of the statement), which routes the reference through
+    ``managed_table.read`` so the DV anti-join applies. The oracle rebuilds the summary and filters the
     deleted days relationally."""
     import shutil
 
@@ -1395,8 +1395,8 @@ def sql_table_changes_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SELECT ... FROM table_changes('name', 1)`` — over a scripted
     INSERT / UPDATE / DELETE sequence on a CDF-enabled table, read back
     ENTIRELY through the SQL front-end (``sources/sql_dml.py:
-    _rewrite_table_changes_tvf`` splices the O(changes) sidecar feed in
-    as a per-statement view). The oracle replays the three commits
+    _table_changes_view`` splices the O(changes) sidecar feed in as a
+    per-statement view). The oracle replays the three commits
     relationally and reconstructs the exact change feed, preimages and
     postimages included, so the sidecar contents, version stamps and
     TVF plumbing all have to be right for the hashes to match."""
@@ -1495,7 +1495,7 @@ def sql_table_changes_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds (verdict r11 item 4): each quoted bound maps to the newest
     retained version whose marker commit time is at-or-before it —
     the same ladder ``read_as_of`` uses (``sources/sql_dml.py:
-    _rewrite_table_changes_tvf``). The commit sequence is the CDF
+    _table_changes_view``). The commit sequence is the CDF
     script of ``sql_table_changes_read``; the probe timestamps are the
     MIDPOINTS between recorded commit times (from ``history()``), so
     the from-bound resolves to v1 (serving changes strictly after it)

@@ -1364,9 +1364,9 @@ def _write_checkpoint(
     ]
     table = pa.table(
         {
-            "txn": pa.array([None] * n, type=txn_t),
+            "txn": pa.nulls(n, type=txn_t),
             "add": pa.array(add_rows, type=add_t),
-            "remove": pa.array([None] * n, type=remove_t),
+            "remove": pa.nulls(n, type=remove_t),
             "metaData": pa.array(
                 [None, meta_row] + [None] * len(adds), type=meta_t
             ),

@@ -3,28 +3,26 @@
 The reference relies on ``delta.tables.DeltaTable`` for
 ``merge(...).whenMatchedUpdateAll().whenNotMatchedInsertAll()``
 (``/root/reference/glue_jobs/01_silver_delta_upsert.py:99-112``) and
-``DeltaTable.isDeltaTable`` existence probes. ``delta-spark`` is not
-installed here, so this module provides one API with two backends:
-
-- **delta** (used automatically when importable): real Delta Lake.
-- **parquet emulation**: MERGE re-expressed in DataFrame algebra —
+``DeltaTable.isDeltaTable`` existence probes. This module re-expresses
+those semantics over parquet snapshots (``delta-spark`` is not a
+dependency; :mod:`sources.delta_api` is the delta-spark-shaped facade
+over this module). MERGE is DataFrame algebra —
       merged = target LEFT ANTI JOIN source ON keys   (unmatched target)
                UNION ALL source                       (updateAll+insertAll)
-  then an atomic directory swap. With a key-unique source this is
-  exactly ``whenMatchedUpdateAll/whenNotMatchedInsertAll``.
+then an atomic directory swap. With a key-unique source this is
+exactly ``whenMatchedUpdateAll/whenNotMatchedInsertAll``.
 
 Scale notes (100 TB): the anti-join shuffles on the merge keys — the
 same cost Delta MERGE pays for its inner join; when the source is small
 (incremental loads — the reference's late-data scenario) broadcast it.
 The emulation rewrites the whole table (Delta rewrites only matched
-files); a production deployment would use real Delta/Iceberg — the
-engine API is identical either way, which is the point.
+files).
 
 Storage note: every mutating/listing filesystem primitive goes through
 the ``TableFS`` seam (``sources/fs.py``) — locally the swap is
 ``os.rename`` based (atomic on POSIX); on object stores the same seam
 maps to manifest-pointer conditional PUTs (see fs.py's per-API table),
-exactly what the Delta backend's log store does.
+the same contract Delta's log store relies on.
 """
 
 from __future__ import annotations
@@ -40,14 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fs import get_fs as _fs
-
-try:  # pragma: no cover - depends on environment
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAS_DELTA = True
-except ImportError:
-    DeltaTable = None
-    HAS_DELTA = False
 
 _MARKER = "_engine_table.json"
 # Deletion-vector sidecar: a parquet dataset of (file basename, row
@@ -272,8 +262,6 @@ def _check_writer(marker: dict, where: str) -> None:
 def is_table(spark: SparkSession, path: str) -> bool:
     """Existence probe (DeltaTable.isDeltaTable analogue,
     01_silver_delta_upsert.py:99)."""
-    if HAS_DELTA and DeltaTable.isDeltaTable(spark, path):
-        return True
     recover(path)
     return _fs().exists(os.path.join(path, _MARKER))
 
@@ -869,15 +857,9 @@ def _read_logical(
     must carry row-tracking ids through a rewrite. User reads go
     through :func:`read`, which hides or renames them."""
     if version is None:
-        if HAS_DELTA and DeltaTable.isDeltaTable(spark, path):
-            return spark.read.format("delta").load(path)
         recover(path)
         return _apply_column_mapping(
             _read_physical(spark, path), _read_marker(path)
-        )
-    if HAS_DELTA and DeltaTable.isDeltaTable(spark, path):  # pragma: no cover
-        return (
-            spark.read.format("delta").option("versionAsOf", version).load(path)
         )
     if version == table_version(path):
         return _read_physical(spark, path)
@@ -1306,15 +1288,9 @@ def initial_write(
     01_silver_delta_upsert.py:115-121). Emulation routes through the
     stage-and-swap commit, so even the initial load is atomic — a crash
     mid-write leaves an inert staging dir, never a half-table."""
-    if HAS_DELTA:
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.format("delta").save(path)
-    else:
-        commit_overwrite(
-            df, path, keys=keys, partition_by=partition_by, max_history=0
-        )
+    commit_overwrite(
+        df, path, keys=keys, partition_by=partition_by, max_history=0
+    )
 
 
 def merge_upsert(
@@ -1389,19 +1365,6 @@ def _merge_upsert_impl(
     keys = list(keys)
     if not_matched_by_source not in ("keep", "delete"):
         raise ValueError("not_matched_by_source must be 'keep' or 'delete'")
-    if HAS_DELTA and DeltaTable.isDeltaTable(spark, path):  # pragma: no cover
-        target = DeltaTable.forPath(spark, path).alias("t")
-        cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        builder = (
-            target.merge(source.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-        )
-        if not_matched_by_source == "delete":
-            builder = builder.whenNotMatchedBySourceDelete()
-        builder.execute()
-        return
-
     target = _read_logical(spark, path)
     base_version = table_version(path)  # optimistic-concurrency baseline
     meta = _read_marker(path)
@@ -2383,7 +2346,7 @@ def _delete_where_impl(
     ``deletion_vectors=False`` rewrites the whole table (real Delta
     without DVs rewrites only files containing matches — with the
     Z-order/clustered layouts in ``operators/layout.py`` those are
-    few); the Delta backend delegates to ``DeltaTable.delete``.
+    few).
 
     ``deletion_vectors=True`` commits the delete WITHOUT rewriting any
     data file (Delta's deletion-vector mode): the new version's data
@@ -2399,9 +2362,6 @@ def _delete_where_impl(
     bloom bits can only over-KEEP a file, never skip a live row."""
     cond = F.expr(condition) if isinstance(condition, str) else condition
     _check_append_only(_read_marker(path), "DELETE")
-    if HAS_DELTA and DeltaTable.isDeltaTable(spark, path):  # pragma: no cover
-        DeltaTable.forPath(spark, path).delete(cond)
-        return
     if deletion_vectors:
         _delete_where_dv(spark, path, cond, max_history)
         return
@@ -2727,9 +2687,6 @@ def _update_where_impl(
     files would fork the physical schema)."""
     cond = F.expr(condition) if isinstance(condition, str) else condition
     _check_append_only(_read_marker(path), "UPDATE")
-    if HAS_DELTA and DeltaTable.isDeltaTable(spark, path):  # pragma: no cover
-        DeltaTable.forPath(spark, path).update(cond, assignments)
-        return
     if deletion_vectors:
         marker = _read_marker(path)
         key_touch = bool(marker.get("unique_keys")) and (

@@ -249,9 +249,9 @@ def make_table_changes_stream_source():
             arrays = []
             for field in self.pa_schema:
                 if field.name == "_commit_version":
-                    arrays.append(pa.array([version] * n).cast(field.type))
+                    arrays.append(pa.repeat(version, n).cast(field.type))
                 elif field.name == "_commit_timestamp":
-                    arrays.append(pa.array([ts] * n).cast(field.type))
+                    arrays.append(pa.repeat(ts, n).cast(field.type))
                 elif field.name in names:
                     col = table.column(field.name)
                     arrays.append(
@@ -761,7 +761,7 @@ def make_table_stream_source():
                 if val is None:
                     arrays.append(pa.nulls(n, type=field.type))
                 else:
-                    arrays.append(pa.array([val] * n).cast(field.type))
+                    arrays.append(pa.repeat(val, n).cast(field.type))
             yield from pa.table(arrays, schema=self.pa_schema).to_batches()
 
         def commit(self, end):

@@ -5,26 +5,28 @@ Real Delta accepts the reference's merge idiom
 literal SQL string — ``spark.sql("MERGE INTO t USING s ON ... WHEN
 MATCHED ...")`` — plus ``UPDATE`` / ``DELETE FROM`` / ``INSERT INTO``.
 The engine's Python facade (:mod:`sources.delta_api`) already executes
-every one of those semantics; this module adds the SQL SKIN: parse the
-four DML verbs against names in the txn-catalog registry
-(:mod:`sources.txn_catalog`) and dispatch to the existing executors.
-No new engine semantics live here — every statement bottoms out in
-``DeltaTable.merge/update/delete`` or ``append_rows`` /
+every one of those semantics; this module adds the SQL SKIN: Spark's
+own SQL parser (``sessionState().sqlParser()``) parses the four DML
+verbs, and this module maps the parsed statement onto names in the
+txn-catalog registry (:mod:`sources.txn_catalog`) and the existing
+executors. No new engine semantics live here — every statement
+bottoms out in ``DeltaTable.merge/update/delete`` or ``append_rows`` /
 ``commit_overwrite``, so CDF, row tracking, constraints, OCC retry and
 schema enforcement all apply unchanged.
 
-Entry point: :func:`sql` — DML statements are parsed here; anything
-else passes through to ``spark.sql`` with registry-name references
-rewritten to per-statement temp views (see "Passthrough reads" below),
-so ``SELECT ... FROM callcenter_analytics.daily_call_summary`` — the
-reference's bare-name Athena idiom
+Entry point: :func:`sql` — DML statements are dispatched here;
+anything else passes through to ``spark.sql`` with registry-name
+references rewritten to per-statement temp views (see "Passthrough
+reads" below), so ``SELECT ... FROM callcenter_analytics.daily_call_summary``
+— the reference's bare-name Athena idiom
 (``/root/reference/sql/athena_queries.sql``) — just works, deletion
 vectors and all, with no prior ``register_sql_view``.
 
-Grammar (the Delta SQL DML subset; case-insensitive keywords, ANSI
-quoting, arbitrary Spark SQL expressions inside conditions/values):
+Grammar (the Delta SQL DML subset as Spark's parser reads it;
+case-insensitive keywords, ANSI quoting, comments anywhere, arbitrary
+Spark SQL expressions inside conditions/values):
 
-    MERGE INTO tgt [AS] [t] USING src|(subquery) [AS] [s] ON <cond>
+    MERGE [WITH SCHEMA EVOLUTION] INTO tgt [AS] [t] USING src|(subquery) [AS] [s] ON <cond>
       { WHEN MATCHED [AND <cond>] THEN { UPDATE SET * | UPDATE SET c=e,... | DELETE }
       | WHEN NOT MATCHED [BY TARGET] [AND <cond>] THEN
             { INSERT * | INSERT (c,...) VALUES (e,...) }
@@ -67,9 +69,8 @@ Commands (``sql_command``, routed automatically by :func:`sql`):
         [PATTERN = '<glob>'] [FORMAT_OPTIONS (k=v, ...)]
 
 Passthrough reads resolve FOUR registry-name reference shapes, each
-spliced out quote-aware (never inside string literals) as a
-per-statement temp view that :func:`sql` drops after ``spark.sql``'s
-eager analysis inlines it:
+spliced out as a per-statement temp view that :func:`sql` drops after
+``spark.sql``'s eager analysis inlines it:
 
     SELECT ... FROM t                        -- bare name, LIVE snapshot
     SELECT ... FROM t VERSION AS OF 3        -- time travel
@@ -77,24 +78,37 @@ eager analysis inlines it:
     SELECT ... FROM t$files|$partitions|$snapshots   -- metadata tables
     SELECT ... FROM table_changes('t', from[, to])   -- Delta's CDF TVF
 
-Bare names route through :func:`managed_table.read`, so reader
-features (deletion vectors, row tracking, column mapping, empty-table
-schema) are honored — the gap :func:`delta_api.register_sql_view`'s
-raw parquet views cannot close. A registry name shadows a same-named
-session temp view in these positions (the registry is the metastore);
-unresolvable names fall through to Spark's own catalog untouched.
+All but the metadata tables come from ONE walk over Spark's parse of
+the statement: relations, time-travel pins and table-function calls
+are parse-tree nodes carrying exact character spans, so string
+literals, comments, scalar ``FROM`` (``EXTRACT(year FROM d)``), comma
+lists, parenthesized relations and CTE scoping are the parser's
+business, not this module's. The ``$`` suffix is the single regex
+pre-pass (over literal-masked text), because Spark's lexer rejects
+``$`` in a name. Bare names route through :func:`managed_table.read`,
+so reader features (deletion vectors, row tracking, column mapping,
+empty-table schema) are honored — the gap
+:func:`delta_api.register_sql_view`'s raw parquet views cannot close.
+A registry name shadows a same-named session temp view in these
+positions (the registry is the metastore); unresolvable names fall
+through to Spark's own catalog untouched.
 
-Scale: the parser is driver-side string work on statements (bytes);
-all data movement happens in the dispatched executors, which keep
-their documented 100 TB plans (key-join MERGE, DV-aware DELETE/UPDATE,
+Scale: the front end costs one parse plus a py4j walk of the
+unresolved plan per statement, a few milliseconds; all data
+movement happens in the dispatched executors, which keep their
+documented 100 TB plans (key-join MERGE, DV-aware DELETE/UPDATE,
 hardlink append).
 """
 
 from __future__ import annotations
 
+import datetime
+import json
 import os
 import re
+import uuid
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -108,32 +122,25 @@ class SqlDmlError(ValueError):
     """Malformed or unsupported DML statement."""
 
 
-# -- lexical helpers --------------------------------------------------------
-# The splitter walks the statement once, tracking quote/paren state, and
-# finds keyword phrases only at TOP level — expressions, string literals
-# and subqueries pass through verbatim to Spark.
+# -- lexical helpers (commands and scripts) ------------------------------------
+# sql_command's verbs are ones Spark's parser rejects or misreads, so
+# they keep a small scanner: it walks the statement once, tracking
+# quote/paren state, and finds keyword phrases only at TOP level —
+# expressions, string literals and subqueries pass through verbatim.
 
 _QUOTES = {"'": "'", '"': '"', "`": "`"}
-
-
-_CASE_RE = re.compile(r"CASE\b", re.I)
-_END_RE = re.compile(r"END\b", re.I)
 
 
 def _scan(s: str, phrases: list[str]) -> list[tuple[int, int, str]]:
     """Positions of top-level keyword phrases (longest-first match).
     Each phrase is spelled with single spaces; any whitespace run
-    matches between its words. CASE-aware (review r12): keywords
-    between a top-level ``CASE`` and its ``END`` belong to the CASE
-    expression (``WHEN``/``THEN``/``ELSE``) and are never reported —
-    an unparenthesized ``CASE WHEN ... THEN ... END`` in a MERGE ON
-    condition or WHEN-clause predicate must not split the statement."""
+    matches between its words."""
     pats = [
         (p, re.compile(r"\s+".join(map(re.escape, p.split())) + r"\b", re.I))
         for p in sorted(phrases, key=len, reverse=True)
     ]
     out: list[tuple[int, int, str]] = []
-    depth, case_depth, i, n = 0, 0, 0, len(s)
+    depth, i, n = 0, 0, len(s)
     while i < n:
         c = s[i]
         if c in _QUOTES:
@@ -152,19 +159,6 @@ def _scan(s: str, phrases: list[str]) -> list[tuple[int, int, str]]:
             i += 1
             continue
         if depth == 0 and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")):
-            m = _CASE_RE.match(s, i)
-            if m:
-                case_depth += 1
-                i = m.end()
-                continue
-            if case_depth:
-                m = _END_RE.match(s, i)
-                if m:
-                    case_depth -= 1
-                    i = m.end()
-                else:
-                    i += 1
-                continue
             for phrase, pat in pats:
                 m = pat.match(s, i)
                 if m:
@@ -200,44 +194,6 @@ def _split_top(s: str, sep: str = ",") -> list[str]:
     return [p.strip() for p in parts if p.strip()]
 
 
-def _parse_assignments(s: str) -> dict[str, str]:
-    """``a = expr, b = expr`` -> {column: expression-string}. The LHS is
-    an identifier (optionally backticked / alias-qualified); the split
-    is at its FIRST top-level ``=`` so ``=`` inside the RHS expression
-    (CASE WHEN x = 1 ...) is untouched."""
-    out: dict[str, str] = {}
-    for item in _split_top(s):
-        depth, cut = 0, -1
-        j = 0
-        while j < len(item):
-            c = item[j]
-            if c in _QUOTES:
-                end = _QUOTES[c]
-                j += 1
-                while j < len(item) and item[j] != end:
-                    j += 1
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "=" and depth == 0:
-                # reject comparison spellings <= >= != == landing first
-                if j and item[j - 1] in "<>!=":
-                    raise SqlDmlError(f"malformed assignment: {item!r}")
-                cut = j
-                break
-            j += 1
-        if cut < 0:
-            raise SqlDmlError(f"malformed assignment: {item!r}")
-        col = item[:cut].strip().strip("`")
-        if "." in col:  # strip a target-alias qualification
-            col = col.rsplit(".", 1)[1].strip("`")
-        if not col:
-            raise SqlDmlError(f"malformed assignment: {item!r}")
-        out[col] = item[cut + 1 :].strip()
-    return out
-
-
 _IDENT = r"(?:`[^`]+`|[A-Za-z_][\w$]*)(?:\.(?:`[^`]+`|[A-Za-z_][\w$]*))*"
 
 
@@ -256,25 +212,104 @@ def _parse_relation(s: str) -> tuple[str, str | None]:
     return m.group(1).replace("`", ""), alias.strip("`") if alias else None
 
 
-def _strip_alias(cond: str, alias: str | None) -> str:
-    """Rewrite ``alias.col`` -> ``col`` for single-table UPDATE/DELETE
-    conditions (the executors evaluate against the bare table frame).
-    Quote-aware: matches are located on the literal-masked text and
-    spliced from the original, so an ``alias.`` sequence INSIDE a
-    string literal survives (review r12: a blind re.sub silently
-    rewrote ``WHERE u.name = 'u.name'`` into ``name = 'name'``)."""
-    if not alias:
-        return cond
-    masked = _mask_literals(cond)
-    out: list[str] = []
-    last = 0
-    for m in re.finditer(rf"\b{re.escape(alias)}\.", masked):
-        out.append(cond[last : m.start()])
-        last = m.end()
-    if not out:
-        return cond
-    out.append(cond[last:])
+# -- Spark's parser as the front end ------------------------------------------
+# Executors take TEXT sliced from the statement at the parsed nodes'
+# origin() character spans: conditions, SET values and query bodies
+# reach the same DeltaTable / append_rows / spark.sql calls a Python
+# caller would make.
+
+
+def _parse(spark: SparkSession, stmt: str):
+    """Spark's unresolved logical plan for ``stmt`` (a py4j handle);
+    raises pyspark's ``ParseException`` on a syntax error."""
+    return spark._jsparkSession.sessionState().sqlParser().parsePlan(stmt)
+
+
+def _seq(s) -> list:
+    """Scala ``Seq`` handle -> list of element handles."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _opt(o):
+    """Scala ``Option`` handle -> value or None."""
+    return o.get() if o.isDefined() else None
+
+
+def _span(node) -> tuple[int, int] | None:
+    """Half-open ``[start, stop)`` character span of a parsed node in
+    the statement it was parsed from (None when it has no origin)."""
+    o = node.origin()
+    start, stop = _opt(o.startIndex()), _opt(o.stopIndex())
+    return None if start is None or stop is None else (start, stop + 1)
+
+
+def _splice(stmt: str, cuts) -> str:
+    """Apply non-overlapping ``(start, stop, replacement)`` cuts."""
+    out, last = [], 0
+    for start, stop, rep in sorted(cuts):
+        out += [stmt[last:start], rep]
+        last = stop
+    out.append(stmt[last:])
     return "".join(out)
+
+
+def _quote(part: str) -> str:
+    return "`" + part.replace("`", "``") + "`"
+
+
+def _column(attr) -> str:
+    """Assignment target column: the last name part (``t.c`` -> ``c``)."""
+    return _seq(attr.nameParts())[-1]
+
+
+def _target(node) -> tuple[str, str | None]:
+    """DML target ``relation [[AS] alias]`` -> (registry name, alias)."""
+    alias = None
+    if node.nodeName() == "SubqueryAlias":
+        node, alias = node.child(), node.alias()
+    if node.nodeName() != "UnresolvedRelation":
+        raise SqlDmlError(f"DML target must be a table name, got {node.nodeName()}")
+    return ".".join(_seq(node.multipartIdentifier())), alias
+
+
+def _text(stmt: str, expr, alias: str | None = None) -> str:
+    """Statement text of a parsed expression: the min/max span over its
+    subtree, since a predicate node spans only its own clause (``IN
+    (1, 2)`` without the operand on its left). Boolean literals are
+    skipped — Spark shares one TRUE/FALSE object across parses, so its
+    span can point into an earlier statement. With ``alias``, attributes
+    it qualifies lose the qualifier (``a.col`` -> ```col```): the cuts
+    sit at parsed attribute positions, never inside a string literal."""
+    if expr.nodeName() == "Literal":
+        return expr.sql()
+    start, stop, cuts, stack = len(stmt), -1, [], [expr]
+    while stack:
+        e = stack.pop()
+        kind = e.nodeName()
+        if kind == "Literal" and e.sql() in ("true", "false"):
+            continue
+        span = _span(e)
+        if span:
+            start, stop = min(start, span[0]), max(stop, span[1])
+        if kind != "UnresolvedAttribute":
+            stack += _seq(e.children())
+            continue
+        parts = _seq(e.nameParts())
+        if alias and span and len(parts) > 1 and parts[0].lower() == alias.lower():
+            cuts.append((span[0], span[1], ".".join(_quote(p) for p in parts[1:])))
+    if stop < 0:
+        raise SqlDmlError(f"no source position for {expr.nodeName()}")
+    return _splice(stmt[start:stop], [(a - start, b - start, r) for a, b, r in cuts])
+
+
+def _extent(node) -> tuple[int, int]:
+    """Span of a whole query subtree: the top node can carry only its
+    own clause's span (``ORDER BY ... LIMIT`` wraps the query body)."""
+    start, stop = _span(node) or (float("inf"), -1)
+    for child in _seq(node.children()):
+        s, e = _extent(child)
+        start, stop = min(start, s), max(stop, e)
+    return start, stop
 
 
 # -- statement executors -----------------------------------------------------
@@ -287,238 +322,122 @@ def _resolve(spark: SparkSession, name: str, registry_dir: str | None) -> str:
 
 
 def _source_df(
-    spark: SparkSession, src: str, registry_dir: str | None
+    spark: SparkSession,
+    stmt: str,
+    node,
+    registry_dir: str | None,
+    views: list[str],
 ) -> tuple[DataFrame, str | None]:
-    """USING clause -> (DataFrame, declared alias). The source is a
+    """MERGE USING -> (DataFrame, declared alias). The source is a
     registered managed-table name, a Spark temp view / catalog table,
-    or a parenthesized subquery."""
-    src = src.strip()
-    m = re.fullmatch(
-        r"\((?P<sub>.*)\)\s*(?:AS\s+)?(?P<alias>`[^`]+`|[A-Za-z_]\w*)?\s*",
-        src,
-        re.I | re.S,
-    )
-    if m and m.group("sub"):
-        sub_views: list[str] = []
+    or a parenthesized query (run through the read path)."""
+    alias = None
+    if node.nodeName() == "SubqueryAlias":
+        node, alias = node.child(), node.alias()
+    kind = node.nodeName()
+    if kind == "UnresolvedRelation":
+        name = ".".join(_seq(node.multipartIdentifier()))
         try:
-            df = spark.sql(
-                _rewrite_reads(spark, m.group("sub"), registry_dir, sub_views)
-            )
-        finally:
-            for v in sub_views:
-                spark.catalog.dropTempView(v)
-        alias = (m.group("alias") or "").strip("`") or None
+            df = managed_table.read(spark, _resolve(spark, name, registry_dir))
+        except (txn_catalog.TableNameError, ValueError):
+            df = spark.table(name)
         return df, alias
-    name, alias = _parse_relation(src)
-    try:
-        path = _resolve(spark, name, registry_dir)
-        df = managed_table.read(spark, path)
-    except (txn_catalog.TableNameError, ValueError):
-        df = spark.table(name)
-    return df, alias
-
-
-def _merge(spark: SparkSession, body: str, registry_dir: str | None) -> None:
-    marks = _scan(body, ["USING", "ON", "WHEN"])
-    using = next((m for m in marks if m[2] == "USING"), None)
-    on = next((m for m in marks if m[2] == "ON"), None)
-    whens = [m for m in marks if m[2] == "WHEN"]
-    if not (using and on and whens) or not (using[0] < on[0] < whens[0][0]):
+    if kind in ("RelationTimeTravel", "UnresolvedTableValuedFunction"):
         raise SqlDmlError(
-            "MERGE needs: MERGE INTO <tgt> USING <src> ON <cond> WHEN ..."
+            "MERGE USING takes a table name or a parenthesized query"
         )
-    tgt_name, tgt_alias = _parse_relation(body[: using[0]])
-    src_df, src_alias = _source_df(
-        spark, body[using[1] : on[0]], registry_dir
-    )
-    condition = body[on[1] : whens[0][0]].strip()
+    start, stop = _extent(node)
+    query = _rewrite_reads(spark, stmt[start:stop], registry_dir, views)
+    return spark.sql(query), alias
 
-    dt = DeltaTable.forName(spark, tgt_name, registry_dir)
+
+# (clause group, parsed action class) -> DeltaMergeBuilder method
+_MERGE_ACTIONS = {
+    ("matchedActions", "UpdateAction"): "whenMatchedUpdate",
+    ("matchedActions", "UpdateStarAction"): "whenMatchedUpdateAll",
+    ("matchedActions", "DeleteAction"): "whenMatchedDelete",
+    ("notMatchedActions", "InsertAction"): "whenNotMatchedInsert",
+    ("notMatchedActions", "InsertStarAction"): "whenNotMatchedInsertAll",
+    ("notMatchedBySourceActions", "UpdateAction"): "whenNotMatchedBySourceUpdate",
+    ("notMatchedBySourceActions", "DeleteAction"): "whenNotMatchedBySourceDelete",
+}
+
+
+def _merge(spark, stmt, plan, registry_dir, views) -> None:
+    name, tgt_alias = _target(plan.targetTable())
+    src_df, src_alias = _source_df(
+        spark, stmt, plan.sourceTable(), registry_dir, views
+    )
+    dt = DeltaTable.forName(spark, name, registry_dir)
     if tgt_alias:
         dt = dt.alias(tgt_alias)
     if src_alias:
         src_df = src_df.alias(src_alias)
-    mb = dt.merge(src_df, condition)
-
-    for i, w in enumerate(whens):
-        end = whens[i + 1][0] if i + 1 < len(whens) else len(body)
-        clause = body[w[1] : end].strip().rstrip(";").strip()
-        _apply_when(mb, clause)
+    mb = dt.merge(src_df, _text(stmt, plan.mergeCondition()))
+    if plan.withSchemaEvolution():
+        mb.withSchemaEvolution()
+    for group in ("matchedActions", "notMatchedActions", "notMatchedBySourceActions"):
+        for action in _seq(getattr(plan, group)()):
+            kind = action.nodeName()
+            method = _MERGE_ACTIONS.get((group, kind))
+            if method is None:
+                raise SqlDmlError(f"unsupported MERGE action {kind} in {group}")
+            cond = _opt(action.condition())
+            args = [None if cond is None else _text(stmt, cond)]
+            if kind in ("UpdateAction", "InsertAction"):
+                args.append({
+                    _column(a.key()): _text(stmt, a.value())
+                    for a in _seq(action.assignments())
+                })
+            getattr(mb, method)(*args)
     mb.execute()
 
 
-_WHEN_KIND = re.compile(
-    r"^(?P<kind>MATCHED|NOT\s+MATCHED(?:\s+BY\s+(?:TARGET|SOURCE))?)\b",
-    re.I,
-)
-
-
-def _apply_when(mb, clause: str) -> None:
-    km = _WHEN_KIND.match(clause)
-    if not km:
-        raise SqlDmlError(f"cannot parse WHEN clause: WHEN {clause!r}")
-    kind = re.sub(r"\s+", " ", km.group("kind")).upper()
-    rest = clause[km.end() :]
-    # the THEN that ends the clause predicate is the first TOP-LEVEL
-    # one — _scan is CASE-aware, so a `CASE ... THEN ... END` inside
-    # the AND-condition never truncates the split (review r12; the old
-    # lazy `(?P<cond>.*?)\s+THEN` regex stopped at CASE's THEN)
-    thens = _scan(rest, ["THEN"])
-    if not thens:
-        raise SqlDmlError(f"cannot parse WHEN clause: WHEN {clause!r}")
-    t0, t1, _ = thens[0]
-    head = rest[:t0].strip()
-    action = rest[t1:].strip()
-    if head:
-        am = re.match(r"AND\b(?P<cond>.*)$", head, re.I | re.S)
-        if not am:
-            raise SqlDmlError(f"cannot parse WHEN clause: WHEN {clause!r}")
-        cond = am.group("cond").strip() or None
-    else:
-        cond = None
-    au = action.upper()
-
-    if kind == "MATCHED":
-        if au.startswith("DELETE"):
-            mb.whenMatchedDelete(condition=cond)
-        elif re.match(r"UPDATE\s+SET\s+\*\s*$", action, re.I):
-            mb.whenMatchedUpdateAll(condition=cond)
-        elif au.startswith("UPDATE"):
-            setpart = re.sub(r"^UPDATE\s+SET\s+", "", action, flags=re.I)
-            mb.whenMatchedUpdate(condition=cond, set=_parse_assignments(setpart))
-        else:
-            raise SqlDmlError(f"WHEN MATCHED supports UPDATE/DELETE, got: {action!r}")
-    elif kind in ("NOT MATCHED", "NOT MATCHED BY TARGET"):
-        if re.match(r"INSERT\s+\*\s*$", action, re.I):
-            mb.whenNotMatchedInsertAll(condition=cond)
-        elif au.startswith("INSERT"):
-            im = re.match(
-                r"INSERT\s*\((?P<cols>[^)]*)\)\s*VALUES\s*\((?P<vals>.*)\)\s*$",
-                action,
-                re.I | re.S,
-            )
-            if not im:
-                raise SqlDmlError(
-                    f"WHEN NOT MATCHED INSERT needs `INSERT *` or "
-                    f"`INSERT (cols) VALUES (exprs)`, got: {action!r}"
-                )
-            cols = [c.strip().strip("`") for c in _split_top(im.group("cols"))]
-            vals = _split_top(im.group("vals"))
-            if len(cols) != len(vals):
-                raise SqlDmlError("INSERT column/value count mismatch")
-            mb.whenNotMatchedInsert(
-                condition=cond, values=dict(zip(cols, vals))
-            )
-        else:
-            raise SqlDmlError(f"WHEN NOT MATCHED supports INSERT, got: {action!r}")
-    else:  # NOT MATCHED BY SOURCE
-        if au.startswith("DELETE"):
-            mb.whenNotMatchedBySourceDelete(condition=cond)
-        elif au.startswith("UPDATE"):
-            setpart = re.sub(r"^UPDATE\s+SET\s+", "", action, flags=re.I)
-            mb.whenNotMatchedBySourceUpdate(
-                condition=cond, set=_parse_assignments(setpart)
-            )
-        else:
-            raise SqlDmlError(
-                f"WHEN NOT MATCHED BY SOURCE supports UPDATE/DELETE, got: {action!r}"
-            )
-
-
-def _update(spark: SparkSession, body: str, registry_dir: str | None) -> None:
-    marks = _scan(body, ["SET", "WHERE"])
-    set_m = next((m for m in marks if m[2] == "SET"), None)
-    where_m = next((m for m in marks if m[2] == "WHERE"), None)
-    if not set_m:
-        raise SqlDmlError("UPDATE needs: UPDATE <tgt> SET c = e [WHERE cond]")
-    name, alias = _parse_relation(body[: set_m[0]])
-    set_end = where_m[0] if where_m else len(body)
-    assigns = _parse_assignments(
-        _strip_alias(body[set_m[1] : set_end].strip().rstrip(";"), alias)
+def _update(spark, stmt, plan, registry_dir, views) -> None:
+    name, alias = _target(plan.table())
+    cond = _opt(plan.condition())
+    DeltaTable.forName(spark, name, registry_dir).update(
+        condition=None if cond is None else _text(stmt, cond, alias),
+        set={
+            _column(a.key()): _text(stmt, a.value(), alias)
+            for a in _seq(plan.assignments())
+        },
     )
-    cond = (
-        _strip_alias(body[where_m[1] :].strip().rstrip(";"), alias)
-        if where_m
-        else None
-    )
-    dt = DeltaTable.forName(spark, name, registry_dir)
-    dt.update(condition=cond, set=assigns)
 
 
-def _delete(spark: SparkSession, body: str, registry_dir: str | None) -> None:
-    marks = _scan(body, ["WHERE"])
-    where_m = marks[0] if marks else None
-    name, alias = _parse_relation(body[: where_m[0]] if where_m else body)
-    cond = (
-        _strip_alias(body[where_m[1] :].strip().rstrip(";"), alias)
-        if where_m
-        else None
+def _delete(spark, stmt, plan, registry_dir, views) -> None:
+    name, alias = _target(plan.table())
+    # no WHERE parses as the literal TRUE, which deletes every row too
+    DeltaTable.forName(spark, name, registry_dir).delete(
+        condition=_text(stmt, plan.condition(), alias)
     )
-    DeltaTable.forName(spark, name, registry_dir).delete(condition=cond)
 
 
-def _insert(
-    spark: SparkSession,
-    body: str,
-    registry_dir: str | None,
-    overwrite: bool,
-) -> None:
-    m = re.match(
-        rf"\s*({_IDENT})\s*(?:\((?P<cols>[^)]*)\))?\s*(?P<rest>.*)$",
-        body,
-        re.S,
-    )
-    if not m or not m.group("rest").strip():
-        raise SqlDmlError(
-            "INSERT needs: INSERT INTO <tgt> [(cols)] VALUES ... | SELECT ..."
-        )
-    name = m.group(1).replace("`", "")
-    declared = (
-        [c.strip().strip("`") for c in _split_top(m.group("cols"))]
-        if m.group("cols")
-        else None
-    )
-    rest = m.group("rest").strip().rstrip(";").strip()
+def _insert(spark, stmt, plan, registry_dir, views) -> None:
+    if plan.byName() or plan.ifPartitionNotExists() or not plan.partitionSpec().isEmpty():
+        raise SqlDmlError("INSERT with PARTITION / IF NOT EXISTS / BY NAME is unsupported")
+    name, _alias = _target(plan.table())
+    declared = _seq(plan.userSpecifiedCols()) or None
     path = _resolve(spark, name, registry_dir)
     table_schema = managed_table.read(spark, path).schema
 
-    if re.match(r"VALUES\b", rest, re.I):
-        rows_sql = rest[len("VALUES") :].strip()
-        cols = declared or [f.name for f in table_schema.fields]
-        named = ", ".join(f"`{c}`" for c in cols)
-        df = spark.sql(f"SELECT * FROM (VALUES {rows_sql}) AS __v({named})")
-    elif re.match(r"SELECT\b|WITH\b|\(", rest, re.I):
-        # single-layer paren unwrap via the balanced matcher —
-        # str.strip("()") eats EVERY edge paren and turns
-        # `(SELECT id FROM range(10))` into unbalanced SQL (review r12)
-        if rest.startswith("(") and _balanced(rest, 0) == len(rest):
-            rest = rest[1:-1].strip()
-        ins_views: list[str] = []
-        try:
-            df = spark.sql(_rewrite_reads(
-                spark,
-                rest,
-                registry_dir,
-                ins_views,
-            ))
-        finally:
-            for v in ins_views:
-                spark.catalog.dropTempView(v)
-        cols = declared or [f.name for f in table_schema.fields]
-        if len(df.columns) != len(cols):
-            raise SqlDmlError(
-                f"INSERT SELECT produces {len(df.columns)} columns, "
-                f"target list has {len(cols)}"
-            )
-        df = df.toDF(*cols)  # SQL INSERT maps by POSITION
-    else:
-        raise SqlDmlError(f"INSERT source must be VALUES or SELECT, got: {rest!r}")
+    # everything after the parsed `INSERT INTO <tgt> [(cols)]` head is
+    # the query — VALUES and SELECT alike — and SQL INSERT maps its
+    # columns by POSITION
+    query = stmt[_span(plan)[1] :]
+    df = spark.sql(_rewrite_reads(spark, query, registry_dir, views))
+    cols = declared or [f.name for f in table_schema.fields]
+    if len(df.columns) != len(cols):
+        raise SqlDmlError(
+            f"INSERT query produces {len(df.columns)} columns, "
+            f"target list has {len(cols)}"
+        )
+    df = df.toDF(*cols)
 
     # fill omitted columns with typed NULLs (ANSI INSERT with a column
     # list), and cast the provided ones to the table's exact types so
     # VALUES literals (e.g. INT for a BIGINT column) land enforceable
     by_name = {f.name: f for f in table_schema.fields}
-    missing = [f.name for f in table_schema.fields if f.name not in df.columns]
     unknown = [c for c in df.columns if c not in by_name]
     if unknown:
         raise SqlDmlError(f"INSERT names unknown column(s) {unknown} for {name}")
@@ -529,7 +448,7 @@ def _insert(
     ]
     df = df.select(*sel)
 
-    if overwrite:
+    if plan.overwrite():
         marker = managed_table._read_marker(path)
         managed_table.commit_overwrite(
             df,
@@ -720,13 +639,7 @@ def _ctas(
             bind()
             return
         raise SqlDmlError(f"{path} is already a managed table")
-    ctas_views: list[str] = []
-    try:
-        df = spark.sql(_rewrite_reads(spark, tail[as_m[1]:].strip(),
-                                      registry_dir, ctas_views))
-    finally:
-        for v in ctas_views:
-            spark.catalog.dropTempView(v)
+    df = _read_df(spark, tail[as_m[1]:].strip(), registry_dir)
     props = dict(opts["props"])
     if opts["comment"] is not None:
         props["comment"] = opts["comment"]
@@ -815,8 +728,6 @@ def _balanced(s: str, open_idx: int) -> int:
 
 
 def _create_table(spark: SparkSession, stmt: str, registry_dir: str | None):
-    from .delta_api import DeltaTable
-
     m = _CREATE_HEAD_RE.match(stmt)
     close = _balanced(stmt, m.end() - 1) if m else -1
     if not m or close < 0:
@@ -962,8 +873,6 @@ def _alter_table(spark: SparkSession, body: str, registry_dir: str | None):
 
 
 def _optimize(spark: SparkSession, body: str, registry_dir: str | None):
-    from .delta_api import DeltaTable
-
     marks = _scan(body, ["WHERE", "ZORDER BY"])
     where_m = next((x for x in marks if x[2] == "WHERE"), None)
     z_m = next((x for x in marks if x[2] == "ZORDER BY"), None)
@@ -994,8 +903,6 @@ def sql_command(
         return _alter_table(spark, stmt[m.end() :], registry_dir)
     m = re.match(r"DESCRIBE\s+(HISTORY|DETAIL)\b", stmt, re.I)
     if m:
-        from .delta_api import DeltaTable
-
         name, _a = _parse_relation(stmt[m.end() :].rstrip(";").strip())
         dt = DeltaTable.forName(spark, name, registry_dir)
         return dt.history() if m.group(1).upper() == "HISTORY" else dt.detail()
@@ -1004,8 +911,6 @@ def sql_command(
         return _optimize(spark, stmt[m.end() :], registry_dir)
     m = re.match(r"VACUUM\b", stmt, re.I)
     if m:
-        from .delta_api import DeltaTable
-
         body = stmt[m.end() :].rstrip(";").strip()
         vm = re.match(
             rf"({_IDENT})(?:\s+RETAIN\s+(\d+(?:\.\d+)?)\s+HOURS)?"
@@ -1117,8 +1022,6 @@ def sql_command(
         )
     m = re.match(rf"TRUNCATE\s+TABLE\s+({_IDENT})\s*;?\s*$", stmt, re.I)
     if m:
-        from .delta_api import DeltaTable
-
         DeltaTable.forName(
             spark, m.group(1).replace("`", ""), registry_dir
         ).delete(None)
@@ -1153,12 +1056,7 @@ def sql_command(
         # eager validation (Delta/metastore behavior): the SELECT must
         # analyze NOW against the live registry — a typo'd column or
         # unknown table fails the CREATE, not every later read
-        probe_views: list[str] = []
-        try:
-            spark.sql(_rewrite_reads(spark, body, registry_dir, probe_views))
-        finally:
-            for v in probe_views:
-                spark.catalog.dropTempView(v)
+        _read_df(spark, body, registry_dir)
         txn_catalog.register_view_name(
             _registry_dir(spark, registry_dir),
             name,
@@ -1241,10 +1139,8 @@ def sql_command(
             )
         props = marker.get("properties") or {}
         if props:
-            import json as _json
-
             kv = ", ".join(
-                f"'{k}' = '{v if isinstance(v, str) else _json.dumps(v)}'"
+                f"'{k}' = '{v if isinstance(v, str) else json.dumps(v)}'"
                 for k, v in sorted(props.items())
             )
             lines.append(f"TBLPROPERTIES ({kv})")
@@ -1261,10 +1157,8 @@ def sql_command(
         props = (managed_table._read_marker(path) or {}).get(
             "properties"
         ) or {}
-        import json as _json
-
         rows = [
-            (k, v if isinstance(v, str) else _json.dumps(v))
+            (k, v if isinstance(v, str) else json.dumps(v))
             for k, v in sorted(props.items())
         ]
         return spark.createDataFrame(rows or [], "key string, value string")
@@ -1329,45 +1223,26 @@ _COMMAND_RE = re.compile(
 )
 
 
-# -- passthrough reads: quote-aware reference rewriting ----------------------
-#
-# Passthrough SELECTs resolve four reference shapes against the name
-# registry, each spliced out as a per-statement temp view (dropped by
-# sql() after spark.sql's EAGER analysis inlines them into the plan):
-#   FROM t VERSION|TIMESTAMP AS OF pin      -> read(version=)/read_as_of
-#   FROM t$files|$partitions|$snapshots     -> metadata_tables
-#   FROM table_changes('t', from[, to])     -> CDF feed (Delta's TVF)
-#   FROM t                                  -> live snapshot (bare name,
-#                                              the Athena idiom) via
-#                                              managed_table.read — DV
-#                                              anti-join, row tracking,
-#                                              column mapping all honored
-# All matching runs on a LITERAL-MASKED copy of the statement so text
-# inside '...'/"..." strings can never be rewritten; group text is
-# pulled from the ORIGINAL by span (a TVF's name arg IS a literal).
+# -- passthrough reads: registry references from the parsed plan -------------
+# (the four shapes are listed in the module docstring) Each reference is
+# spliced out as a per-statement temp view, dropped by sql() after
+# spark.sql's EAGER analysis inlines it into the plan.
 
 
 def _parse_ts_utc(text: str) -> float:
-    """ISO-8601 timestamp literal -> unix seconds, interpreting a
-    NAIVE timestamp as UTC — the engine pins the session timezone to
-    UTC (CLAUDE.md trap 11), so SQL timestamp literals must mean the
-    same instant on every driver host. ``fromisoformat().timestamp()``
-    alone would read a naive stamp in the HOST's local zone (and pick
-    a DST fold arbitrarily), mapping the same statement to different
-    versions depending on where the driver runs. Explicit offsets are
-    honored as written. Unparseable text raises :class:`SqlDmlError`
-    (the module's error contract), never a bare ValueError."""
-    import datetime as _dt
-
+    """ISO-8601 timestamp literal -> unix seconds; a NAIVE stamp is
+    UTC (the engine pins the session timezone to UTC), never the
+    host's local zone; explicit offsets are honored. Unparseable
+    text raises :class:`SqlDmlError`."""
     try:
-        dt = _dt.datetime.fromisoformat(text)
+        dt = datetime.datetime.fromisoformat(text)
     except ValueError:
         raise SqlDmlError(
             f"cannot parse timestamp literal {text!r} — use ISO-8601 "
             "(e.g. '2026-08-16T12:00:00', naive = UTC)"
         ) from None
     if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=_dt.timezone.utc)
+        dt = dt.replace(tzinfo=datetime.timezone.utc)
     return dt.timestamp()
 
 
@@ -1396,128 +1271,12 @@ def _mask_literals(s: str) -> str:
     return "".join(out)
 
 
-def _sub_refs(pattern: re.Pattern, stmt: str, repl) -> str:
-    """Regex substitution that never fires inside string literals:
-    iterate matches over the masked text, splice replacements into the
-    original. ``repl(match, stmt, masked)`` returns the replacement
-    string or None to leave that segment untouched; it must take group
-    TEXT from ``stmt`` by span, not from the (masked) match object
-    (``masked`` is for position-based lookahead, e.g. alias
-    detection)."""
-    masked = _mask_literals(stmt)
-    out: list[str] = []
-    last = 0
-    for m in pattern.finditer(masked):
-        rep = repl(m, stmt, masked)
-        if rep is None:
-            continue
-        out.append(stmt[last : m.start()])
-        out.append(rep)
-        last = m.end()
-    if not out:
-        return stmt
-    out.append(stmt[last:])
-    return "".join(out)
-
-
 def _ref_view(df: DataFrame, prefix: str, views: list[str] | None) -> str:
-    import uuid as _uuid
-
-    view = f"{prefix}_{_uuid.uuid4().hex[:10]}"
+    view = f"{prefix}_{uuid.uuid4().hex[:10]}"
     df.createOrReplaceTempView(view)
     if views is not None:
         views.append(view)
     return view
-
-
-def _last_segment(spelling: str) -> str:
-    """Last dot-separated segment of an identifier AS WRITTEN — dots
-    inside backticks don't split (`` `pdb.tbl` `` is ONE segment)."""
-    segs: list[str] = []
-    cur: list[str] = []
-    inq = False
-    for c in spelling:
-        if c == "`":
-            inq = not inq
-            continue
-        if c == "." and not inq:
-            segs.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    segs.append("".join(cur))
-    return segs[-1]
-
-
-def _alias_clause(masked: str, pos: int, spelling: str) -> str:
-    """`` AS `seg` `` when the relation reference ending at ``pos``
-    carries no explicit alias. Splicing a temp view in place of a name
-    otherwise LOSES the name as a column qualifier: Spark keeps a
-    relation's name as its implicit alias, so ``SELECT solo.id FROM
-    solo`` must keep resolving after ``solo`` becomes ``__bn_...``
-    (round-13 fuzz find: a TVF CTE joined back to a bare registry name
-    broke on the ON clause's qualified columns). A reference that
-    carries its own alias keeps it — in real SQL the alias then
-    REPLACES the name as the only valid qualifier, so adding one would
-    be wrong there. Qualification by the FULL multi-part name
-    (``pdb.tbl.id``) is not preserved — only the last segment, which is
-    the common form."""
-    am = _ALIAS_CONT_RE.match(masked, pos)
-    if am:
-        nxt = am.group("a").replace("`", "").lower()
-        if nxt not in _NOT_ALIAS:
-            return ""  # explicit alias present — it owns qualification
-        if nxt == "tablesample":
-            # Spark grammar: sample BEFORE alias (`t TABLESAMPLE(...)
-            # x` parses, `t AS x TABLESAMPLE(...)` does not) — inserting
-            # here would be a syntax error, so the qualifier is dropped
-            # (probe-verified; PIVOT/UNPIVOT accept a preceding alias)
-            return ""
-    seg = _last_segment(spelling).replace("`", "``")
-    return f" AS `{seg}`"
-
-
-_TT_RE = re.compile(
-    rf"\b(?P<kw>FROM|JOIN)\s+(?P<name>{_IDENT})\s+"
-    r"(?P<kind>VERSION|TIMESTAMP)\s+AS\s+OF\s+"
-    r"(?P<pin>\d+|'[^']*')",
-    re.I,
-)
-
-
-def _rewrite_time_travel(
-    spark: SparkSession,
-    stmt: str,
-    registry_dir: str | None,
-    views: list[str] | None = None,
-) -> str:
-    """Delta's time-travel read syntax over registry names:
-    ``SELECT ... FROM t VERSION AS OF 3`` / ``TIMESTAMP AS OF '...'``.
-    Names that do not resolve in the registry are left untouched
-    (Spark's own catalog may know them)."""
-
-    def _sub(m: re.Match, orig: str, masked: str) -> str | None:
-        name = orig[m.start("name") : m.end("name")].replace("`", "")
-        try:
-            path = _resolve(spark, name, registry_dir)
-        except Exception:
-            return None
-        pin = orig[m.start("pin") : m.end("pin")]
-        if m.group("kind").upper() == "VERSION":
-            df = managed_table.read(spark, path, version=int(pin))
-        else:
-            df = managed_table.read_as_of(
-                spark, path, _parse_ts_utc(pin.strip("'"))
-            )
-        # Delta keeps the table name as the pinned relation's implicit
-        # alias (`SELECT t.id FROM t VERSION AS OF 0` resolves) — so
-        # must the splice, unless the reference carries its own alias
-        tail = _alias_clause(
-            masked, m.end(), orig[m.start("name") : m.end("name")]
-        )
-        return f"{m.group('kw')} {_ref_view(df, '__tt', views)}{tail}"
-
-    return _sub_refs(_TT_RE, stmt, _sub)
 
 
 _MD_RE = re.compile(
@@ -1541,359 +1300,180 @@ def _rewrite_metadata_tables(
     Unresolvable names are left untouched."""
     from .metadata_tables import METADATA_KINDS
 
-    def _sub(m: re.Match, orig: str, masked: str) -> str | None:
-        name = orig[m.start("name") : m.end("name")].replace("`", "")
+    cuts = []
+    for m in _MD_RE.finditer(_mask_literals(stmt)):
+        name = stmt[m.start("name") : m.end("name")].replace("`", "")
         try:
             path = _resolve(spark, name, registry_dir)
-        except Exception:
-            return None
+        except (txn_catalog.TableNameError, ValueError):
+            continue
         df = METADATA_KINDS[m.group("kind").lower()](spark, path)
-        return f"{m.group('kw')} {_ref_view(df, '__md', views)}"
-
-    return _sub_refs(_MD_RE, stmt, _sub)
-
-
-_TVF_RE = re.compile(
-    r"\b(?P<kw>FROM|JOIN)\s+table_changes\s*\(\s*"
-    r"(?P<name>'[^']*')\s*,\s*(?P<frm>'[^']*'|\d+)\s*"
-    r"(?:,\s*(?P<to>'[^']*'|\d+)\s*)?\)",
-    re.I,
-)
+        view = _ref_view(df, "__md", views)
+        cuts.append((m.start(), m.end(), f"{m.group('kw')} {view}"))
+    return _splice(stmt, cuts)
 
 
-def _rewrite_table_changes_tvf(
+def _table_changes_view(
     spark: SparkSession,
-    stmt: str,
+    args: list,
     registry_dir: str | None,
-    views: list[str] | None = None,
+    views: list[str] | None,
 ) -> str:
-    """Delta's CDF table-valued function in passthrough SQL:
-    ``SELECT ... FROM table_changes('name', from[, to])`` becomes the
-    engine's :func:`managed_table.table_changes` feed (O(changes)
-    sidecar read; ``_change_type`` / ``_commit_version`` /
-    ``_commit_timestamp`` columns included). Bounds are VERSION
-    numbers or quoted TIMESTAMP strings (Delta accepts both), and both
-    bounds are INCLUSIVE exactly as in Delta — ``table_changes('t',
-    1)`` includes version 1's changes (review r12: the engine feed is
-    exclusive-from, so this layer shifts the start down one; a start
-    of 0 serves the CDF-enabled creation snapshot as inserts, the same
-    answer Delta reconstructs from the creation commit's add files). A
-    start timestamp maps to the first commit AT-OR-AFTER it (Delta's
-    ``startingTimestamp``), an end timestamp to the last commit
-    at-or-before — both on the marker commit-ts ladder ``read_as_of``
-    uses. Timestamps outside retained history raise with the retention
-    pointer. An unresolvable name raises — table_changes() over an
-    unknown table is always an error, never something Spark's catalog
-    can serve."""
+    """Temp view over Delta's CDF table-valued function,
+    ``table_changes('name', from[, to])`` (``args``: the call's parsed
+    literals): the engine's O(changes) :func:`managed_table.table_changes`
+    feed with ``_change_type`` / ``_commit_version`` /
+    ``_commit_timestamp``. Bounds are versions or quoted timestamps, both
+    INCLUSIVE as in Delta; start 0 serves the CDF-enabled creation
+    snapshot as inserts. A start timestamp maps to the first commit
+    at-or-after it (Delta's ``startingTimestamp``), an end timestamp to
+    the last commit at-or-before, on the marker commit-ts ladder
+    ``read_as_of`` uses; stamps outside retained history raise. An
+    unknown name raises — Spark's catalog cannot serve this TVF."""
+    if not 2 <= len(args) <= 3 or any(a.nodeName() != "Literal" for a in args):
+        raise SqlDmlError(
+            "table_changes() takes ('name', from[, to]) literal arguments"
+        )
+    name, *pins = [a.value() for a in args]
+    name = str(name)
+    path = _resolve(spark, name, registry_dir)
 
-    def _sub(m: re.Match, orig: str, masked: str) -> str | None:
-        name = orig[m.start("name") + 1 : m.end("name") - 1]
-        path = _resolve(spark, name, registry_dir)
-
-        def bound(g: str, *, start: bool) -> int | None:
-            """Delta-semantics bound -> version number. Both bounds are
-            INCLUSIVE in Delta; the engine feed is exclusive-from, so
-            the caller passes start-1. A start TIMESTAMP maps to the
-            first commit AT-OR-AFTER it (Delta's startingTimestamp),
-            an end timestamp to the last commit at-or-before."""
-            if m.start(g) < 0:
-                return None
-            t = orig[m.start(g) : m.end(g)]
-            if t.startswith("'"):
-                ts = _parse_ts_utc(t.strip("'"))  # raises SqlDmlError
-                try:
-                    if start:
-                        return managed_table.version_at_or_after(path, ts)
-                    return managed_table.version_as_of(path, ts)
-                except ValueError as e:
-                    raise SqlDmlError(
-                        f"table_changes(): timestamp bound {t} is "
-                        f"outside {name!r}'s retained history ({e}); "
-                        "DESCRIBE HISTORY lists the retained versions"
-                    ) from None
-            return int(t)
-
-        frm = bound("frm", start=True)
-        to = bound("to", start=False)
-        if to is not None and frm > to:
-            raise SqlDmlError(
-                f"table_changes(): empty range [{frm}, {to}] — the "
-                "start bound is after the end bound"
-            )
-        # Delta's start bound is INCLUSIVE of that version's changes;
-        # the engine feed is (from, to], so shift the start down one
-        # (version 0 is served from the retained creation snapshot)
-        df = managed_table.table_changes(spark, path, frm - 1, to)
-        return f"{m.group('kw')} {_ref_view(df, '__tc', views)}"
-
-    return _sub_refs(_TVF_RE, stmt, _sub)
-
-
-# NB the (?![\w$.`]) guard: without it the negative function-call
-# lookahead invites BACKTRACKING — for `FROM range(10)` the IDENT
-# shrinks to 'rang' so that `(?!\s*\()` passes on the final 'e'
-_BARE_RE = re.compile(
-    rf"\b(?P<kw>FROM|JOIN)\s+(?P<name>{_IDENT})(?![\w$.`])(?!\s*\()",
-    re.I,
-)
-
-# a CTE definition: `name AS (` — nothing else in a read statement has
-# an identifier directly followed by AS-open-paren (select-list aliases
-# are `expr AS name`, table aliases come AFTER the relation). NB the
-# lookbehind, not \b: \b never fires before a BACKTICKED name (space ->
-# backtick is no word boundary), so `WITH `x` AS (...)` would go
-# unexcluded and a same-named registry table would wrongly shadow the
-# CTE (round-13 fuzz find)
-_CTE_DEF_RE = re.compile(rf"(?<![\w$.`])(?P<cte>{_IDENT})\s+AS\s*\(", re.I)
-
-# keywords that legitimately precede a '(' that opens a SUBQUERY (or
-# grouping) rather than a function call — used to classify parens so a
-# scalar FROM inside EXTRACT(year FROM d) / TRIM(x FROM s) /
-# SUBSTRING(s FROM 2) is never mistaken for a relation reference, while
-# `WHERE k IN (SELECT k FROM t)` still rewrites t
-_SUBQ_KEYWORDS = frozenset(
-    "in exists as on and or not where then else when select from join "
-    "union intersect except minus all any some values by having like "
-    "between over using distinct case end lateral limit offset".split()
-)
-
-
-def _func_paren_flags(masked: str) -> list[bool]:
-    """Per-position flag: is this index inside a paren whose innermost
-    unclosed '(' was opened as a FUNCTION CALL (preceded by a non-keyword
-    identifier)? Positions at top level or inside subquery parens are
-    False. Runs on the literal-masked text."""
-    flags = [False] * len(masked)
-    stack: list[bool] = []
-    for i, c in enumerate(masked):
-        if c == "(":
-            j = i - 1
-            while j >= 0 and masked[j].isspace():
-                j -= 1
-            is_func = False
-            if j >= 0 and (masked[j].isalnum() or masked[j] in "_`$"):
-                k = j
-                while k >= 0 and (masked[k].isalnum() or masked[k] in "_`$."):
-                    k -= 1
-                word = masked[k + 1 : j + 1].lower().strip("`")
-                is_func = word not in _SUBQ_KEYWORDS
-            stack.append(is_func)
-        elif c == ")" and stack:
-            stack.pop()
-        if stack:
-            flags[i] = stack[-1]
-    return flags
-
-
-# comma-separated relation lists after FROM (`FROM t1, t2` — legal in
-# the Athena idiom) and the optional alias each relation may carry
-_COMMA_CONT_RE = re.compile(
-    rf"\s*,\s*(?P<name>{_IDENT})(?![\w$.`])(?!\s*\()", re.I
-)
-# a comma-list member that is a parenthesized subquery or a table
-# function (`range(10)`) — skipped over so LATER registry names in the
-# same list still resolve
-_COMMA_PAREN_RE = re.compile(rf"\s*,\s*(?:{_IDENT}\s*)?\(", re.I)
-# a FROM whose FIRST member is a parenthesized subquery or table
-# function — `FROM (SELECT ...) s, reg` / `FROM range(10) r, reg`;
-# the bare regex never fires there, so this anchors the list scan
-_FROM_PAREN_RE = re.compile(rf"\bFROM\s*(?:{_IDENT}\s*)?\(", re.I)
-_ALIAS_CONT_RE = re.compile(rf"\s+(?:AS\s+)?(?P<a>{_IDENT})", re.I)
-# tokens that may directly follow a relation and must never be read as
-# its alias (they terminate the FROM item list)
-_NOT_ALIAS = frozenset(
-    "where group order having limit union intersect except join inner "
-    "left right full cross natural on using when then else end window "
-    "qualify lateral version timestamp offset semi anti values select "
-    "from distribute cluster sort tablesample pivot unpivot".split()
-)
-
-
-def _rewrite_bare_names(
-    spark: SparkSession,
-    stmt: str,
-    registry_dir: str | None,
-    views: list[str] | None = None,
-    seen: frozenset[str] = frozenset(),
-) -> str:
-    """Bare registry names in passthrough reads — the reference's
-    Athena idiom (``/root/reference/sql/athena_queries.sql``: every
-    query speaks ``SELECT ... FROM callcenter_analytics.<table>``,
-    no pins): each resolvable ``FROM``/``JOIN`` reference becomes a
-    temp view over the LIVE snapshot via :func:`managed_table.read`,
-    so deletion vectors, row tracking, column mapping and empty-table
-    schema are honored — unlike :func:`delta_api.register_sql_view`'s
-    raw parquet views, which refuse reader-feature tables. Runs LAST
-    in the rewrite chain (after time-travel pins, ``$``-metadata and
-    ``table_changes()`` are already spliced out); names the registry
-    does not know are left for Spark's own catalog (temp views,
-    catalog tables, ``parquet.`path``` refs). A registry name SHADOWS
-    a same-named temp view here — the registry is the metastore.
-    Registry LOGICAL VIEWS (``CREATE VIEW name AS ...``, stored SQL in
-    :mod:`sources.txn_catalog`) resolve by recursively rewriting their
-    stored SELECT — views over views work; cycles raise (``seen``
-    carries the in-progress chain). CTE names defined in the statement
-    are EXCLUDED — SQL scoping puts a ``WITH t AS (...)`` definition
-    ahead of any catalog object, so a same-named registry table must
-    not shadow it; the exclusion is DEPTH-SCOPED (review r12): a WITH
-    defined inside a subquery excludes only references at that paren
-    depth or deeper, so an outer ``FROM name`` still resolves when an
-    inner subquery happens to define a same-named CTE. Two parser
-    refinements (advice r11): a ``FROM``
-    inside a function call's parens is SQL scalar syntax
-    (``EXTRACT(year FROM d)``, ``TRIM(x FROM s)``, ``SUBSTRING(s FROM
-    2)``) and is never a relation reference; and comma-separated
-    relation lists (``FROM t1, t2`` — legal in the Athena idiom)
-    resolve every list member, not just the first."""
-    masked = _mask_literals(stmt)
-    in_func = _func_paren_flags(masked)
-    # paren depth per position (masked text, so parens in literals
-    # don't count) — used to scope CTE-name exclusion
-    depth_at: list[int] = []
-    _d = 0
-    for _c in masked:
-        if _c == "(":
-            depth_at.append(_d)
-            _d += 1
-        elif _c == ")":
-            _d = max(0, _d - 1)
-            depth_at.append(_d)
-        else:
-            depth_at.append(_d)
-    cte_names: dict[str, int] = {}  # name -> shallowest definition depth
-    for cm_ in _CTE_DEF_RE.finditer(masked):
-        # name from the ORIGINAL by span, never from masked: backticks
-        # are mask-quotes, so a backtick-quoted CTE name reads as NULs
-        # in masked text and the exclusion would silently miss it
-        # (round-13 fuzz find — the r11 span-extraction trap, here too)
-        nm_ = stmt[cm_.start("cte") : cm_.end("cte")].replace("`", "").lower()
-        d_ = depth_at[cm_.start("cte")]
-        cte_names[nm_] = min(cte_names.get(nm_, d_), d_)
-
-    def _resolve_ref(name: str, ref_pos: int) -> str | None:
-        """Registry name -> spliced temp-view identifier, or None to
-        leave the reference for Spark's own catalog (or to a CTE whose
-        definition scopes over this reference's depth)."""
-        key0 = name.lower()
-        if key0 in cte_names and depth_at[ref_pos] >= cte_names[key0]:
+    def bound(pin, *, start: bool) -> int | None:
+        if pin is None:
             return None
+        if isinstance(pin, int):
+            return pin
+        ts = _parse_ts_utc(str(pin))  # raises SqlDmlError
         try:
-            entry = txn_catalog.resolve_entry(
-                _registry_dir(spark, registry_dir), name
-            )
-        except Exception:
-            return None
-        if "view_sql" in entry:
-            key = name.strip().lower()
+            if start:
+                return managed_table.version_at_or_after(path, ts)
+            return managed_table.version_as_of(path, ts)
+        except ValueError as e:
+            raise SqlDmlError(
+                f"table_changes(): timestamp bound '{pin}' is "
+                f"outside {name!r}'s retained history ({e}); "
+                "DESCRIBE HISTORY lists the retained versions"
+            ) from None
+
+    frm = bound(pins[0], start=True)
+    to = bound(pins[1], start=False) if len(pins) > 1 else None
+    if to is not None and frm > to:
+        raise SqlDmlError(
+            f"table_changes(): empty range [{frm}, {to}] — the "
+            "start bound is after the end bound"
+        )
+    # Delta's start bound is INCLUSIVE of that version's changes; the
+    # engine feed is (from, to], so shift the start down one (version 0
+    # is served from the retained creation snapshot)
+    df = managed_table.table_changes(spark, path, frm - 1, to)
+    return _ref_view(df, "__tc", views)
+
+
+# parents after which a relation needs no implicit name alias: the
+# relation already has one, or (TABLESAMPLE, a whole `TABLE t` query)
+# Spark's grammar takes none there
+_ALIAS_OWNERS = frozenset(
+    [None, "SubqueryAlias", "Sample", "UnresolvedSubqueryColumnAliases"]
+)
+
+
+def _read_cuts(
+    spark: SparkSession,
+    stmt: str,
+    plan,
+    registry_dir: str | None,
+    views: list[str] | None,
+    seen: frozenset[str] = frozenset(),
+) -> list[tuple[int, int, str]]:
+    """One walk over a parsed read: a ``(start, stop, replacement)``
+    splice for every registry relation (live, or pinned by
+    ``VERSION|TIMESTAMP AS OF``) and every ``table_changes()`` call.
+    Other names are left for Spark's catalog. A single-part name an
+    in-scope CTE defines is the CTE's: scope follows ``UnresolvedWith``
+    nesting (a definition sees earlier siblings, the body all of them,
+    subqueries inherit). Registry LOGICAL VIEWS rewrite their stored
+    SELECT recursively; cycles raise (``seen`` is the chain). A splice
+    keeps the name as its implicit qualifier (`` AS `t` ``) unless the
+    relation has its own alias."""
+    try:
+        registry = _registry_dir(spark, registry_dir)
+    except ValueError:
+        registry = None
+    cuts: dict[int, tuple[int, int, str]] = {}
+
+    def relation(node, parent: str | None, ctes: frozenset[str]) -> None:
+        pinned = node.nodeName() == "RelationTimeTravel"
+        rel = node.relation() if pinned else node
+        if registry is None or rel.nodeName() != "UnresolvedRelation":
+            return
+        parts = _seq(rel.multipartIdentifier())
+        if len(parts) == 1 and parts[0].lower() in ctes:
+            return
+        name = ".".join(parts)
+        try:
+            entry = txn_catalog.resolve_entry(registry, name)
+        except (txn_catalog.TableNameError, ValueError):
+            return  # not a registry name (or not one at all)
+        if pinned:
+            if "view_sql" in entry:
+                return
+            version, ts = _opt(node.version()), _opt(node.timestamp())
+            if version is not None:
+                df = managed_table.read(spark, entry["path"], version=int(version))
+            elif ts.nodeName() == "Literal" and ts.dataType().typeName() == "string":
+                df = managed_table.read_as_of(
+                    spark, entry["path"], _parse_ts_utc(str(ts.value()))
+                )
+            else:
+                raise SqlDmlError("TIMESTAMP AS OF takes a string literal")
+            view = _ref_view(df, "__tt", views)
+        elif "view_sql" in entry:
+            key = name.lower()
             if key in seen:
                 raise SqlDmlError(
                     f"view cycle: {name!r} references itself "
                     f"(chain: {sorted(seen)})"
                 )
-            df = spark.sql(
-                _rewrite_reads(
-                    spark,
-                    entry["view_sql"],
-                    registry_dir,
-                    views,
-                    seen | {key},
-                )
-            )
+            df = spark.sql(_rewrite_reads(
+                spark, entry["view_sql"], registry_dir, views, seen | {key}
+            ))
+            view = _ref_view(df, "__bn", views)
         else:
-            df = managed_table.read(spark, entry["path"])
-        return _ref_view(df, "__bn", views)
+            view = _ref_view(managed_table.read(spark, entry["path"]), "__bn", views)
+        if parent not in _ALIAS_OWNERS:
+            view += f" AS {_quote(parts[-1])}"
+        start, stop = _span(rel)[0], _span(node)[1]
+        cuts[start] = (start, stop, view)
 
-    # replacement SPANS, applied sorted at the end: a comma-list scan
-    # can hop over a parenthesized subquery member whose interior holds
-    # its own `FROM name` matches — eager left-to-right splicing would
-    # swallow those; span collection lets the main finditer loop and
-    # the comma scans each contribute independently (they can never
-    # overlap: a comma member is not preceded by FROM/JOIN, so the two
-    # sources match disjoint text)
-    repls: list[tuple[int, int, str]] = []
-
-    def _hop_parens(start: int) -> int:
-        """Index past the balanced paren group opening at masked[start]
-        (which must be '('); -1 when unbalanced."""
-        depth, j = 1, start + 1
-        while j < len(masked) and depth:
-            if masked[j] == "(":
-                depth += 1
-            elif masked[j] == ")":
-                depth -= 1
-            j += 1
-        return -1 if depth else j
-
-    def _scan_comma_list(pos: int) -> None:
-        """Resolve every further member of a FROM relation list from
-        ``pos``: bare names splice, parenthesized subquery /
-        table-function members are hopped (their interiors' own FROM
-        matches splice via the main loop), one optional alias per
-        relation is skipped."""
-        while True:
-            cm = _COMMA_CONT_RE.match(masked, pos)
-            if cm:
-                nm = stmt[cm.start("name") : cm.end("name")].replace("`", "")
-                rep2 = _resolve_ref(nm, cm.start("name"))
-                if rep2 is not None:
-                    tail = _alias_clause(
-                        masked,
-                        cm.end("name"),
-                        stmt[cm.start("name") : cm.end("name")],
-                    )
-                    repls.append(
-                        (cm.start("name"), cm.end("name"), rep2 + tail)
-                    )
-                pos = cm.end()
-                continue
-            pm = _COMMA_PAREN_RE.match(masked, pos)
-            if pm:
-                j = _hop_parens(pm.end() - 1)
-                if j < 0:
-                    return  # unbalanced — leave the rest untouched
-                pos = j
-                continue
-            am = _ALIAS_CONT_RE.match(masked, pos)
-            if am and am.group("a").replace("`", "").lower() not in _NOT_ALIAS:
-                pos = am.end()
-                continue
+    def walk(node, parent: str | None, ctes: frozenset[str]) -> None:
+        kind = node.nodeName()
+        if kind == "UnresolvedWith":
+            scope = set(ctes)
+            for pair in _seq(node.cteRelations()):
+                walk(pair._2(), kind, frozenset(scope))
+                scope.add(pair._1().lower())
+            walk(node.child(), kind, frozenset(scope))
             return
-
-    for m in _BARE_RE.finditer(masked):
-        if m.start() < len(in_func) and in_func[m.start()]:
-            continue  # scalar FROM inside a function call
-        name = stmt[m.start("name") : m.end("name")].replace("`", "")
-        rep = _resolve_ref(name, m.start("name"))
-        if rep is not None:
-            tail = _alias_clause(
-                masked, m.end(), stmt[m.start("name") : m.end("name")]
+        if kind in ("UnresolvedRelation", "RelationTimeTravel"):
+            relation(node, parent, ctes)
+            return
+        if kind == "ExplainCommand":  # the explained plan is a field
+            walk(node.logicalPlan(), kind, ctes)
+            return
+        if kind == "UnresolvedTableValuedFunction" and [
+            p.lower() for p in _seq(node.name())
+        ] == ["table_changes"]:
+            start, stop = _span(node)
+            view = _table_changes_view(
+                spark, _seq(node.functionArgs()), registry_dir, views
             )
-            repls.append((m.start(), m.end(), f"{m.group('kw')} {rep}{tail}"))
-        if m.group("kw").upper() == "FROM":
-            _scan_comma_list(m.end())
-    # a relation list can also START with a parenthesized subquery /
-    # table function (`FROM (SELECT ...) s, reg_t` — review r12): the
-    # bare regex never fires there, so anchor on `FROM (` / `FROM f(`,
-    # hop the group, and scan the remainder of the list the same way
-    for m in _FROM_PAREN_RE.finditer(masked):
-        if m.start() < len(in_func) and in_func[m.start()]:
-            continue
-        j = _hop_parens(m.end() - 1)
-        if j >= 0:
-            _scan_comma_list(j)
-    if not repls:
-        return stmt
-    repls.sort()
-    out: list[str] = []
-    last = 0
-    for s, e, text in repls:
-        if s < last:  # pragma: no cover - overlap safety net
-            continue
-        out.append(stmt[last:s])
-        out.append(text)
-        last = e
-    out.append(stmt[last:])
-    return "".join(out)
+            cuts[start] = (start, stop, view)
+            return
+        for child in _seq(node.children()) + _seq(node.innerChildren()):
+            walk(child, kind, ctes)
+
+    walk(plan, None, frozenset())
+    return list(cuts.values())
 
 
 def _rewrite_reads(
@@ -1903,62 +1483,78 @@ def _rewrite_reads(
     views: list[str] | None = None,
     seen: frozenset[str] = frozenset(),
 ) -> str:
-    """The full passthrough-read rewrite chain, in dependency order:
-    metadata tables and the CDF TVF first (their shapes embed names),
-    then time-travel pins (``FROM t VERSION AS OF`` must not be seen
-    by the bare rewriter, which would orphan the pin clause), bare
-    names (tables AND logical views) last."""
+    """Read text with every registry reference spliced out as a temp
+    view: the ``$``-suffix metadata tables first, then the parsed-plan
+    walk (:func:`_read_cuts`). Text that does not parse comes back
+    as-is, for ``spark.sql`` to reject with its own error."""
     stmt = _rewrite_metadata_tables(spark, stmt, registry_dir, views)
-    stmt = _rewrite_table_changes_tvf(spark, stmt, registry_dir, views)
-    stmt = _rewrite_time_travel(spark, stmt, registry_dir, views)
-    return _rewrite_bare_names(spark, stmt, registry_dir, views, seen)
+    try:
+        plan = _parse(spark, stmt)
+    except ParseException:
+        return stmt
+    return _splice(
+        stmt, _read_cuts(spark, stmt, plan, registry_dir, views, seen)
+    )
+
+
+def _read_df(
+    spark: SparkSession, stmt: str, registry_dir: str | None
+) -> DataFrame:
+    """``spark.sql`` over :func:`_rewrite_reads`; its temp views are
+    dropped once the (eager) analysis has inlined them."""
+    views: list[str] = []
+    try:
+        return spark.sql(_rewrite_reads(spark, stmt, registry_dir, views))
+    finally:
+        for v in views:
+            spark.catalog.dropTempView(v)
 
 
 # -- entry point -------------------------------------------------------------
+
+_DML = {
+    "MergeIntoTable": _merge,
+    "UpdateTable": _update,
+    "DeleteFromTable": _delete,
+    "InsertIntoStatement": _insert,
+}
 
 
 def sql(
     spark: SparkSession, statement: str, registry_dir: str | None = None
 ) -> DataFrame | None:
-    """Execute one SQL statement. The four DML verbs (MERGE INTO /
-    UPDATE / DELETE FROM / INSERT INTO|OVERWRITE) are parsed here and
-    dispatched to the managed-table executors by registry NAME —
-    the reference's Delta SQL idiom end-to-end. Everything else
-    passes through to ``spark.sql`` and its DataFrame comes back.
-    DML returns ``None`` (like delta-spark's Python DML surface);
-    read the table to observe the effect."""
+    """Execute one SQL statement. Command verbs Spark's parser rejects
+    or misreads (OPTIMIZE, VACUUM, DESCRIBE HISTORY, ...) go to
+    :func:`sql_command`; anything else is parsed once by Spark. MERGE /
+    UPDATE / DELETE / INSERT run on the managed-table executors by
+    registry NAME and return None (as delta-spark's Python DML does);
+    other statements return ``spark.sql`` over the registry-spliced
+    text — or over the original text when it does not parse, so
+    Spark's own error surfaces."""
     stmt = statement.strip()
-    m = re.match(r"MERGE\s+INTO\b", stmt, re.I)
-    if m:
-        _merge(spark, stmt[m.end() :], registry_dir)
-        return None
-    m = re.match(r"UPDATE\b", stmt, re.I)
-    if m:
-        _update(spark, stmt[m.end() :], registry_dir)
-        return None
-    m = re.match(r"DELETE\s+FROM\b", stmt, re.I)
-    if m:
-        _delete(spark, stmt[m.end() :], registry_dir)
-        return None
-    m = re.match(r"INSERT\s+(INTO|OVERWRITE)(\s+TABLE)?\b", stmt, re.I)
-    if m:
-        _insert(
-            spark,
-            stmt[m.end() :],
-            registry_dir,
-            overwrite=m.group(1).upper() == "OVERWRITE",
-        )
-        return None
     if _COMMAND_RE.match(stmt):
         out = sql_command(spark, statement, registry_dir)
         return out if isinstance(out, DataFrame) else None
     views: list[str] = []
     try:
-        return spark.sql(_rewrite_reads(spark, statement, registry_dir, views))
+        text = _rewrite_metadata_tables(spark, statement, registry_dir, views)
+        try:
+            plan = _parse(spark, text)
+        except ParseException as e:
+            verb = stmt.split(None, 1)[0].upper() if stmt else ""
+            if verb in ("MERGE", "UPDATE", "DELETE", "INSERT"):
+                raise SqlDmlError(str(e)) from None
+            return spark.sql(statement)
+        dml = _DML.get(plan.nodeName())
+        if dml is not None:
+            dml(spark, text, plan, registry_dir, views)
+            return None
+        cuts = _read_cuts(spark, text, plan, registry_dir, views)
+        return spark.sql(_splice(text, cuts))
     finally:
         # spark.sql analyzes EAGERLY, so the views are already inlined
-        # into the returned DataFrame's plan — dropping them here leaks
-        # nothing and keeps the session catalog clean across statements
+        # into every DataFrame built from them — dropping them here
+        # leaks nothing and keeps the session catalog clean
         for v in views:
             spark.catalog.dropTempView(v)
 

@@ -734,3 +734,52 @@ def test_ctas_refuses_view_name_upfront(spark, named_table):
         .n
         == 3
     )
+
+
+# -- shapes the parser front end reads that a text scanner misread ------------
+
+
+@pytest.mark.parametrize(
+    "stmt, ids",
+    [
+        # a line comment / block comment between FROM and the name
+        ("SELECT id FROM -- the accounts\n sqldb.accounts", [1, 2, 3]),
+        ("SELECT id FROM /* c */ sqldb.accounts", [1, 2, 3]),
+        # an apostrophe inside a comment is not a string literal
+        (
+            "SELECT a.id FROM sqldb.accounts a -- don't\n"
+            "JOIN sqldb.accounts b ON a.id = b.id",
+            [1, 2, 3],
+        ),
+        # a parenthesized relation
+        ("SELECT id FROM (sqldb.accounts)", [1, 2, 3]),
+        # DML: table state after the statement
+        ("DELETE FROM sqldb.accounts /* all of 'em */ WHERE id > 1", [1]),
+        ("INSERT INTO sqldb.accounts VALUES (4, 'dave', 4.0) -- note", [1, 2, 3, 4]),
+    ],
+    ids=["line_comment", "block_comment", "apostrophe_comment", "paren_relation",
+         "delete_comment", "insert_trailing_comment"],
+)
+def test_comments_and_parens_around_names(spark, named_table, stmt, ids):
+    _name, path, _ = named_table
+    df = sql_dml.sql(spark, stmt)
+    rows = (df if df is not None else mt.read(spark, path)).collect()
+    assert sorted(r["id"] for r in rows) == ids
+
+
+def test_merge_with_schema_evolution(spark, named_table):
+    name, path, _ = named_table
+    spark.createDataFrame(
+        [(1, "alice", 1.0, "gold")], "id INT, name STRING, balance DOUBLE, tier STRING"
+    ).createOrReplaceTempView("evo_feed")
+    try:
+        sql_dml.sql(
+            spark,
+            f"MERGE WITH SCHEMA EVOLUTION INTO {name} t USING evo_feed s "
+            "ON t.id = s.id WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED THEN INSERT *",
+        )
+    finally:
+        spark.catalog.dropTempView("evo_feed")
+    rows = {r["id"]: r["tier"] for r in mt.read(spark, path).collect()}
+    assert rows == {1: "gold", 2: None, 3: None}

@@ -1,7 +1,8 @@
 """Property-based hardening of the passthrough-SQL rewrite layer
-(sources/sql_dml.py). The round-12 backtracking bug (`FROM range(10)`
-matching name='rang' past the no-function-call lookahead) is exactly
-the class a grammar fuzz catches and example tests miss — these
+(sources/sql_dml.py: the ``$``-suffix pre-pass plus the walk over
+Spark's parse, ``_rewrite_reads``). Text-scanner bugs such as the
+round-12 backtracking one (`FROM range(10)` matching name='rang') are
+exactly the class a grammar fuzz catches and example tests miss — these
 properties pin the rewriter's contracts over generated statements:
 
 1. masking is shape-preserving and literal-opaque;
@@ -59,16 +60,6 @@ def test_mask_literals_is_shape_preserving(s):
 
 
 @given(_sql_soup)
-@settings(max_examples=300, deadline=None)
-def test_func_paren_flags_shape(s):
-    masked = sql_dml._mask_literals(s)
-    flags = sql_dml._func_paren_flags(masked)
-    assert len(flags) == len(masked)
-    if "(" not in masked:
-        assert not any(flags)
-
-
-@given(_sql_soup)
 @settings(max_examples=200, deadline=None)
 def test_parse_ts_utc_never_hangs_on_soup(s):
     # any non-timestamp text raises ValueError (never a crash / hang)
@@ -122,7 +113,7 @@ def test_rewrite_without_resolvable_names_is_identity(spark, reg_env, s):
     if "pdb.tbl" in s.lower() or "solo" in s.lower():
         return
     views: list[str] = []
-    out = sql_dml._rewrite_bare_names(spark, s, None, views)
+    out = sql_dml._rewrite_reads(spark, s, None, views)
     assert out == s
     assert views == []
 
@@ -161,7 +152,7 @@ def test_registered_name_always_splices(spark, reg_env, before, kw, after):
     stmt = f"{before}{kw} pdb.tbl{after}"
     views: list[str] = []
     try:
-        out = sql_dml._rewrite_bare_names(spark, stmt, None, views)
+        out = sql_dml._rewrite_reads(spark, stmt, None, views)
         # the bare reference is gone, a view ref took its place (plus
         # the implicit name alias when the reference carried none —
         # round-13: splices keep the table name as a column qualifier),
@@ -188,10 +179,12 @@ def test_registered_name_always_splices(spark, reg_env, before, kw, after):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_name_inside_literal_never_splices(spark, reg_env, before, after):
-    stmt = f"{before}FROM solo WHERE s = 'FROM pdb.tbl'{after}"
+    # the literal sits in the select list so every (before, after) pair
+    # is valid SQL — the rewriter splices only what Spark's parser reads
+    stmt = f"{before.rstrip()}, 'FROM pdb.tbl' AS lit FROM solo{after}"
     views: list[str] = []
     try:
-        out = sql_dml._rewrite_bare_names(spark, stmt, None, views)
+        out = sql_dml._rewrite_reads(spark, stmt, None, views)
         assert "'FROM pdb.tbl'" in out  # literal untouched
         assert "FROM solo" not in out  # the real relation spliced
     finally:
