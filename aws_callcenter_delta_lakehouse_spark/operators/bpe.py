@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import set_checkpoint_dir
+
 
 def _chars(col: Column) -> Column:
     """Split a word into single-character symbols."""
@@ -94,8 +96,7 @@ def bpe_train(
     from round 0); when None, executor-local ``localCheckpoint`` (the
     local-mode fast path). Same contract as ``connected_components``.
     """
-    if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(df.sparkSession, checkpoint_dir)
 
     def _materialize(d: DataFrame) -> DataFrame:
         return (
@@ -174,8 +175,7 @@ def bpe_apply(
     collected to the driver (a real tokenizer's merge table is exactly
     this broadcast, just wider). ``checkpoint_dir``: reliable per-round
     checkpointing, same contract as :func:`bpe_train`."""
-    if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(df.sparkSession, checkpoint_dir)
 
     def _materialize(d: DataFrame) -> DataFrame:
         return (

@@ -27,6 +27,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import cut_once, set_checkpoint_dir
+
 
 def _cut_once(df: DataFrame) -> DataFrame:
     """Cut a multi-referenced edge derivation exactly once — Spark
@@ -35,8 +37,6 @@ def _cut_once(df: DataFrame) -> DataFrame:
     shared :func:`operators.materialize.cut_once` (reliable-checkpoint
     capable via ``spark.managedTable.cutCheckpointDir``, releasable via
     ``materialize.release_cuts`` — r13 verdict item 3)."""
-    from .materialize import cut_once
-
     return cut_once(df)
 
 
@@ -69,8 +69,7 @@ def connected_components(
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError("on_nonconverged must be 'raise' or 'warn'")
 
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(edges.sparkSession, checkpoint_dir)
 
     def _materialize(df: DataFrame) -> DataFrame:
         # truncate lineage: reliable checkpoint on a cluster, local
@@ -150,8 +149,7 @@ def pagerank(
     Returns (vertex, rank); ranks sum to n_vertices (the "sum = N"
     convention, so a rank of 1.0 is the uniform baseline).
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(edges.sparkSession, checkpoint_dir)
 
     def _materialize(df: DataFrame) -> DataFrame:
         return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
@@ -291,8 +289,7 @@ def kcore(
     per round exactly as in ``connected_components`` (reliable
     ``checkpoint`` when ``checkpoint_dir`` is set)."""
     spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(spark, checkpoint_dir)
 
     def _truncate(df: DataFrame) -> DataFrame:
         return (
@@ -377,8 +374,7 @@ def label_propagation(
     ``localCheckpoint`` otherwise). Only a scalar change-count reaches
     the driver. Returns (v, label).
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(edges.sparkSession, checkpoint_dir)
 
     def _materialize(df: DataFrame) -> DataFrame:
         return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
@@ -445,8 +441,7 @@ def bfs_hops(
     testable unlike most iterative graph code.
     """
     spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(spark, checkpoint_dir)
 
     def _materialize(df: DataFrame) -> DataFrame:
         return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
@@ -502,8 +497,7 @@ def sssp_weighted(
     per round (reliable ``checkpoint_dir`` on a cluster).
     """
     spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(spark, checkpoint_dir)
 
     def _materialize(df: DataFrame) -> DataFrame:
         return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
@@ -564,8 +558,7 @@ def multi_source_bfs(
     early-exit discipline as :func:`bfs_hops`; returns (seed, vertex,
     hops) for every pair reachable within ``max_hops``."""
     spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(spark, checkpoint_dir)
 
     def _materialize(df: DataFrame) -> DataFrame:
         return (

@@ -42,6 +42,32 @@ from pyspark.sql import DataFrame, SparkSession
 CUT_DIR_CONF = "spark.managedTable.cutCheckpointDir"
 
 
+def set_checkpoint_dir(spark: SparkSession, checkpoint_dir: str | None) -> None:
+    """Point the session's reliable checkpoints at ``checkpoint_dir``
+    (no-op for None) — the one path every operator's ``checkpoint_dir=``
+    goes through.
+
+    A session has ONE reliable-checkpoint directory at a time: Spark's
+    ``setCheckpointDir`` is SparkContext-global state, and each call
+    creates a fresh uuid subdirectory under the given one. The call is
+    therefore made only when the dir differs from the session's current
+    one (``getCheckpointDir()`` minus that subdirectory) — repeated cuts
+    into the same dir make no second JVM call and share one
+    subdirectory. Concurrent callers with DIFFERENT dirs still repoint
+    each other; use one checkpoint dir per session."""
+    if checkpoint_dir is None:
+        return
+    sc = spark.sparkContext
+    current = sc.getCheckpointDir()
+    if current is not None:
+        hpath = sc._jvm.org.apache.hadoop.fs.Path
+        want = hpath(checkpoint_dir)
+        want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+        if hpath(current).getParent().equals(want):
+            return
+    sc.setCheckpointDir(checkpoint_dir)
+
+
 def cut_once(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """Materialize a multi-referenced subtree exactly once (lazy — the
     first action over the frame persists the blocks; no extra job).
@@ -56,7 +82,7 @@ def cut_once(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     if checkpoint_dir is None:
         checkpoint_dir = df.sparkSession.conf.get(CUT_DIR_CONF, None)
     if checkpoint_dir is not None:
-        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        set_checkpoint_dir(df.sparkSession, checkpoint_dir)
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import set_checkpoint_dir
+
 from .similarity import dot, norm
 
 
@@ -145,8 +147,7 @@ def pq_train(
     ``normalize=False`` trains on the raw vectors — the IVF-PQ path
     passes residuals, whose magnitude IS the signal (re-normalizing
     them would blow small residuals up to unit length)."""
-    if checkpoint_dir is not None:
-        corpus.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(corpus.sparkSession, checkpoint_dir)
 
     def _materialize(d: DataFrame) -> DataFrame:
         return (
@@ -408,7 +409,7 @@ def ivfpq_topk(
     # once (reliable when checkpoint_dir is set) instead of paying the
     # normalize+assign lineage per consumer
     if checkpoint_dir is not None:
-        resid.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        set_checkpoint_dir(resid.sparkSession, checkpoint_dir)
         resid = resid.checkpoint(eager=True)
     else:
         resid = resid.localCheckpoint(eager=True)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import set_checkpoint_dir
+
 from ..functions.scalars import round_portable
 
 
@@ -504,8 +506,7 @@ def kmeans_refine(
     is <=2^-21 per element — immaterial next to Lloyd's own movement.
     Default False keeps the plain ``avg`` fast path (one fewer
     projection; same plan shape)."""
-    if checkpoint_dir is not None:
-        corpus.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    set_checkpoint_dir(corpus.sparkSession, checkpoint_dir)
     _S = 1048576.0  # 2^20 fixed-point scale (portable mode)
     for _ in range(iterations):
         assigned = (

@@ -533,7 +533,7 @@ def _general_merge_body(
             for p in parts[1:]:
                 changes = changes.unionByName(p)
 
-    managed_table._commit_snapshot(
+    managed_table.commit_overwrite(
         merged.drop("__tid", "__t_present", "__s_present"),
         path,
         keys,

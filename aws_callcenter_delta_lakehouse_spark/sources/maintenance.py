@@ -738,7 +738,7 @@ def purge_rows(
             # at a sidecar that no longer exists
             new_marker.pop("dv", None)
             new_marker["stats"] = mt._snapshot_stats(staging)
-            if not mt._staging_data_files(staging):
+            if not mt._data_files(staging):
                 # a purge that matches EVERY row of a partitioned
                 # snapshot writes zero files (partitionBy of nothing):
                 # record schema-in-log or read(version=) dies on this

@@ -101,3 +101,40 @@ def test_fused_probe_counts_null_keyed_duplicates(spark, tmp_path):
     )
     with pytest.raises(ConstraintViolationError, match="PRIMARY KEY"):
         mt.commit_overwrite(df, path, keys=("id",), unique_keys=True)
+
+
+def test_append_probes_fuse_into_one_aggregate(spark, tmp_path, monkeypatch):
+    """A blind append runs the same fused probe over the appended files
+    (CHECK + batch PK + identity max + row-id max in ONE aggregate) plus
+    the one clash join against the live keys — two actions over the
+    staged files, where it used to run five."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    path = str(tmp_path / "t")
+    mt.commit_overwrite(
+        spark.range(0, 50).selectExpr("id", "id * 2 AS v"),
+        path,
+        keys=("id",),
+        unique_keys=True,
+        identity={"seq": {"start": 1, "step": 1}},
+        properties={"enableRowTracking": True},
+    )
+    mt.add_constraint(spark, path, "v_nonneg", "v >= 0")
+    staged_actions = []
+    orig = DataFrame.collect
+
+    def counted(df):
+        if any("__staging_" in f for f in df.inputFiles()):
+            staged_actions.append(df)
+        return orig(df)
+
+    monkeypatch.setattr(DataFrame, "collect", counted)
+    mt.append_rows(
+        spark, spark.range(100, 110).selectExpr("id", "id * 2 AS v"), path
+    )
+    monkeypatch.undo()
+    assert len(staged_actions) == 2
+    marker = mt._read_marker(path)
+    assert int(marker["identity"]["seq"]["high_water"]) >= 60
+    assert int(marker["row_tracking"]["high_water"]) >= 59
+    assert mt.read(spark, path).count() == 60

@@ -332,3 +332,38 @@ def test_dv_read_plan_broadcasts_the_vector(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_dv_commit_abort_releases_cache_and_staging(
+    spark, tmp_path, monkeypatch, op
+):
+    """A DV commit that fails after hardlinking its staging dir (here:
+    the change-feed write) leaves no pinned RDD, no ``__staging_*`` dir,
+    and the table at its old version and rows."""
+    import glob
+
+    path = str(tmp_path / "t")
+    _make(spark, path)
+    mt.set_table_property(path, "enableChangeDataFeed", True)
+    v0 = mt.table_version(path)
+    rows0 = sorted(tuple(r) for r in mt.read(spark, path).collect())
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+
+    def boom(changes, staging):
+        raise RuntimeError("change-feed write failed")
+
+    monkeypatch.setattr(mt, "_write_cdf", boom)
+    with pytest.raises(RuntimeError, match="change-feed write failed"):
+        if op == "delete":
+            mt.delete_where(spark, path, "id <= 2", deletion_vectors=True)
+        else:
+            mt.update_where(
+                spark, path, "id <= 2", {"bal": F.lit(0.0)},
+                deletion_vectors=True,
+            )
+    assert set(sc._jsc.getPersistentRDDs().keys()) == before
+    assert not glob.glob(f"{path}__staging_*")
+    assert mt.table_version(path) == v0
+    assert sorted(tuple(r) for r in mt.read(spark, path).collect()) == rows0

@@ -12,6 +12,7 @@ from aws_callcenter_delta_lakehouse_spark.operators.materialize import (
     CUT_DIR_CONF,
     cut_once,
     release_cuts,
+    set_checkpoint_dir,
 )
 
 
@@ -51,6 +52,38 @@ def test_cut_once_reliable_checkpoint_dir(spark, tmp_path):
     # reliable checkpoint wrote files under the directory
     found = any(files for _, _, files in os.walk(ckpt))
     assert found, "reliable checkpoint produced no files"
+    release_cuts(spark)
+
+
+def test_checkpoint_dir_set_only_when_changed(spark, tmp_path, monkeypatch):
+    """Sequential reliable cuts into dir A then dir B each land in their
+    own dir; a repeated dir makes no second setCheckpointDir call."""
+    release_cuts(spark)
+    sc = spark.sparkContext
+    calls = []
+    orig = type(sc).setCheckpointDir
+
+    def counted(self, d):
+        calls.append(d)
+        return orig(self, d)
+
+    monkeypatch.setattr(type(sc), "setCheckpointDir", counted)
+    dir_a, dir_b = str(tmp_path / "ckpt_a"), str(tmp_path / "ckpt_b")
+
+    def files_in(d):
+        return sum(len(files) for _, _, files in os.walk(d))
+
+    assert cut_once(spark.range(100), checkpoint_dir=dir_a).count() == 100
+    n_a = files_in(dir_a)
+    assert n_a > 0
+    assert cut_once(spark.range(50), checkpoint_dir=dir_a).count() == 50
+    set_checkpoint_dir(spark, dir_a)
+    assert calls == [dir_a]  # the repeats reused the current dir
+    assert files_in(dir_a) > n_a
+    assert cut_once(spark.range(70), checkpoint_dir=dir_b).count() == 70
+    assert calls == [dir_a, dir_b]
+    assert files_in(dir_b) > 0
+    assert os.path.dirname(sc.getCheckpointDir()).endswith("ckpt_b")
     release_cuts(spark)
 
 

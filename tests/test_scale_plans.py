@@ -605,7 +605,7 @@ def test_general_merge_plan_is_key_joined(spark, tmp_path, monkeypatch):
     def fake_commit(df, *a, **kw):
         captured["df"] = df
 
-    monkeypatch.setattr(da.managed_table, "_commit_snapshot", fake_commit)
+    monkeypatch.setattr(da.managed_table, "commit_overwrite", fake_commit)
     (
         DeltaTable.forPath(spark, path).alias("t")
         .merge(src, "t.id = s.id")
