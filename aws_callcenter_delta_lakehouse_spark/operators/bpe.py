@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import set_checkpoint_dir
+from .materialize import cut_once
 
 
 def _chars(col: Column) -> Column:
@@ -78,7 +78,6 @@ def bpe_train(
     df: DataFrame,
     text_col: str,
     rounds: int = 5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Learn ``rounds`` BPE merges from a corpus; returns one row per
     merge: (round, pair_a, pair_b, merged, freq) with ``freq`` the
@@ -90,27 +89,19 @@ def bpe_train(
     (map-side combined; weights carry the word frequencies) and one
     projection applying the merge. The word table is re-materialized
     each round — the merge lambda otherwise re-derives every previous
-    round per downstream job. ``checkpoint_dir``: when set, that
-    materialization is a RELIABLE ``df.checkpoint()`` (cluster-safe —
-    an executor loss mid-training recomputes from the checkpoint, not
-    from round 0); when None, executor-local ``localCheckpoint`` (the
-    local-mode fast path). Same contract as ``connected_components``.
+    round per downstream job; it goes through ``cut_once``, so the
+    session conf ``spark.managedTable.cutCheckpointDir`` makes it a
+    RELIABLE checkpoint (an executor loss mid-training recomputes from
+    the checkpoint, not from round 0). Same contract as
+    ``connected_components``.
     """
-    set_checkpoint_dir(df.sparkSession, checkpoint_dir)
-
-    def _materialize(d: DataFrame) -> DataFrame:
-        return (
-            d.checkpoint()
-            if checkpoint_dir is not None
-            else d.localCheckpoint(eager=True)
-        )
-
-    words = _materialize(
+    words = cut_once(
         df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
-        .select(_chars(F.col("w")).alias("syms"), "freq")
+        .select(_chars(F.col("w")).alias("syms"), "freq"),
+        eager=True,
     )
     merges = []
     for r in range(1, rounds + 1):
@@ -141,16 +132,17 @@ def bpe_train(
             F.concat("a", "b").alias("merged"),
             F.col("n").alias("freq"),
         )
-        best = _materialize(best)
+        best = cut_once(best, eager=True)
         merges.append(best)
-        words = _materialize(
+        words = cut_once(
             words.join(F.broadcast(best.select("pair_a", "pair_b")))
             .select(
                 _merge_pair(
                     F.col("syms"), F.col("pair_a"), F.col("pair_b")
                 ).alias("syms"),
                 "freq",
-            )
+            ),
+            eager=True,
         )
     out = merges[0]
     for m in merges[1:]:
@@ -163,7 +155,6 @@ def bpe_apply(
     text_col: str,
     merges: DataFrame,
     rounds: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Tokenize a corpus with a learned merge list: every word starts
     as characters and each merge (in training order) is applied with
@@ -173,17 +164,8 @@ def bpe_apply(
     The merge list stays a DataFrame — each round's (pair_a, pair_b)
     reaches the words as a 1-row broadcast join, so nothing is ever
     collected to the driver (a real tokenizer's merge table is exactly
-    this broadcast, just wider). ``checkpoint_dir``: reliable per-round
-    checkpointing, same contract as :func:`bpe_train`."""
-    set_checkpoint_dir(df.sparkSession, checkpoint_dir)
-
-    def _materialize(d: DataFrame) -> DataFrame:
-        return (
-            d.checkpoint()
-            if checkpoint_dir is not None
-            else d.localCheckpoint(eager=True)
-        )
-
+    this broadcast, just wider). Per-round cuts follow the same
+    contract as :func:`bpe_train`."""
     words = (
         df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
         .where(F.length("w") > 0)
@@ -195,13 +177,14 @@ def bpe_apply(
         step = F.broadcast(
             merges.where(F.col("round") == r).select("pair_a", "pair_b")
         )
-        words = _materialize(
+        words = cut_once(
             words.join(step).select(
                 _merge_pair(
                     F.col("syms"), F.col("pair_a"), F.col("pair_b")
                 ).alias("syms"),
                 "freq",
-            )
+            ),
+            eager=True,
         )
     return (
         words.select(F.explode("syms").alias("token"), "freq")

@@ -14,10 +14,11 @@ collected.
 
 Fault tolerance: iterative algorithms must truncate lineage each round
 (else the plan grows unboundedly), which severs Spark's recompute path.
-``localCheckpoint`` (the local-mode default) stores the blocks on
-executors — an executor loss mid-iteration kills the job. On a real
-cluster pass ``checkpoint_dir``: each round is then a RELIABLE
-``df.checkpoint()`` to HDFS/S3, surviving any executor loss.
+Every round therefore cuts through ``materialize.cut_once(eager=True)``:
+an executor-local ``localCheckpoint`` by default (an executor loss
+mid-iteration kills the job), or — with the session conf
+``spark.managedTable.cutCheckpointDir`` set, as on a real cluster — a
+RELIABLE ``df.checkpoint()`` to HDFS/S3 that survives executor loss.
 """
 
 from __future__ import annotations
@@ -27,17 +28,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import cut_once, set_checkpoint_dir
-
-
-def _cut_once(df: DataFrame) -> DataFrame:
-    """Cut a multi-referenced edge derivation exactly once — Spark
-    re-executes non-exchange subtrees per reference, so the cut halves
-    the edge-derivation work (r13 opt, guide §2.4). Delegates to the
-    shared :func:`operators.materialize.cut_once` (reliable-checkpoint
-    capable via ``spark.managedTable.cutCheckpointDir``, releasable via
-    ``materialize.release_cuts`` — r13 verdict item 3)."""
-    return cut_once(df)
+from .materialize import cut_once
 
 
 class ConvergenceError(RuntimeError):
@@ -50,16 +41,10 @@ def connected_components(
     src: str = "d1",
     dst: str = "d2",
     max_iterations: int = 25,
-    checkpoint_dir: str | None = None,
     on_nonconverged: str = "raise",
 ) -> DataFrame:
     """(vertex, component) for every vertex appearing in ``edges``;
     component = min vertex id in the connected component.
-
-    ``checkpoint_dir``: when set, per-round materialization uses
-    reliable ``df.checkpoint()`` into that directory (cluster-safe);
-    when None, executor-local ``localCheckpoint`` (fine on local mode /
-    when executor loss is acceptable as a job retry).
 
     ``on_nonconverged``: "raise" (default — non-converged labels are
     wrong labels) or "warn" if the caller prefers the partial result.
@@ -69,25 +54,20 @@ def connected_components(
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError("on_nonconverged must be 'raise' or 'warn'")
 
-    set_checkpoint_dir(edges.sparkSession, checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        # truncate lineage: reliable checkpoint on a cluster, local
-        # blocks otherwise
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
     # Materialize the edge list ONCE — without this every iteration
     # re-executes the (possibly expensive) upstream plan that produced
     # the edges, e.g. a full MinHash-LSH pipeline. The input itself is
     # ALSO cut first: the symmetrizing union references it twice.
-    edges = _cut_once(edges)
-    sym = _materialize(
+    edges = cut_once(edges)
+    sym = cut_once(
         edges.select(F.col(src).alias("v"), F.col(dst).alias("u"))
         .union(edges.select(F.col(dst).alias("v"), F.col(src).alias("u")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
-    labels = _materialize(
-        sym.select("v").distinct().withColumn("component", F.col("v"))
+    labels = cut_once(
+        sym.select("v").distinct().withColumn("component", F.col("v")),
+        eager=True,
     )
 
     converged = False
@@ -97,7 +77,7 @@ def connected_components(
             .groupBy("v")
             .agg(F.min("u_comp").alias("n_comp"))
         )
-        updated = _materialize(
+        updated = cut_once(
             labels.join(neighbor_min, on="v", how="left")
             .select(
                 "v",
@@ -107,7 +87,8 @@ def connected_components(
                 (F.coalesce("n_comp", F.col("component")) < F.col("component")).alias(
                     "__changed"
                 ),
-            )
+            ),
+            eager=True,
         )
         changed = updated.filter(F.col("__changed")).count()
         labels = updated.drop("__changed")
@@ -132,7 +113,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge DataFrame — the other iterative
     graph primitive a curation pipeline wants (authority scoring for
@@ -143,28 +123,24 @@ def pagerank(
     sum contributions (one aggregate keyed on dst), dangling mass and
     teleport fold in as scalars. Shuffle per round = 2 hash exchanges
     on the vertex key; lineage truncates per round exactly like
-    ``connected_components`` (reliable checkpoint when ``checkpoint_dir``
-    is set, localCheckpoint otherwise).
+    ``connected_components``.
 
     Returns (vertex, rank); ranks sum to n_vertices (the "sum = N"
     convention, so a rank of 1.0 is the uniform baseline).
     """
-    set_checkpoint_dir(edges.sparkSession, checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
-    e = _materialize(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct()
+    e = cut_once(
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct(),
+        eager=True,
     )
-    vertices = _materialize(
-        e.select(F.col("s").alias("v")).union(e.select(F.col("d").alias("v"))).distinct()
+    vertices = cut_once(
+        e.select(F.col("s").alias("v")).union(e.select(F.col("d").alias("v"))).distinct(),
+        eager=True,
     )
     n = vertices.count()
     # loop-invariant: materialize once — the per-iteration dangling
     # probe AND the contribution join both read it (uncut, the degree
     # aggregate re-ran twice per iteration; r13 opt)
-    out_deg = _materialize(e.groupBy("s").agg(F.count("*").alias("out_deg")))
+    out_deg = cut_once(e.groupBy("s").agg(F.count("*").alias("out_deg")), eager=True)
     ranks = vertices.withColumn("rank", F.lit(1.0))
 
     for _ in range(iterations):
@@ -194,7 +170,7 @@ def pagerank(
             .agg(F.sum("share").alias("in_share"))
         )
         base = (1.0 - damping) + damping * dangling / n
-        ranks = _materialize(
+        ranks = cut_once(
             vertices.join(inbound, vertices["v"] == inbound["d"], how="left")
             .select(
                 "v",
@@ -202,7 +178,8 @@ def pagerank(
                     F.lit(base)
                     + F.lit(damping) * F.coalesce("in_share", F.lit(0.0))
                 ).alias("rank"),
-            )
+            ),
+            eager=True,
         )
     return ranks
 
@@ -233,7 +210,7 @@ def triangle_count(edges: DataFrame, a_col: str = "s1", b_col: str = "s2") -> Da
     # cut the (possibly expensive) edge derivation once: it feeds both
     # arms of the degree union AND the orientation join — uncut, the
     # caller's edge pipeline executes three times (r13 opt, guide §2.4)
-    edges = _cut_once(edges)
+    edges = cut_once(edges)
     deg = (
         edges.select(F.col(a_col).alias("__x"))
         .unionAll(edges.select(F.col(b_col).alias("__x")))
@@ -253,7 +230,7 @@ def triangle_count(edges: DataFrame, a_col: str = "s1", b_col: str = "s2") -> Da
         F.when(ra < rb, F.col(b_col)).otherwise(F.col(a_col)).alias("__v"),
         F.when(ra < rb, rb).otherwise(ra).alias("__rv"),
     )
-    oriented = _cut_once(oriented)
+    oriented = cut_once(oriented)
     a = oriented.select(u.alias("__wu"), v.alias("__x1"), F.col("__rv").alias("__r1"))
     b = oriented.select(u.alias("__wu2"), v.alias("__x2"), F.col("__rv").alias("__r2"))
     wedges = a.join(
@@ -274,7 +251,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly drop
     vertices with (undirected) degree < k and the edges touching them
@@ -286,21 +262,10 @@ def kcore(
     vertex key, only the scalar survivor count crosses to the driver.
     Rounds are bounded by the peel depth (the degeneracy ordering
     length), typically tens even on huge graphs. Lineage is truncated
-    per round exactly as in ``connected_components`` (reliable
-    ``checkpoint`` when ``checkpoint_dir`` is set)."""
-    spark = edges.sparkSession
-    set_checkpoint_dir(spark, checkpoint_dir)
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        return (
-            df.checkpoint(eager=True)
-            if checkpoint_dir is not None
-            else df.localCheckpoint(eager=True)
-        )
-
+    per round exactly as in ``connected_components``."""
     # undirected: symmetrize once, self-loops contribute nothing to core
     # (input cut first — the union references it twice)
-    edges = _cut_once(edges)
+    edges = cut_once(edges)
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -310,7 +275,7 @@ def kcore(
         )
         .distinct()
     )
-    live = _truncate(sym)
+    live = cut_once(sym, eager=True)
     prev_edges = live.count()
     for _ in range(max_iterations):
         deg = live.groupBy("a").agg(F.count("*").alias("degree"))
@@ -319,13 +284,14 @@ def kcore(
         # peel round (r13 opt). persist (not localCheckpoint) because a
         # long peel would otherwise pin one unreleasable survivor-set
         # copy PER ROUND for the session's lifetime (r13 advice);
-        # _truncate(live) is EAGER, so keep is fully consumed before the
+        # cut_once(live) is EAGER, so keep is fully consumed before the
         # unpersist below.
         keep = deg.filter(F.col("degree") >= k).select("a").persist()
-        live = _truncate(
+        live = cut_once(
             live.join(keep, on="a", how="left_semi").join(
                 keep.withColumnRenamed("a", "b"), on="b", how="left_semi"
-            )
+            ),
+            eager=True,
         )
         keep.unpersist()
         n_edges = live.count()
@@ -350,7 +316,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 10,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) over an undirected edge list — the non-overlapping
@@ -370,23 +335,19 @@ def label_propagation(
 
     Per round: one join keyed on the vertex + two aggregates — the same
     shuffle shape as ``connected_components``; lineage truncates per
-    round (reliable ``checkpoint`` when ``checkpoint_dir`` is given,
-    ``localCheckpoint`` otherwise). Only a scalar change-count reaches
-    the driver. Returns (v, label).
+    round likewise. Only a scalar change-count reaches the driver. Returns (v, label).
     """
-    set_checkpoint_dir(edges.sparkSession, checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
-    edges = _cut_once(edges)  # the symmetrizing union reads it twice
-    sym = _materialize(
+    edges = cut_once(edges)  # the symmetrizing union reads it twice
+    sym = cut_once(
         edges.select(F.col(src).alias("v"), F.col(dst).alias("u"))
         .union(edges.select(F.col(dst).alias("v"), F.col(src).alias("u")))
         .filter(F.col("v") != F.col("u"))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
-    labels = _materialize(sym.select("v").distinct().withColumn("label", F.col("v")))
+    labels = cut_once(
+        sym.select("v").distinct().withColumn("label", F.col("v")), eager=True
+    )
 
     for _ in range(max_iterations):
         nbr = sym.join(
@@ -398,14 +359,15 @@ def label_propagation(
                 "u_label", F.struct(F.col("cnt"), (-F.col("u_label")).alias("neg"))
             ).alias("label")
         )
-        updated = _materialize(
+        updated = cut_once(
             labels.withColumnRenamed("label", "old_label")
             .join(new_labels, on="v")
             .select(
                 "v",
                 "label",
                 (F.col("label") != F.col("old_label")).alias("__changed"),
-            )
+            ),
+            eager=True,
         )
         changed = updated.filter(F.col("__changed")).count()
         labels = updated.drop("__changed")
@@ -420,7 +382,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     max_hops: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Single-source BFS hop distances over a DIRECTED edge set (pass
     both directions for an undirected graph). Returns (vertex, hops)
@@ -431,9 +392,8 @@ def bfs_hops(
     joins out already-visited vertices, and stops early when the
     frontier empties. Per-round shuffle = |frontier ⋈ edges| — the
     textbook level-synchronous BFS; lineage truncates per round like
-    ``connected_components`` (reliable ``checkpoint_dir`` on a cluster,
-    ``localCheckpoint`` locally). Only a scalar emptiness probe reaches
-    the driver each round.
+    ``connected_components``. Only a scalar emptiness probe reaches the
+    driver each round.
 
     Deterministic: hop distance is a pure graph property; the bounded
     horizon (``max_hops``) is what makes a DuckDB recursive-CTE oracle
@@ -441,19 +401,16 @@ def bfs_hops(
     testable unlike most iterative graph code.
     """
     spark = edges.sparkSession
-    set_checkpoint_dir(spark, checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
     # materialize the edge set ONCE: every round joins against it, and
     # an unmaterialized lineage would re-derive the (possibly expensive)
     # upstream edge computation per round AND per emptiness probe
-    e = _materialize(
-        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).distinct()
+    e = cut_once(
+        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")).distinct(),
+        eager=True,
     )
-    dist = _materialize(
-        spark.createDataFrame([(source, 0)], "vertex long, hops int")
+    dist = cut_once(
+        spark.createDataFrame([(source, 0)], "vertex long, hops int"),
+        eager=True,
     )
     frontier = dist
     for h in range(1, max_hops + 1):
@@ -464,10 +421,10 @@ def bfs_hops(
             .join(dist, "vertex", "left_anti")
             .select("vertex", F.lit(h).alias("hops"))
         )
-        nxt = _materialize(nxt)
+        nxt = cut_once(nxt, eager=True)
         if nxt.isEmpty():
             break
-        dist = _materialize(dist.unionAll(nxt))
+        dist = cut_once(dist.unionAll(nxt), eager=True)
         frontier = nxt
     return dist
 
@@ -479,7 +436,6 @@ def sssp_weighted(
     dst: str = "dst",
     weight: str = "w",
     max_hops: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Bounded-horizon single-source shortest paths over a DIRECTED
     weighted edge set — Bellman-Ford relaxation in pure DataFrame ops.
@@ -494,23 +450,20 @@ def sssp_weighted(
     can improve a neighbor this round, so the per-round shuffle is
     |frontier ⋈ edges| + one min-aggregate, with early exit when no
     distance improves. Integer weights stay exact; lineage truncates
-    per round (reliable ``checkpoint_dir`` on a cluster).
+    per round like ``connected_components``.
     """
     spark = edges.sparkSession
-    set_checkpoint_dir(spark, checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
-    e = _materialize(
+    e = cut_once(
         edges.select(
             F.col(src).alias("__s"),
             F.col(dst).alias("__d"),
             F.col(weight).cast("long").alias("__w"),
-        )
+        ),
+        eager=True,
     )
-    dist = _materialize(
-        spark.createDataFrame([(source, 0)], "vertex long, dist long")
+    dist = cut_once(
+        spark.createDataFrame([(source, 0)], "vertex long, dist long"),
+        eager=True,
     )
     frontier = dist
     for _ in range(max_hops):
@@ -528,13 +481,14 @@ def sssp_weighted(
             .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
             .select("vertex", F.col("cand").alias("dist"))
         )
-        improved = _materialize(improved)
+        improved = cut_once(improved, eager=True)
         if improved.isEmpty():
             break
-        dist = _materialize(
+        dist = cut_once(
             dist.unionByName(improved)
             .groupBy("vertex")
-            .agg(F.min("dist").alias("dist"))
+            .agg(F.min("dist").alias("dist")),
+            eager=True,
         )
         frontier = improved
     return dist
@@ -547,7 +501,6 @@ def multi_source_bfs(
     dst: str = "dst",
     seed_col: str = "seed",
     max_hops: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """:func:`bfs_hops` from SEVERAL sources at once — the building
     block of sampled centrality (closeness/harmonic over k seeds) and
@@ -557,26 +510,18 @@ def multi_source_bfs(
     join — never k sequential traversals. Same lineage-truncation and
     early-exit discipline as :func:`bfs_hops`; returns (seed, vertex,
     hops) for every pair reachable within ``max_hops``."""
-    spark = edges.sparkSession
-    set_checkpoint_dir(spark, checkpoint_dir)
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        return (
-            df.checkpoint()
-            if checkpoint_dir is not None
-            else df.localCheckpoint()
-        )
-
-    e = _materialize(
+    e = cut_once(
         edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
-    dist = _materialize(
+    dist = cut_once(
         seeds.select(
             F.col(seed_col).alias("seed"),
             F.col(seed_col).alias("vertex"),
             F.lit(0).alias("hops"),
-        ).distinct()
+        ).distinct(),
+        eager=True,
     )
     frontier = dist
     for h in range(1, max_hops + 1):
@@ -587,9 +532,9 @@ def multi_source_bfs(
             .join(dist, ["seed", "vertex"], "left_anti")
             .select("seed", "vertex", F.lit(h).alias("hops"))
         )
-        nxt = _materialize(nxt)
+        nxt = cut_once(nxt, eager=True)
         if nxt.isEmpty():
             break
-        dist = _materialize(dist.unionAll(nxt))
+        dist = cut_once(dist.unionAll(nxt), eager=True)
         frontier = nxt
     return dist

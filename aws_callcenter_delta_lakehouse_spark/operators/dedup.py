@@ -17,23 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import cut_once
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
-
-
-def _materialize_once(df: DataFrame) -> DataFrame:
-    """Cut a multi-referenced subtree exactly once: Spark never reuses
-    non-exchange subtrees across plan branches, so an uncut
-    shingle/signature pipeline re-executes per reference (guide §2.4;
-    measured 4x on dedup_minhash_lsh r13). Delegates to the shared
-    :func:`operators.materialize.cut_once` — reliable-checkpoint
-    capable via the ``spark.managedTable.cutCheckpointDir`` session
-    conf, releasable via ``materialize.release_cuts`` (r13 verdict
-    item 3)."""
-    from .materialize import cut_once
-
-    return cut_once(df)
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -104,7 +92,7 @@ def jaccard_pairs(
         )
     # the shingle table feeds sizes + the df-cap agg + both pair-join
     # sides — cut it once (no-op when the caller already checkpointed)
-    shingles = _materialize_once(shingles)
+    shingles = cut_once(shingles)
     # true set sizes — computed BEFORE any df cap
     sizes = shingles.groupBy(id_col).agg(F.count("*").alias("n"))
     if candidates is not None:
@@ -114,7 +102,7 @@ def jaccard_pairs(
         # unmaterialized candidate pipeline (typically the whole
         # MinHash-LSH banding) would re-execute per reference.
         # Materialize it once — candidates are a tiny (d1, d2) table.
-        candidates = _materialize_once(candidates)
+        candidates = cut_once(candidates)
         # prune the shingle set to candidate docs BEFORE the pair join —
         # at scale this is the difference between |candidates| work and
         # |corpus|^2 work.
@@ -179,7 +167,7 @@ def containment_pairs(
         )
     # sizes + df-cap agg + both directional join sides read the shingle
     # table — cut it once (guide §2.4)
-    shingles = _materialize_once(shingles)
+    shingles = cut_once(shingles)
     sizes = shingles.groupBy(id_col).agg(F.count("*").alias("n"))
     hot = (
         shingles.groupBy("sh")
@@ -258,7 +246,7 @@ def prefix_filter_pairs(
         raise ValueError("threshold must be a fraction in (0, 1]")
     # the raw shingle pipeline feeds both the frequency agg and the
     # per-doc ordering join — cut it once (guide §2.4)
-    shingles = _materialize_once(shingles)
+    shingles = cut_once(shingles)
     freq = shingles.groupBy("sh").agg(F.count("*").alias("__df"))
     ordered = (
         shingles.join(freq, on="sh")
@@ -277,7 +265,7 @@ def prefix_filter_pairs(
         )
     )
     # consumed by prefix + both verify joins
-    ordered = _materialize_once(ordered)
+    ordered = cut_once(ordered)
     prefix_len = F.expr(f"__n - ((__n * {p} + {q - 1}) DIV {q}) + 1")
     prefix = ordered.select(
         F.col(id_col),
@@ -428,7 +416,7 @@ def lsh_candidates(
     # the SAME subtree on both sides, and without a cut the entire
     # shingle -> 64-hash signature pipeline executes twice (once per
     # join side — broadcast vs stream sides never share a subtree).
-    buckets = _materialize_once(
+    buckets = cut_once(
         lsh_band_buckets(signatures, id_col, bands, rows_per_band)
     )
     l = buckets.select(F.col(id_col).alias("d1"), "band", "bucket")
@@ -458,7 +446,7 @@ def minhash_lsh_dedup_pairs(
     # min() over duplicates equals min() over the distinct set, so the
     # distinct table (which Jaccard needs anyway) is materialized once
     # instead of re-scanning + re-shingling the corpus per consumer.
-    sh = _materialize_once(shingle(df, id_col, text_col, n, distinct=True))
+    sh = cut_once(shingle(df, id_col, text_col, n, distinct=True))
     sigs = minhash_signature(sh, id_col, num_hashes)
     cands = lsh_candidates(sigs, id_col, bands, num_hashes // bands)
     return jaccard_pairs(sh, id_col, candidates=cands, threshold=threshold)
@@ -495,13 +483,13 @@ def minhash_lsh_probe_pairs(
     rows_per_band = num_hashes // bands
     # shingle the (small) arriving shard once; reused by signatures and
     # the verify union below
-    new_sh = _materialize_once(
+    new_sh = cut_once(
         shingle(incoming, id_col, text_col, n, distinct=True)
     )
     new_sigs = minhash_signature(new_sh, id_col, num_hashes)
     # referenced twice (probe union + the probing side of the bucket
     # join) — cut once so the arriving shard is signatured once
-    new_buckets = _materialize_once(
+    new_buckets = cut_once(
         lsh_band_buckets(new_sigs, id_col, bands, rows_per_band)
     )
     probe_side = index_buckets.unionByName(new_buckets)
@@ -536,7 +524,7 @@ def minhash_lsh_incremental_pairs(
     builds the index tables inline from ``indexed`` (production stores
     them; ``tests/test_llm_operators.py`` exercises the stored-index
     path through a managed table)."""
-    idx_sh = _materialize_once(
+    idx_sh = cut_once(
         shingle(indexed, id_col, text_col, n, distinct=True)
     )
     sigs = minhash_signature(idx_sh, id_col, num_hashes)
@@ -631,7 +619,7 @@ def simhash_near_pairs(
     )
     # cut once: the self-join consumes this subtree on both sides, and
     # uncut the whole word-hash + 60-column sum aggregate runs twice
-    buckets = _materialize_once(
+    buckets = cut_once(
         fps.select(id_col, "simhash", F.explode(chunk_structs).alias("cb")).select(
             id_col, "simhash", F.col("cb.chunk").alias("chunk"), F.col("cb.bucket").alias("bucket")
         )
@@ -704,7 +692,7 @@ def substring_duplicate_spans(
     )
     # cut once: the duplicated-hash aggregate AND the join-back both
     # read the window table; uncut, every k-token window is hashed twice
-    wins = _materialize_once(
+    wins = cut_once(
         warr.select(id_col, "__n", F.posexplode_outer("__wh").alias("pos", "wh"))
     )
     dup_hashes = (
@@ -780,7 +768,7 @@ def hamming_near_pairs(
     )
     # cut once: both self-join sides consume this subtree; uncut, the
     # caller's fingerprint pipeline (aHash, simhash, ...) runs twice
-    buckets = _materialize_once(
+    buckets = cut_once(
         df.select(id_col, hash_col, F.explode(chunk_structs).alias("cb")).select(
             id_col,
             hash_col,
@@ -859,7 +847,7 @@ def edit1_pairs(
     )
     # cut once: both candidate-join sides read the variant table; uncut,
     # the deletion-neighborhood generation runs twice
-    exploded = _materialize_once(
+    exploded = cut_once(
         with_vars.filter(F.size("__vars") > 0).select(
             "__id", "__t", F.explode_outer("__vars").alias("__v")
         )

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import set_checkpoint_dir
+from .materialize import cut_once
 
 from .similarity import dot, norm
 
@@ -128,7 +128,6 @@ def pq_train(
     m: int = 8,
     num_codes: int = 16,
     iterations: int = 1,
-    checkpoint_dir: str | None = None,
     normalize: bool = True,
 ) -> DataFrame:
     """Train per-subspace codebooks: seed centroid (s, j) with the
@@ -138,24 +137,15 @@ def pq_train(
     m * num_codes * d_sub doubles, independent of corpus size).
     Returns (s, j, cvec).
 
-    ``checkpoint_dir``: when set, per-round codebook materialization is
-    a RELIABLE ``df.checkpoint()`` (cluster-safe — an executor loss
-    mid-training recomputes from the checkpoint, not from the seed
-    chain); when None, executor-local ``localCheckpoint``. Same
-    contract as ``connected_components``/``kmeans_refine``.
+    Per-round codebook materialization goes through ``cut_once``: the
+    session conf ``spark.managedTable.cutCheckpointDir`` makes it a
+    RELIABLE checkpoint (an executor loss mid-training recomputes from
+    the checkpoint, not from the seed chain). Same contract as
+    ``connected_components``/``kmeans_refine``.
 
     ``normalize=False`` trains on the raw vectors — the IVF-PQ path
     passes residuals, whose magnitude IS the signal (re-normalizing
     them would blow small residuals up to unit length)."""
-    set_checkpoint_dir(corpus.sparkSession, checkpoint_dir)
-
-    def _materialize(d: DataFrame) -> DataFrame:
-        return (
-            d.checkpoint()
-            if checkpoint_dir is not None
-            else d.localCheckpoint(eager=True)
-        )
-
     d_sub = dim // m
     normed = (
         _normalize(corpus, [id_col], vec_col)
@@ -191,8 +181,9 @@ def pq_train(
     # eager: the codebook feeds >=2 consumers (encode + query LUT, or
     # the next Lloyd round) — without materialization each one would
     # re-derive the whole seed chain
-    codebook = _materialize(
-        exploded.join(F.broadcast(ranks), "__seed_id").select("s", "j", "cvec")
+    codebook = cut_once(
+        exploded.join(F.broadcast(ranks), "__seed_id").select("s", "j", "cvec"),
+        eager=True,
     )
     for _ in range(iterations):
         encoded = pq_encode(normed, codebook, id_col, vec_col, dim, m)
@@ -220,9 +211,10 @@ def pq_train(
         # empty cells keep their previous centroid; eager materialization
         # so each downstream broadcast doesn't re-derive the whole
         # refinement lineage (same rationale as kmeans_refine)
-        codebook = _materialize(
+        codebook = cut_once(
             codebook.join(means, ["s", "j"], "left")
-            .select("s", "j", F.coalesce("new_cvec", "cvec").alias("cvec"))
+            .select("s", "j", F.coalesce("new_cvec", "cvec").alias("cvec")),
+            eager=True,
         )
     return codebook
 
@@ -257,7 +249,6 @@ def pq_topk(
     num_codes: int = 16,
     k: int = 10,
     iterations: int = 1,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """ADC top-k for ONE query row (column ``q``): the query side builds
     the m x num_codes LUT of exact sub-dot-products (single broadcast
@@ -266,17 +257,15 @@ def pq_topk(
     — and the top k is TakeOrderedAndProject.
 
     Approximate by construction (quantization error): rows-only; recall
-    pinned against ``brute_force_topk`` in tests. ``checkpoint_dir``
-    threads through to :func:`pq_train`."""
+    pinned against ``brute_force_topk`` in tests."""
     d_sub = dim // m
     # normalize the corpus ONCE and cut: training and encoding both
     # consume it — uncut, the full corpus normalization ran twice
     # (r13 opt, guide §2.4); identical math (pq_train(normalize=True)
     # computes exactly this frame internally)
-    normed = _normalize(corpus, [id_col], vec_col).localCheckpoint(eager=False)
+    normed = cut_once(_normalize(corpus, [id_col], vec_col))
     codebook = pq_train(
-        normed, id_col, vec_col, dim, m, num_codes, iterations,
-        checkpoint_dir=checkpoint_dir, normalize=False,
+        normed, id_col, vec_col, dim, m, num_codes, iterations, normalize=False
     )
     encoded = pq_encode(normed, codebook, id_col, vec_col, dim, m).select(
         id_col, "codes"
@@ -331,7 +320,6 @@ def ivfpq_topk(
     k: int = 10,
     iterations: int = 0,
     refine_iterations: int = 0,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """IVFADC (Jégou et al., TPAMI 2011 §IV) — the coarse-quantizer +
     residual-PQ composition that is THE standard billion-scale ANN
@@ -359,10 +347,7 @@ def ivfpq_topk(
     - per-query top-k windows over candidate rows only.
 
     Approximate by construction — rows-only in the registry; recall
-    pinned against ``brute_force_topk`` in ``tests/test_pq.py``.
-    ``checkpoint_dir`` makes every iterative/multi-consumer
-    materialization a reliable ``checkpoint()`` (cluster fault
-    tolerance), matching ``pq_train``/``kmeans_refine``."""
+    pinned against ``brute_force_topk`` in ``tests/test_pq.py``."""
     from pyspark.sql import Window
 
     from .similarity import (
@@ -376,27 +361,27 @@ def ivfpq_topk(
     d_sub = dim // m
     # cut once: the coarse-centroid head and the assignment projection
     # both consume the normalized corpus (r13 opt)
-    normed = _normalize(corpus, [id_col], vec_col).localCheckpoint(eager=False)
+    normed = cut_once(_normalize(corpus, [id_col], vec_col))
     centroids, _ = ivf_index(normed, id_col, vec_col, num_centroids)
     if refine_iterations > 0:
-        centroids = kmeans_refine(
-            normed, centroids, id_col, vec_col, refine_iterations, checkpoint_dir
-        )
+        centroids = kmeans_refine(normed, centroids, id_col, vec_col, refine_iterations)
     # normalize the centroids ONCE: assignment argmax and the
     # base-plus-residual decomposition then share the same cell
     # representative ĉ, which is what makes base + ADC == dot(q, v̂)
-    # exact at zero quantization error
-    cn = centroids.select(
-        "centroid_id", "centroid_vec", norm(F.col("centroid_vec")).alias("__n")
-    ).select(
-        "centroid_id",
-        F.transform(
-            "centroid_vec", lambda x: x.cast("double") / F.col("__n")
-        ).alias("centroid_vec"),
-        # cut once (16 rows): cn is broadcast at four sites (assignment,
-        # residual join, probe selection, probe decomposition) — uncut,
-        # each broadcast re-derived the centroid head pipeline
-    ).localCheckpoint(eager=False)
+    # exact at zero quantization error. Cut once (16 rows): cn is
+    # broadcast at four sites (assignment, residual join, probe
+    # selection, probe decomposition) — uncut, each broadcast
+    # re-derived the centroid head pipeline
+    cn = cut_once(
+        centroids.select(
+            "centroid_id", "centroid_vec", norm(F.col("centroid_vec")).alias("__n")
+        ).select(
+            "centroid_id",
+            F.transform(
+                "centroid_vec", lambda x: x.cast("double") / F.col("__n")
+            ).alias("centroid_vec"),
+        )
+    )
     assigned = _assign(normed, cn, id_col, vec_col)
     resid = assigned.join(F.broadcast(cn), "centroid_id").select(
         id_col,
@@ -406,16 +391,10 @@ def ivfpq_topk(
         ).alias("__res"),
     )
     # residuals feed BOTH codebook training and encoding — materialize
-    # once (reliable when checkpoint_dir is set) instead of paying the
-    # normalize+assign lineage per consumer
-    if checkpoint_dir is not None:
-        set_checkpoint_dir(resid.sparkSession, checkpoint_dir)
-        resid = resid.checkpoint(eager=True)
-    else:
-        resid = resid.localCheckpoint(eager=True)
+    # once instead of paying the normalize+assign lineage per consumer
+    resid = cut_once(resid, eager=True)
     codebook = pq_train(
-        resid, id_col, "__res", dim, m, num_codes, iterations,
-        checkpoint_dir=checkpoint_dir, normalize=False,
+        resid, id_col, "__res", dim, m, num_codes, iterations, normalize=False
     )
     encoded = pq_encode(resid, codebook, id_col, "__res", dim, m).select(
         id_col, "centroid_id", "codes"

@@ -29,6 +29,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import cut_once
+
 
 def _offsets(totals: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Exclusive prefix sum over the (pid, __ptotal) table — TWO-LEVEL.
@@ -146,10 +148,9 @@ def global_running_sum(
         # materialize once: totals AND the offset join both consume the
         # cumsum rows — without this the range shuffle + Python pass
         # executes twice (same discipline as pq.py / sessions_overlap)
-        rows = (
+        rows = cut_once(
             ranged.sortWithinPartitions(*keys)
             .mapInPandas(_prefix, schema)
-            .localCheckpoint(eager=False)
         )
         totals = rows.groupBy("__pid").agg(F.sum(value_col).alias("__ptotal"))
         return (
@@ -162,7 +163,7 @@ def global_running_sum(
     # re-evaluate `ranged` (the sampling RangePartitioner is
     # nondeterministic, so AQE never plans a ReusedExchange across
     # them). Callers whose input is an expensive pipeline should
-    # localCheckpoint(eager=False) it BEFORE calling (see
+    # cut it with ``cut_once`` BEFORE calling (see
     # funnel_latency_percentiles / orders_abc_analysis) — checkpointing
     # HERE would hide the range exchange from callers' final plans,
     # which the scale tests pin.

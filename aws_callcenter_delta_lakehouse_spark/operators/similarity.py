@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .materialize import set_checkpoint_dir
+from .materialize import cut_once
 
 from ..functions.scalars import round_portable
 
@@ -473,7 +473,6 @@ def kmeans_refine(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iterations: int = 2,
-    checkpoint_dir: str | None = None,
     portable: bool = False,
 ) -> DataFrame:
     """Lloyd's k-means over DataFrame ops: assign (zero-shuffle argmax
@@ -486,14 +485,14 @@ def kmeans_refine(
 
     Returns refined centroids (centroid_id, centroid_vec). Each round's
     output (a centroids x dim table — 16x64 doubles here) is eagerly
-    materialized with ``localCheckpoint``: without it, every downstream
-    broadcast of the centroids (next iteration's assign, the final
-    index assign, the query-side probe selection) re-derives the whole
-    refinement lineage, multiplying corpus passes by the number of
-    consumers. With it, Lloyd's costs exactly one corpus pass per
-    iteration. (Same executor-local caveat as the graph operators —
-    callers on a real cluster pass ``checkpoint_dir`` for a reliable
-    fault-tolerant truncation instead, as in ``connected_components``.)
+    cut with ``cut_once``: without it, every downstream broadcast of the
+    centroids (next iteration's assign, the final index assign, the
+    query-side probe selection) re-derives the whole refinement
+    lineage, multiplying corpus passes by the number of consumers. With
+    it, Lloyd's costs exactly one corpus pass per iteration. (Same
+    contract as the graph operators: executor-local by default, a
+    reliable fault-tolerant truncation when the session conf
+    ``spark.managedTable.cutCheckpointDir`` is set.)
 
     ``portable=True`` switches the Lloyd mean to FIXED-POINT averaging:
     each member value is quantized at 2^-20 (``floor(x * 2^20 + 0.5)``
@@ -506,7 +505,6 @@ def kmeans_refine(
     is <=2^-21 per element — immaterial next to Lloyd's own movement.
     Default False keeps the plain ``avg`` fast path (one fewer
     projection; same plan shape)."""
-    set_checkpoint_dir(corpus.sparkSession, checkpoint_dir)
     _S = 1048576.0  # 2^20 fixed-point scale (portable mode)
     for _ in range(iterations):
         assigned = (
@@ -537,11 +535,7 @@ def kmeans_refine(
                 F.transform("pm", lambda s: s["m"]).alias("centroid_vec"),
             )
         )
-        centroids = (
-            means.checkpoint(eager=True)
-            if checkpoint_dir is not None
-            else means.localCheckpoint(eager=True)
-        )
+        centroids = cut_once(means, eager=True)
     return centroids
 
 

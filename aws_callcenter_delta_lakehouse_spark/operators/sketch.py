@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import cut_once
+
 
 def cms_build(
     df: DataFrame, term_col: str, depth: int = 4, width: int = 1024
@@ -123,12 +125,10 @@ def cms_heavy_hitters(
     # cut the token stream once: the sketch build, the vocabulary
     # distinct AND the exact pass all consume it — uncut, the corpus
     # tokenize/explode ran 3x per execution (r13 opt, guide §2.4)
-    toks = toks.select(F.col(term_col).alias("term")).localCheckpoint(eager=False)
+    toks = cut_once(toks.select(F.col(term_col).alias("term")))
     # tiny (<= depth*width rows) and consumed three times below —
     # materialize once instead of re-scanning the corpus per consumer
-    sketch = cms_build(toks, "term", depth=depth, width=width).localCheckpoint(
-        eager=False
-    )
+    sketch = cut_once(cms_build(toks, "term", depth=depth, width=width))
     total = (
         sketch.filter(F.col("row") == 0)
         .agg(F.sum("cnt").alias("n"))

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import cut_once
+
 
 def _portable_word_hash(col: F.Column) -> F.Column:
     """32-bit hash both Spark and DuckDB compute identically:
@@ -63,7 +65,7 @@ def duplicated_ngram_spans(
     ).where(F.size("l") >= n)
     # cut once: grams feeds the corpus occurrence count AND the mapback
     # join — uncut, the gram explode ran twice (r13 opt, guide §2.4)
-    grams = words.select(
+    grams = cut_once(words.select(
         id_col,
         F.explode(
             F.transform(
@@ -71,7 +73,7 @@ def duplicated_ngram_spans(
                 lambda i: F.array_join(F.slice("l", i, n), " "),
             )
         ).alias("gram"),
-    ).localCheckpoint(eager=False)
+    ))
     dup = (
         grams.groupBy("gram")
         .agg(F.count("*").alias("occ"))
@@ -165,12 +167,12 @@ def segment_dedup(
     # cut once: the first-occurrence aggregate AND the keep-flag join
     # both read the chunk table — uncut, the whole content-defined
     # chunking (explode + window + reassembly agg) ran twice (r13 opt)
-    chunks = cdc_chunks(df, id_col, text_col, divisor).select(
+    chunks = cut_once(cdc_chunks(df, id_col, text_col, divisor).select(
         id_col,
         "chunk_id",
         "chunk_text",
         (F.col(id_col) * 100000 + F.col("chunk_id")).alias("__pos_key"),
-    ).localCheckpoint(eager=False)
+    ))
     first = chunks.groupBy("chunk_text").agg(F.min("__pos_key").alias("__first"))
     kept_flag = chunks.join(first, "chunk_text").withColumn(
         "__keep", (F.col("__pos_key") == F.col("__first")).cast("int")

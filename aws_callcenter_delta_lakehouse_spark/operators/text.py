@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import round_portable
+from .materialize import cut_once
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
 
@@ -92,9 +93,9 @@ def language_id(
     # cut once: the token-count agg and the profile-hit join both read
     # the exploded token table — uncut, the corpus word explode ran
     # twice per scoring pass (r13 opt, guide §2.4)
-    toks = df.select(
+    toks = cut_once(df.select(
         id_col, F.explode(_words(F.col(text_col))).alias("word")
-    ).localCheckpoint(eager=False)
+    ))
     n_tokens = toks.groupBy(id_col).agg(F.count("*").alias("n"))
     hits = (
         toks.join(F.broadcast(profiles), on="word")
@@ -471,10 +472,10 @@ def rake_keywords(
     # runs feeds plen + members, plen feeds members + scored, members
     # feeds wstats + pscore — uncut, the tokenize/window pipeline ran
     # up to 6x per execution (SQL-metric evidence)
-    runs = nonstop.withColumn(
+    runs = cut_once(nonstop.withColumn(
         "__grp", F.col("__pos") - F.row_number().over(w_run)
-    ).localCheckpoint(eager=False)
-    plen = runs.groupBy("__id", "__grp").agg(
+    ))
+    plen = cut_once(runs.groupBy("__id", "__grp").agg(
         F.count("*").alias("__plen"),
         F.array_join(
             F.transform(
@@ -483,10 +484,10 @@ def rake_keywords(
             ),
             " ",
         ).alias("phrase"),
-    ).localCheckpoint(eager=False)
-    members = runs.join(
+    ))
+    members = cut_once(runs.join(
         plen.select("__id", "__grp", "__plen"), on=["__id", "__grp"]
-    ).localCheckpoint(eager=False)
+    ))
     wstats = members.groupBy("__w").agg(
         F.count("*").cast("bigint").alias("__freq"),
         F.sum("__plen").cast("bigint").alias("__deg"),

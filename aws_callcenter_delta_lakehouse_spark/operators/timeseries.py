@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import cut_once
+
 
 def gap_fill_forward(
     daily: DataFrame, key_col: str, date_col: str, value_col: str
@@ -236,11 +238,11 @@ def theil_sen(
     intercept."""
     # cut once (r13 opt): pts feeds both pair-join sides, the residual
     # join AND the count agg — uncut, the caller's pipeline ran 4x
-    pts = df.select(
+    pts = cut_once(df.select(
         F.col(group_col).alias("__g"),
         F.col(x_col).cast("double").alias("__x"),
         F.col(y_col).cast("double").alias("__y"),
-    ).localCheckpoint(eager=False)
+    ))
     a = pts.select("__g", F.col("__x").alias("x1"), F.col("__y").alias("y1"))
     b = pts.select("__g", F.col("__x").alias("x2"), F.col("__y").alias("y2"))
     slopes = (
@@ -663,16 +665,16 @@ def mad_anomalies(
     # cut once (r13 opt): pts feeds the median selection AND the
     # deviation join; dev feeds the MAD selection, the count agg AND
     # the final report — uncut, the caller's pipeline ran up to 3x
-    pts = df.select(
+    pts = cut_once(df.select(
         F.col(group_col).alias("__g"),
         F.col(order_col).alias("__o"),
         F.col(value_col).cast("double").alias("__y"),
-    ).localCheckpoint(eager=False)
+    ))
     med = _median_by_selection(pts, "__g", "__y", "med")
-    dev = pts.join(med.select("__g", "med"), on="__g").select(
+    dev = cut_once(pts.join(med.select("__g", "med"), on="__g").select(
         "__g", "__o", "__y", "med",
         F.abs(F.col("__y") - F.col("med")).alias("__d"),
-    ).localCheckpoint(eager=False)
+    ))
     mad = _median_by_selection(
         dev.select("__g", F.col("__d").alias("__v")), "__g", "__v", "mad"
     )

@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 
 from ..operators.curation import curate, decontaminate
 from ..operators.dedup import minhash_lsh_dedup_pairs
+from ..operators.materialize import cut_once, scoped_cuts
 
 
 def curate_corpus(
@@ -60,61 +61,62 @@ def curate_corpus(
     only so the scan prunes the text column.
     """
     spark = docs.sparkSession
+    # every cut below (and those inside ``curate`` and the LSH pairs) is
+    # released once the export is written: nothing returned references
+    # them — the manifest re-reads ``out_dir`` and the counts are ints
+    with scoped_cuts(spark):
+        survivors = cut_once(curate(docs, id_col, text_col, num_shards=num_shards))
+        n_exact = survivors.count()
 
-    survivors = curate(
-        docs, id_col, text_col, num_shards=num_shards
-    ).localCheckpoint(eager=False)
-    n_exact = survivors.count()
+        surviving_docs = docs.join(
+            survivors.select(id_col), on=id_col, how="left_semi"
+        )
+        pairs = minhash_lsh_dedup_pairs(
+            surviving_docs, id_col, text_col, threshold=near_dup_threshold
+        )
+        near_dup_losers = pairs.select(
+            F.col("d2").alias(id_col)
+        ).distinct()  # d1 < d2 by construction: the higher id always drops
+        after_near = cut_once(
+            survivors.join(near_dup_losers, on=id_col, how="left_anti")
+        )
+        n_near = after_near.count()
 
-    surviving_docs = docs.join(
-        survivors.select(id_col), on=id_col, how="left_semi"
-    )
-    pairs = minhash_lsh_dedup_pairs(
-        surviving_docs, id_col, text_col, threshold=near_dup_threshold
-    )
-    near_dup_losers = pairs.select(
-        F.col("d2").alias(id_col)
-    ).distinct()  # d1 < d2 by construction: the higher id always drops
-    after_near = survivors.join(
-        near_dup_losers, on=id_col, how="left_anti"
-    ).localCheckpoint(eager=False)
-    n_near = after_near.count()
+        contaminated = decontaminate(
+            docs.join(after_near.select(id_col), on=id_col, how="left_semi"),
+            benchmark,
+            id_col,
+            text_col,
+            n=decontam_n,
+        )
+        clean = cut_once(
+            after_near.join(contaminated.select(id_col), on=id_col, how="left_anti")
+        )
+        n_clean = clean.count()
 
-    contaminated = decontaminate(
-        docs.join(after_near.select(id_col), on=id_col, how="left_semi"),
-        benchmark,
-        id_col,
-        text_col,
-        n=decontam_n,
-    )
-    clean = after_near.join(
-        contaminated.select(id_col), on=id_col, how="left_anti"
-    ).localCheckpoint(eager=False)
-    n_clean = clean.count()
+        ordered = clean.withColumn(
+            "__k",
+            F.md5(
+                F.concat(
+                    F.lit(f"epoch{epoch}|"), F.col(id_col).cast("string")
+                )
+            ),
+        ).withColumn(
+            "pos",
+            F.row_number().over(
+                Window.partitionBy("shard").orderBy("__k", id_col)
+            ),
+        )
 
-    ordered = clean.withColumn(
-        "__k",
-        F.md5(
-            F.concat(
-                F.lit(f"epoch{epoch}|"), F.col(id_col).cast("string")
-            )
-        ),
-    ).withColumn(
-        "pos",
-        F.row_number().over(
-            Window.partitionBy("shard").orderBy("__k", id_col)
-        ),
-    )
-
-    export = docs.join(
-        ordered.select(id_col, "shard", "pos"), on=id_col
-    )
-    (
-        export.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(out_dir)
-    )
+        export = docs.join(
+            ordered.select(id_col, "shard", "pos"), on=id_col
+        )
+        (
+            export.repartition("shard")
+            .write.mode("overwrite")
+            .partitionBy("shard")
+            .parquet(out_dir)
+        )
     manifest = (
         spark.read.parquet(out_dir)
         .groupBy("shard")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.scalars import round_portable
 from ..operators.asof import asof_join
+from ..operators.materialize import cut_once
 from ..operators.rangejoin import range_join
 from ..operators.sessionize import sessionize
 from .registry import query
@@ -466,11 +467,10 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     would degenerate to trivially-true)."""
     # cut once: li feeds the degree agg AND both pair self-join sides —
     # uncut, the distinct shuffle ran 3x per execution (r13 opt)
-    li = (
+    li = cut_once(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = li.groupBy("l_suppkey").agg(F.count("*").cast("bigint").alias("n"))
     pairs = (
@@ -624,15 +624,14 @@ def recsys_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut once: li feeds the degree agg AND both co-occurrence self-join
     # sides; deg feeds both rank joins — uncut, the distinct shuffle ran
     # 5x per execution (r13 opt, SQL-metric evidence)
-    li = (
+    li = cut_once(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    deg = li.groupBy("l_partkey").agg(
+    deg = cut_once(li.groupBy("l_partkey").agg(
         F.count("*").cast("bigint").alias("n")
-    ).localCheckpoint(eager=False)
+    ))
     co = (
         li.alias("a")
         .join(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.materialize import cut_once
 from .registry import query
 
 
@@ -129,13 +130,13 @@ def delta_append_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cut once (r13 opt): three quarter-slices feed the three commits —
     # uncut, the orders scan+projection ran 4x
-    orders = load_table(spark, sf_dir, "orders").select(
+    orders = cut_once(load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
         .alias("cents"),
-    ).localCheckpoint(eager=False)
+    ))
     path = tempfile.mkdtemp(prefix="append_ingest_") + "/t"
     mt.commit_overwrite(
         orders.filter(F.col("o_orderkey") % 4 == 0), path,

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_parallel
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from ..operators.projection import pca_fit, pca_transform, rademacher_matrix, random_project
 from .registry import query
 
@@ -160,16 +161,15 @@ def graph_community_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     a = li.alias("a")
     b = li.alias("b")
-    copurchase = (
+    # cut once: the p95 threshold probe AND the edge filter both
+    # read it — uncut, the projection self-join ran twice (r13 opt)
+    copurchase = cut_once(
         a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
         .filter(F.col("a.l_suppkey") < F.col("b.l_suppkey"))
         .groupBy(
             F.col("a.l_suppkey").alias("src"), F.col("b.l_suppkey").alias("dst")
         )
         .agg(F.count("*").alias("w"))
-        # cut once: the p95 threshold probe AND the edge filter both
-        # read it — uncut, the projection self-join ran twice (r13 opt)
-        .localCheckpoint(eager=False)
     )
     thr = copurchase.agg(
         F.expr("percentile(w, 0.95)").alias("__thr")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_parallel
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from .registry import query
 
 _MIN_SUPPORT = 8  # orders containing the part
@@ -72,11 +73,10 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded before ranking (p1, p2 break ties)."""
     # cut once: items feeds the support agg, the n_orders scalar AND the
     # frequent-item join — uncut, the distinct shuffle ran 4x (r13 opt)
-    items = (
+    items = cut_once(
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     freq = (
         items.groupBy("pk")
@@ -85,7 +85,7 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = items.agg(F.countDistinct("ok").alias("n_orders"))
     # cut once: both pair-join sides read the frequent-item slice
-    fitems = items.join(F.broadcast(freq), "pk").localCheckpoint(eager=False)
+    fitems = cut_once(items.join(F.broadcast(freq), "pk"))
     a = fitems.select("ok", F.col("pk").alias("p1"), F.col("n_item").alias("n1"))
     b = fitems.select("ok", F.col("pk").alias("p2"), F.col("n_item").alias("n2"))
     pairs = (
@@ -146,17 +146,15 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut once: edges feeds the degree agg AND the hub-filter join;
     # small feeds both pair-join sides (r13 opt — uncut, the distinct
     # shuffle ran 4x per execution)
-    edges = (
+    edges = cut_once(
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sk"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = edges.groupBy("ok").agg(F.count("*").alias("d"))
-    small = (
+    small = cut_once(
         edges.join(deg, "ok")
         .filter(F.col("d") <= _AA_MAX_BASKET)
-        .localCheckpoint(eager=False)
     )
     a = small.select("ok", F.col("sk").alias("s1"), "d")
     b = small.select("ok", F.col("sk").alias("s2"))
@@ -211,7 +209,7 @@ def text_bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table_parallel(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("l")
     )
-    big = docs.select(
+    big = cut_once(docs.select(
         "doc_id",
         F.explode(
             F.zip_with(
@@ -220,7 +218,7 @@ def text_bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
             )
         ).alias("bg"),
-    ).select("doc_id", "bg.w1", "bg.w2").localCheckpoint(eager=False)
+    ).select("doc_id", "bg.w1", "bg.w2"))
     # (cut once — r13 opt: big feeds the bigram counts, unigram counts,
     # vocab scalar AND the scoring join; uncut the corpus bigram explode
     # ran 4x per execution)
@@ -364,23 +362,22 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s1"))
     b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s2"))
-    e0 = (
+    # cut once: the symmetrizing union reads e0 twice — uncut, the
+    # co-supply self-join + countDistinct ran twice (r13 opt)
+    e0 = cut_once(
         a.join(b, "ok")
         .filter(F.col("s1") < F.col("s2"))
         .groupBy("s1", "s2")
         .agg(F.countDistinct("ok").alias("__w"))
         .filter(F.col("__w") >= 5)
         .select("s1", "s2")
-        # cut once: the symmetrizing union reads e0 twice — uncut, the
-        # co-supply self-join + countDistinct ran twice (r13 opt)
-        .localCheckpoint(eager=False)
     )
     und = e0.select(F.col("s1").alias("src"), F.col("s2").alias("dst")).unionAll(
         e0.select(F.col("s2").alias("src"), F.col("s1").alias("dst"))
     )
     # materialize the (expensive) edge derivation once; the source
     # scalar and every BFS round read the materialized set
-    und = und.localCheckpoint(eager=True)
+    und = cut_once(und, eager=True)
     source = und.agg(F.min("src")).first()[0]
     return bfs_hops(und, source, max_hops=6)
 
@@ -609,20 +606,19 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s1"))
     b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s2"))
-    e0 = (
+    # cut once: the symmetrizing union reads e0 twice (r13 opt)
+    e0 = cut_once(
         a.join(b, "ok")
         .filter(F.col("s1") < F.col("s2"))
         .groupBy("s1", "s2")
         .agg(F.countDistinct("ok").alias("__w"))
         .filter(F.col("__w") >= 5)
         .select("s1", "s2")
-        # cut once: the symmetrizing union reads e0 twice (r13 opt)
-        .localCheckpoint(eager=False)
     )
     und = e0.select(
         F.col("s1").alias("src"), F.col("s2").alias("dst")
     ).unionAll(e0.select(F.col("s2").alias("src"), F.col("s1").alias("dst")))
-    und = und.localCheckpoint(eager=True)
+    und = cut_once(und, eager=True)
     seeds = (
         und.select(F.col("src").alias("seed"))
         .distinct()

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_all
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from .registry import query
 
 
@@ -315,13 +316,13 @@ def dq_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed by the diff projection whose result feeds both the max
     # probe and the argmax filter (r13 opt — uncut, the double
     # prefix-sum chain executed twice)
-    c = ev.groupBy("value").agg(
+    c = cut_once(ev.groupBy("value").agg(
         F.count(F.when(F.col("event_type") == "view", 1)).alias("ca"),
         F.count(F.when(F.col("event_type") == "purchase", 1)).alias("cb"),
-    ).localCheckpoint(eager=False)
+    ))
     r = global_running_sum(c, ["value"], "ca", "cum_a", num_partitions=32)
     r = global_running_sum(r, ["value"], "cb", "cum_b", num_partitions=32)
-    r = r.localCheckpoint(eager=False)
+    r = cut_once(r)
     t = c.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
     d = r.join(F.broadcast(t), F.lit(True)).select(
         "value",
@@ -476,9 +477,9 @@ def tpch_rf_refresh_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cut once (r13 opt): orders feeds the initial load, the RF1 batch
     # and the merge-source re-evaluations — uncut it scanned 7x
-    orders = load_table(spark, sf_dir, "orders").select(
+    orders = cut_once(load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
-    ).localCheckpoint(eager=False)
+    ))
     path = tempfile.mkdtemp(prefix="tpch_rf_") + "/orders"
     mt.initial_write(orders, path, keys=("o_orderkey",))
     # RF1: a new-sales batch (keys offset past the live range)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.materialize import cut_once
 from .registry import query
 
 
@@ -177,7 +178,7 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("dv", 2).over(w).alias("l2"),
         F.lead("dv", 3).over(w).alias("l3"),
     )
-    led = led.localCheckpoint()
+    led = cut_once(led, eager=True)
     den = led.agg(F.sum(F.col("dv") * F.col("dv")).alias("d"))
     num = led.select(
         F.expr(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, load_table_parallel
 from ..functions.scalars import round_portable
 from ..operators.dedup import prefix_filter_pairs, shingle
+from ..operators.materialize import cut_once
 from .registry import query
 
 
@@ -406,11 +407,11 @@ def sketch_kmv_rolling_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # cut once: ev feeds the daily sketch build AND the day spine —
     # uncut, the events scan ran twice (r13 opt)
-    ev = load_table(spark, sf_dir, "events").select(
+    ev = cut_once(load_table(spark, sf_dir, "events").select(
         "event_type",
         "user_id",
         F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("dayn"),
-    ).localCheckpoint(eager=False)
+    ))
     daily = kmv_sketch(ev, "user_id", ["event_type", "dayn"], k=256, portable=True)
     spine = ev.select("dayn").distinct().withColumnRenamed("dayn", "wend")
     contrib = daily.select(

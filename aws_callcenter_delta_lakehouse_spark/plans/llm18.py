@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table, load_table_parallel
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from .registry import query
 
 
@@ -288,12 +289,12 @@ def layout_zone_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the stats manifest, not the table."""
     # cut once (r13 opt): li feeds the min/max probe AND both synthetic
     # layouts — uncut, the lineitem scan ran 3x
-    li = load_table(spark, sf_dir, "lineitem").select(
+    li = cut_once(load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         F.datediff(
             F.to_date("l_shipdate"), F.lit("1970-01-01").cast("date")
         ).alias("day"),
-    ).localCheckpoint(eager=False)
+    ))
     mm = li.agg(
         F.min("day").alias("mind"), F.max("day").alias("maxd")
     )

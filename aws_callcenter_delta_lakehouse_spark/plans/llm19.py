@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table_parallel
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from .registry import query
 
 _COS64 = (
@@ -179,9 +180,7 @@ def corpus_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table_parallel(spark, sf_dir, "documents")
     # cut once: sh feeds sizes + both pair-join sides (3 refs — r13 opt)
-    sh = shingle(docs, "source", "text", n=3, distinct=True).localCheckpoint(
-        eager=False
-    )
+    sh = cut_once(shingle(docs, "source", "text", n=3, distinct=True))
     sizes = sh.groupBy("source").agg(F.count("*").alias("n"))
     a = sh.select(F.col("source").alias("s1"), "sh")
     b = sh.select(F.col("source").alias("s2"), "sh")

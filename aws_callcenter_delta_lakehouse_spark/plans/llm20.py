@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table, load_table_parallel
+from ..operators.materialize import cut_once
 from .registry import query
 
 _N_HASHES = 16
@@ -109,9 +110,7 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import jaccard_pairs, shingle
 
     docs = load_table_parallel(spark, sf_dir, "documents")
-    sh = shingle(docs, "doc_id", "text", n=3, distinct=True).localCheckpoint(
-        eager=False
-    )
+    sh = cut_once(shingle(docs, "doc_id", "text", n=3, distinct=True))
     base = sh.select("doc_id", _pmd5(F.col("sh")).alias("b"))
     bstr = base.select("doc_id", F.col("b").cast("string").alias("bs"))
     hashed = bstr.select(
@@ -140,26 +139,24 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut the 16x(md5+conv) signature pipeline once: the bucket
     # self-join consumes the same subtree on both sides (r13 opt —
     # unmaterialized, it executed twice)
-    buckets = sigs.select(
+    buckets = cut_once(sigs.select(
         "doc_id", F.explode(band_keys).alias("bkt")
-    ).localCheckpoint(eager=False)
+    ))
     left = buckets.select(F.col("doc_id").alias("d1"), "bkt")
     right = buckets.select(F.col("doc_id").alias("d2"), "bkt")
     # cands / truth each feed two consumers below (the hits join + their
     # own count) — materialize so neither pipeline re-executes
-    cands = (
+    cands = cut_once(
         left.join(right, "bkt")
         .filter(F.col("d1") < F.col("d2"))
         .select("d1", "d2")
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    truth = (
+    truth = cut_once(
         jaccard_pairs(
             sh, "doc_id", candidates=None, threshold=0.5, max_shingle_df=10
         )
         .select("d1", "d2")
-        .localCheckpoint(eager=False)
     )
     hits = cands.join(truth, ["d1", "d2"])
     nt = truth.agg(F.count("*").alias("n_true"))

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table_parallel
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from .registry import query
 
 _N_HASHES = 16
@@ -102,9 +103,7 @@ def decontaminate_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import jaccard_pairs, shingle
 
     docs = load_table_parallel(spark, sf_dir, "documents")
-    sh = shingle(docs, "doc_id", "text", n=3, distinct=True).localCheckpoint(
-        eager=False
-    )
+    sh = cut_once(shingle(docs, "doc_id", "text", n=3, distinct=True))
     base = sh.select("doc_id", _pmd5(F.col("sh")).alias("b"))
     bstr = base.select("doc_id", F.col("b").cast("string").alias("bs"))
     hashed = bstr.select(
@@ -132,9 +131,9 @@ def decontaminate_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cut the 16x(md5+conv) signature pipeline once: the corpus/bench
     # split below consumes the same subtree twice (r13 opt)
-    buckets = sigs.select(
+    buckets = cut_once(sigs.select(
         "doc_id", F.explode(band_keys).alias("bkt")
-    ).localCheckpoint(eager=False)
+    ))
     is_bench = F.col("doc_id") % 17 == 0
     corpus_bk = buckets.filter(~is_bench).select(
         F.col("doc_id").alias("cid"), "bkt"

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_parallel
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from .registry import query
 
 
@@ -130,9 +131,7 @@ def corpus_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cut once: sc feeds the per-source totals, global word counts,
     # global total AND the scoring join (4 refs — r13 opt)
-    sc = words.groupBy("source", "w").agg(F.count("*").alias("c")).localCheckpoint(
-        eager=False
-    )
+    sc = cut_once(words.groupBy("source", "w").agg(F.count("*").alias("c")))
     st = sc.groupBy("source").agg(F.sum("c").alias("t"))
     gc = sc.groupBy("w").agg(F.sum("c").alias("g"))
     gt = sc.agg(F.sum("c").alias("gt"))

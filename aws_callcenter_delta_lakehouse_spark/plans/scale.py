@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from ..operators.prefix import global_running_sum
 from .registry import query
 
@@ -153,7 +154,7 @@ def sessions_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sessionization once (bounds is sessions-sized, far smaller than
     # events; 10.9s -> 3.3s at sf0.1, and at cluster scale the
     # equivalent is a cache/reliable checkpoint of the same table)
-    bounds = bounds.localCheckpoint(eager=True)
+    bounds = cut_once(bounds, eager=True)
     pairs = interval_overlap_join(
         bounds, bounds, "lo", "hi", bucket_width=3_600_000_000
     )
@@ -248,22 +249,22 @@ def incremental_gold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut once: base / inserts / updates all slice this projection, and
     # the merge machinery re-evaluates its source — uncut, the orders
     # scan ran 8x per execution (r13 opt, SQL-metric evidence)
-    orders = load_table(spark, sf_dir, "orders").select(
+    orders = cut_once(load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderpriority").alias("grp"),
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
         .alias("cents"),
-    ).localCheckpoint(eager=False)
+    ))
     path = tempfile.mkdtemp(prefix="inc_gold_") + "/t"
     base = orders.filter(F.col("o_orderkey") % 5 != 0)
     mt.initial_write(base, path, keys=("o_orderkey",))
     v0 = mt.table_version(path)
-    old_agg = (
+    old_agg = cut_once(
         mt.read(spark, path)
         .groupBy("grp")
-        .agg(F.count("*").alias("n_rows"), F.sum("cents").alias("sum_cents"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("n_rows"), F.sum("cents").alias("sum_cents")),
+        eager=True,
     )
     inserts = orders.filter(F.col("o_orderkey") % 5 == 0)
     updates = orders.filter(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.scalars import round_portable
+from ..operators.materialize import cut_once
 from .registry import query
 
 
@@ -327,7 +328,7 @@ def funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one evaluation of the events pipeline: the rank and the total
     # both read the checkpoint (the sampling range partitioner defeats
     # AQE exchange reuse, so lineage sharing alone re-executes it)
-    conv = conv.localCheckpoint(eager=False)
+    conv = cut_once(conv)
     ranked = global_running_sum(
         conv.withColumn("__one", F.lit(1).cast("long")),
         ["lat_us", "user_id"],
@@ -406,7 +407,7 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # one lineitem rollup evaluation shared by rank + grand total
-    rev = rev.localCheckpoint(eager=False)
+    rev = cut_once(rev)
     ranked = global_running_sum(
         rev.withColumn("__neg", -F.col("cents")),
         ["__neg", "l_partkey"],

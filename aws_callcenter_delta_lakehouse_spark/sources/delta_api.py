@@ -306,35 +306,33 @@ def general_merge(
     # join read ONE materialization; the blocks are RDD persistence
     # (clearCache doesn't touch them — perf trap 4), so they must be
     # dropped after the commit or a many-merges loop pins memory.
-    sc = spark.sparkContext
-    persisted_before = set(sc._jsc.getPersistentRDDs().keys())
-    source = source.localCheckpoint(eager=False)
+    # (Imported here: the write path does not load the operator package
+    # otherwise.)
+    from ..operators.materialize import cut_once, scoped_cuts
 
-    def _attempt() -> None:
-        # Delta-style commit retry: re-derive marker/version/layout from
-        # the LIVE table each attempt — a CAS loss re-runs the merge
-        # against the winner's snapshot (WriteSerializable). The
-        # checkpointed source is attempt-stable, so every retry merges
-        # the same source rows.
-        managed_table.recover(path)
-        m = managed_table._read_marker(path)
-        _general_merge_body(
-            spark, path, source, condition, m,
-            managed_table.table_version(path),
-            matched_cl, insert_cl, by_src_cl,
-            target_alias, source_alias,
-            list(m.get("keys", [])),
-            tuple(m.get("partition_by", ()) or ()),
-            managed_table._cdf_on(m),
-            max_history, txn, evolved,
-        )
+    with scoped_cuts(spark):
+        source = cut_once(source)
 
-    try:
+        def _attempt() -> None:
+            # Delta-style commit retry: re-derive marker/version/layout from
+            # the LIVE table each attempt — a CAS loss re-runs the merge
+            # against the winner's snapshot (WriteSerializable). The
+            # checkpointed source is attempt-stable, so every retry merges
+            # the same source rows.
+            managed_table.recover(path)
+            m = managed_table._read_marker(path)
+            _general_merge_body(
+                spark, path, source, condition, m,
+                managed_table.table_version(path),
+                matched_cl, insert_cl, by_src_cl,
+                target_alias, source_alias,
+                list(m.get("keys", [])),
+                tuple(m.get("partition_by", ()) or ()),
+                managed_table._cdf_on(m),
+                max_history, txn, evolved,
+            )
+
         managed_table._retry_dml(_attempt, path)
-    finally:
-        for rid, jrdd in sc._jsc.getPersistentRDDs().items():
-            if rid not in persisted_before:
-                jrdd.unpersist(False)
 
 
 def _general_merge_body(

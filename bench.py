@@ -24,6 +24,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from aws_callcenter_delta_lakehouse_spark.operators.materialize import (  # noqa: E402
+    release_cuts,
+)
 from aws_callcenter_delta_lakehouse_spark.plans.all import REGISTRY  # noqa: E402
 from aws_callcenter_delta_lakehouse_spark.session import get_spark  # noqa: E402
 
@@ -53,6 +56,20 @@ HEADLINE = (
 # warm isolated probes land 0.64-0.68s every time); warming it ends the
 # every-round re-adjudication without touching the frozen headline.
 WARM_EXTRA = ("text_compression_ratio",)
+
+
+def cleanup(spark) -> None:
+    """Drop a query's leftovers (memory-sink tables, temp views, cached
+    plans): 100+ queries in one JVM otherwise accumulate sink buffers
+    and drag later (streaming) queries 2-3x. ``clearCache`` misses the
+    lineage-cut RDD blocks (RDD persistence, not SQL cache), so
+    ``release_cuts`` unpersists them or they pin executor memory for
+    every later query."""
+    spark.catalog.clearCache()
+    release_cuts(spark)
+    for t in spark.catalog.listTables():
+        if t.isTemporary:
+            spark.catalog.dropTempView(t.name)
 
 
 def _host_evidence() -> dict:
@@ -103,20 +120,6 @@ def main() -> None:
         "noop"
     ).save()
 
-    def _cleanup() -> None:
-        # Drop the query's leftovers (memory-sink tables, temp views,
-        # cached plans): 100+ queries in one JVM otherwise accumulate
-        # sink buffers and drag later (streaming) queries 2-3x.
-        spark.catalog.clearCache()
-        # clearCache misses localCheckpoint RDD blocks (they are RDD
-        # persistence, not SQL cache) — unpersist them explicitly or
-        # they pin executor memory for every later query
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-
     timings: dict[str, float] = {}
 
     def _run(name: str) -> None:
@@ -125,7 +128,7 @@ def main() -> None:
             "noop"
         ).save()
         timings[name] = round(time.perf_counter() - t0, 3)
-        _cleanup()
+        cleanup(spark)
 
     # Warm the headline plans untimed (codegen + parquet-reader JIT):
     # the headline number is the frozen cross-round metric and must
@@ -136,7 +139,7 @@ def main() -> None:
             REGISTRY[name].fn(spark, SF_DIR).write.mode("overwrite").format(
                 "noop"
             ).save()
-    _cleanup()
+    cleanup(spark)
 
     # Headline noise floor: this box's background load drifts 30-80%
     # across hours (CLAUDE.md perf trap 6), whipsawing single-shot

@@ -10,6 +10,7 @@ from collections import Counter
 
 from aws_callcenter_delta_lakehouse_spark.catalog import load_table
 from aws_callcenter_delta_lakehouse_spark.operators.bpe import bpe_train
+from aws_callcenter_delta_lakehouse_spark.operators.materialize import CUT_DIR_CONF
 from tests.conftest import SF001
 
 
@@ -120,14 +121,16 @@ def test_bpe_apply_matches_python_reference(spark):
 
 @pytest.mark.slow  # redundancy-class battery: covered by faster siblings in the default run
 def test_bpe_train_reliable_checkpoint_parity(spark, tmp_path):
-    # checkpoint_dir mode (reliable df.checkpoint, cluster-safe) must
-    # produce byte-identical merges to the localCheckpoint fast path
+    # reliable-cut mode (the cut-dir conf set: df.checkpoint, cluster-
+    # safe) must produce byte-identical merges to the localCheckpoint
+    # fast path
     docs = load_table(spark, SF001, "documents")
     fast = sorted(tuple(r) for r in bpe_train(docs, "text", rounds=3).collect())
-    reliable = sorted(
-        tuple(r)
-        for r in bpe_train(
-            docs, "text", rounds=3, checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
-    )
+    spark.conf.set(CUT_DIR_CONF, str(tmp_path / "ckpt"))
+    try:
+        reliable = sorted(
+            tuple(r) for r in bpe_train(docs, "text", rounds=3).collect()
+        )
+    finally:
+        spark.conf.unset(CUT_DIR_CONF)
     assert fast == reliable

@@ -94,3 +94,17 @@ def test_curation_job_end_to_end(spark, tmp_path):
         for r in spark.read.parquet(out2).select("doc_id", "shard", "pos").collect()
     }
     assert a == b
+
+
+def test_curation_job_releases_its_cuts(spark, tmp_path):
+    """A long-lived session that reruns the job must not accumulate its
+    lineage-cut blocks: the persistent-RDD set is unchanged by a run."""
+    docs, bench = _corpus(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    result = curate_corpus(
+        docs, bench, str(tmp_path / "export"), num_shards=4,
+        near_dup_threshold=0.7,
+    )
+    assert result["dropped"]["after_decontamination"] == 10
+    assert set(jsc.getPersistentRDDs().keys()) == before

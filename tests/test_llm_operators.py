@@ -409,11 +409,15 @@ def test_connected_components_chain_and_triangle(spark, tmp_path):
     comps = {r.v: r.component for r in connected_components(edges).collect()}
     assert comps == expected
     # reliable-checkpoint mode (the cluster path) gives identical labels
-    ckpt = str(tmp_path / "cc_ckpt")
-    comps_r = {
-        r.v: r.component
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
-    }
+    from aws_callcenter_delta_lakehouse_spark.operators.materialize import CUT_DIR_CONF
+
+    spark.conf.set(CUT_DIR_CONF, str(tmp_path / "cc_ckpt"))
+    try:
+        comps_r = {
+            r.v: r.component for r in connected_components(edges).collect()
+        }
+    finally:
+        spark.conf.unset(CUT_DIR_CONF)
     assert comps_r == expected
     summary = {r.component: (r.n_members, r.representative)
                for r in cluster_summary(connected_components(edges)).collect()}

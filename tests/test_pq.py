@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from aws_callcenter_delta_lakehouse_spark.catalog import load_table
+from aws_callcenter_delta_lakehouse_spark.operators.materialize import CUT_DIR_CONF
 from aws_callcenter_delta_lakehouse_spark.operators.pq import (
     pq_encode,
     pq_topk,
@@ -111,19 +112,20 @@ def test_ivfpq_recall_self_retrieval_and_determinism(spark):
 
 
 def test_pq_train_reliable_checkpoint_parity(spark, tmp_path):
-    # checkpoint_dir mode (reliable df.checkpoint, cluster-safe) must
-    # train the exact same codebook as the localCheckpoint fast path —
-    # one Lloyd iteration exercises the per-round materialization
+    # reliable-cut mode (the cut-dir conf set: df.checkpoint, cluster-
+    # safe) must train the exact same codebook as the localCheckpoint
+    # fast path — one Lloyd iteration exercises the per-round cut
     emb = load_table(spark, SF001, "embeddings")
     fast = sorted(
         (r.s, r.j, tuple(r.cvec))
         for r in pq_train(emb, m=8, num_codes=4, iterations=1).collect()
     )
-    reliable = sorted(
-        (r.s, r.j, tuple(r.cvec))
-        for r in pq_train(
-            emb, m=8, num_codes=4, iterations=1,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        ).collect()
-    )
+    spark.conf.set(CUT_DIR_CONF, str(tmp_path / "ckpt"))
+    try:
+        reliable = sorted(
+            (r.s, r.j, tuple(r.cvec))
+            for r in pq_train(emb, m=8, num_codes=4, iterations=1).collect()
+        )
+    finally:
+        spark.conf.unset(CUT_DIR_CONF)
     assert fast == reliable

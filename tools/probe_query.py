@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Isolated query probe: warm + time one or more registry queries the
-way bench.py does (noop sink, same session factory, cleanup between
-runs), and optionally dump ``explain("formatted")`` to a file.
+way bench.py does (noop sink, same session factory, bench.py's cleanup
+between runs), and optionally dump ``explain("formatted")`` to a file.
 
 Usage:
     python tools/probe_query.py QUERY [QUERY ...] [--reps N] [--plan-dir DIR]
@@ -9,7 +9,10 @@ Usage:
 
 Timing methodology matches the guide (§1.1/§1.4): warm once untimed
 (JIT + codegen), then report each warm rep; host loadavg is printed so
-a contaminated probe self-describes.
+a contaminated probe self-describes. The warm-up run's time is printed
+as ``cold``: for the first query in the process that is the fresh-
+session cost a bench sweep pays, so run one query per process to
+measure it.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aws_callcenter_delta_lakehouse_spark.plans.all import REGISTRY  # noqa: E402
 from aws_callcenter_delta_lakehouse_spark.session import get_spark  # noqa: E402
+from bench import cleanup  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -38,14 +42,6 @@ def main() -> None:
 
     spark = get_spark(app_name="probe")
 
-    def _cleanup() -> None:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-
     print("loadavg %.2f %.2f %.2f" % os.getloadavg())
     for name in args.queries:
         fn = REGISTRY[name].fn
@@ -59,23 +55,25 @@ def main() -> None:
             with open(out, "w") as fh:
                 fh.write(plan)
             print(f"{name}: plan -> {out}")
-            _cleanup()
+            cleanup(spark)
             if args.plan_only:
                 continue
-        # warm untimed
+        # warm-up, reported as cold
         spark.sparkContext.setJobDescription(f"warm:{name}")
+        t0 = time.perf_counter()
         fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-        _cleanup()
+        cold = time.perf_counter() - t0
+        cleanup(spark)
         times = []
         for rep in range(args.reps):
             spark.sparkContext.setJobDescription(f"probe:{name}:{rep}")
             t0 = time.perf_counter()
             fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
             times.append(time.perf_counter() - t0)
-            _cleanup()
+            cleanup(spark)
         print(
-            "%s: warm reps %s  min %.3f"
-            % (name, " ".join("%.3f" % t for t in times), min(times))
+            "%s: cold %.3f  warm reps %s  min %.3f"
+            % (name, cold, " ".join("%.3f" % t for t in times), min(times))
         )
     spark.stop()
 
