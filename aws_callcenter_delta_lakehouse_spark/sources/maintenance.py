@@ -738,6 +738,10 @@ def purge_rows(
             # at a sidecar that no longer exists
             new_marker.pop("dv", None)
             new_marker["stats"] = mt._snapshot_stats(staging)
+            # fresh files: their own footers give the file schema
+            new_marker.pop("file_schema", None)
+            if file_schema := new_marker["stats"].pop("file_schema"):
+                new_marker["file_schema"] = file_schema
             if not mt._data_files(staging):
                 # a purge that matches EVERY row of a partitioned
                 # snapshot writes zero files (partitionBy of nothing):

@@ -36,6 +36,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .fs import get_fs as _fs
 
@@ -49,6 +50,13 @@ _MARKER = "_engine_table.json"
 _DV_DIR = "_dv"
 _DV_FILE_COL = "__dv_file"
 _DV_IDX_COL = "__dv_idx"
+# the sidecar's fixed layout: read with it, never inferred
+_DV_SCHEMA = StructType(
+    [StructField(_DV_FILE_COL, StringType()), StructField(_DV_IDX_COL, LongType())]
+)
+# Footer key under which Spark stores a data file's row schema
+# (StructType JSON); Spark's own schema inference reads it back verbatim.
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 # Change-data-feed sidecar: the row-level changes THAT PRODUCED this
 # snapshot (data columns + _change_type), recorded at commit time by
 # the DML paths when the table property enables CDF — so CDC readers
@@ -290,20 +298,76 @@ def _data_files(dirpath: str) -> list[str]:
     return out
 
 
-def _snapshot_stats(dirpath: str) -> dict:
+def _as_nullable(t):
+    """Spark's ``asNullable`` on a JSON data type. A file scan serves
+    every field nullable, so files that differ only in nullability
+    infer the same schema."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        fields = [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])}
+            for f in t["fields"]
+        ]
+        return {**t, "fields": fields}
+    if t["type"] == "array":
+        return {
+            **t, "containsNull": True, "elementType": _as_nullable(t["elementType"])
+        }
+    if t["type"] == "map":
+        return {
+            **t,
+            "valueContainsNull": True,
+            "keyType": _as_nullable(t["keyType"]),
+            "valueType": _as_nullable(t["valueType"]),
+        }
+    return t
+
+
+def _footer_stats(
+    files: Sequence[str], base_schema: str | None = None
+) -> tuple[int, str | None]:
+    """Row count of ``files`` and the schema Spark's inference serves
+    for them, both from the parquet footers read in this process (no
+    Spark job). A file Spark wrote carries its row schema in the footer; a
+    file without one (adopted by :func:`convert_to_managed`) counts as
+    ``base_schema``, the recorded schema of the snapshot it came from,
+    or as unknown. Inference reads ONE file's schema, so the result is
+    known only when every file agrees; otherwise it is None and readers
+    infer as before."""
+    import pyarrow.parquet as _pq
+
+    n_rows, raws = 0, set()
+    for f in files:
+        meta = _pq.read_metadata(f)
+        n_rows += meta.num_rows
+        raws.add((meta.metadata or {}).get(_SPARK_ROW_SCHEMA))
+    schemas = {
+        base_schema if raw is None
+        else StructType.fromJson(_as_nullable(json.loads(raw))).json()
+        for raw in raws
+    }
+    return n_rows, (schemas.pop() if len(schemas) == 1 else None)
+
+
+def _snapshot_stats(dirpath: str, base_schema: str | None = None) -> dict:
     """Footer/dirent-only stats of one snapshot directory: row count
+    and data-file schema (``file_schema``, see :func:`_footer_stats`)
     from the parquet footers, file count and byte total from dirents.
     Called ONCE per commit on the staged snapshot (whose files the
     commit just wrote) so ``history()``/``table_detail()`` become pure
-    marker reads — Delta records the same numbers in each commit's log
-    entry (``operationMetrics``) for exactly this reason."""
-    import pyarrow.parquet as _pq
-
+    marker reads and reads build their scan without inference — Delta
+    records the same numbers in each commit's log entry
+    (``operationMetrics``) and the schema in its metadata action for
+    exactly this reason. :func:`_write_marker` moves ``file_schema``
+    out of the stats into its own marker field."""
     files = _data_files(dirpath)
+    n_rows, file_schema = _footer_stats(files, base_schema)
     return {
-        "n_rows": sum(_pq.read_metadata(f).num_rows for f in files),
+        "n_rows": n_rows,
         "n_files": len(files),
         "bytes": sum(_fs().getsize(f) for f in files),
+        "file_schema": file_schema,
     }
 
 
@@ -324,6 +388,20 @@ def _write_marker(
     # replace — an OS/power crash can otherwise persist the later
     # directory rename while this marker's CONTENT is lost, leaving a
     # live snapshot whose marker is truncated garbage.
+    extra = dict(extra or {})
+    # commit-time snapshot stats (the dir's files were just written,
+    # their footers are hot): lets DESCRIBE HISTORY / DETAIL answer
+    # without listing data files. A caller that computed its own wins;
+    # else the walk runs here, with a carried file_schema standing in
+    # for files that hold no Spark row schema, and with the rows a
+    # deletion vector hides excluded.
+    stats = extra.pop("stats", None)
+    if stats is None:
+        stats = _snapshot_stats(path, extra.get("file_schema"))
+        stats["n_rows"] -= int((extra.get("dv") or {}).get("n_rows", 0))
+    stats = dict(stats)
+    if "file_schema" in stats:
+        extra["file_schema"] = stats.pop("file_schema")
     payload = {
         "keys": list(keys),
         "partition_by": list(partition_by),
@@ -335,22 +413,18 @@ def _write_marker(
         "identity": identity or {},
         "unique_keys": bool(unique_keys),
         "properties": properties or {},
-        # commit-time snapshot stats (the dir's files were just
-        # written, their footers are hot): lets DESCRIBE
-        # HISTORY / DETAIL answer without listing data files
-        "stats": (
-            extra["stats"]
-            if extra and "stats" in extra
-            else _snapshot_stats(path)
-        ),
+        "stats": stats,
     }
-    # commit-specific marker fields (deletion-vector descriptor, stats
-    # override, operation tag). Applied LAST so a caller that computed
-    # its own stats wins — and NOT carried by _write_marker_like, which
-    # is exactly the contract: any data-rewriting commit (merge /
-    # overwrite / compaction) clears the deletion vector.
-    if extra:
-        payload.update(extra)
+    # commit-specific marker fields (deletion-vector descriptor,
+    # operation tag). Applied LAST — and the dv flag is NOT carried by
+    # _write_marker_like, which is exactly the contract: any
+    # data-rewriting commit (merge / overwrite / compaction) clears the
+    # deletion vector.
+    payload.update(extra)
+    if not payload.get("file_schema") or not stats.get("n_files"):
+        # no data files, or files that disagree: readers infer (or, for
+        # an empty snapshot, serve schema_json)
+        payload.pop("file_schema", None)
     _stamp_features(payload)
     _fs().write_atomic(os.path.join(path, _MARKER), json.dumps(payload))
 
@@ -361,7 +435,10 @@ def _write_marker(
 # properties — always carries (see _stage_marker); version and txn
 # carry only for the data-preserving kinds. Rewriting commits carry
 # none of these: they materialize the logical schema into fresh files
-# and recompute the rest.
+# and recompute the rest. ``file_schema`` is carried by the kinds that
+# keep the live files and is then re-derived at the marker write from
+# every staged footer (_write_marker), the carried value standing in
+# for files that hold no Spark row schema.
 _CARRIED = {
     # DV delete/update keep every data file under its physical names:
     # column metadata a rewrite would materialize must carry instead;
@@ -373,6 +450,7 @@ _CARRIED = {
         "row_tracking",
         "added_columns",
         "schema_json",
+        "file_schema",
     ),
     # blind append: appended files are fresh names, so no stored
     # position can reference them — the active vector carries verbatim
@@ -396,6 +474,7 @@ _CARRIED["preserve_physical"] = _CARRIED["preserve"] + (
     "column_mapping",
     "dropped_columns",
     "added_columns",
+    "file_schema",
 )
 
 
@@ -713,7 +792,7 @@ def _apply_dv(spark: SparkSession, df: DataFrame, snap: str, marker: dict) -> Da
     dv_meta = marker.get("dv")
     if not dv_meta:
         return df
-    dv = spark.read.parquet(os.path.join(snap, _DV_DIR))
+    dv = spark.read.schema(_DV_SCHEMA).parquet(os.path.join(snap, _DV_DIR))
     tagged = df.select(
         "*",
         _dv_rel_file(snap).alias(_DV_FILE_COL),
@@ -726,29 +805,41 @@ def _apply_dv(spark: SparkSession, df: DataFrame, snap: str, marker: dict) -> Da
     )
 
 
+def _recorded_schema(marker: dict) -> str | None:
+    """The schema a scan of the marker's snapshot is built with: the
+    data-file schema (``file_schema``; partition columns then come from
+    the directory names, typed as inference types them), or for a
+    zero-file snapshot the full schema-in-log (``schema_json``). None —
+    infer — for markers written before ``file_schema`` existed and for
+    snapshots whose files disagree."""
+    if marker.get("file_schema"):
+        return marker["file_schema"]
+    n_files = (marker.get("stats") or {}).get("n_files")
+    if marker.get("schema_json") and not n_files:
+        return marker["schema_json"]
+    return None
+
+
+def _scan(reader, schema_json: str | None, *paths: str) -> DataFrame:
+    """Parquet scan of ``paths`` — with ``schema_json`` given no Spark
+    job runs to build it; without, Spark infers the schema."""
+    if schema_json:
+        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+    return reader.parquet(*paths)
+
+
 def _read_physical(spark: SparkSession, snap: str) -> DataFrame:
     """One snapshot directory as a DataFrame under its PHYSICAL column
     names, with its deletion vector (if any) applied — the single entry
     point every snapshot read (live, versioned, history-rewrite) goes
     through so deleted rows can never resurface from a raw scan — and
     where the reader half of the protocol-features contract is enforced
-    (an unknown reader feature refuses loudly instead of misreading)."""
+    (an unknown reader feature refuses loudly instead of misreading).
+    The scan uses the schema the commit recorded in the marker
+    (:func:`_recorded_schema`), so building it runs no Spark job."""
     marker = _read_marker(snap)
     _check_reader(marker, snap)
-    try:
-        raw = spark.read.parquet(snap)
-    except Exception as exc:
-        # a snapshot committed EMPTY has zero parquet footers (a
-        # partitioned write of an empty frame emits no files at all):
-        # serve the schema the commit recorded in the marker — Delta's
-        # schema-in-log. Files, when present, always win (the fallback
-        # only fires when inference finds nothing to read).
-        sj = marker.get("schema_json")
-        if not sj or "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-            raise
-        from pyspark.sql.types import StructType
-
-        raw = spark.createDataFrame([], StructType.fromJson(json.loads(sj)))
+    raw = _scan(spark.read, _recorded_schema(marker), snap)
     return _apply_dv(spark, raw, snap, marker)
 
 
@@ -1942,7 +2033,9 @@ def commit_overwrite(
             # still reads the WRITTEN files: monotonic ids must never be
             # recomputed into different values
             id_cols, row_hw = _probe_staged(
-                lambda: spark.read.parquet(staging),
+                lambda: _scan(
+                    spark.read, staged_stats.get("file_schema"), staging
+                ),
                 "write",
                 constraints,
                 pk=key_list if uk else (),
@@ -1982,10 +2075,9 @@ def commit_overwrite(
             extra["has_cdf"] = True
         if tracking:
             extra["row_tracking"] = {"high_water": int(row_hw)}
-        extra["stats"] = staged_stats  # computed above; spare the recount
+        # computed above; spare the recount (carries file_schema too)
+        extra["stats"] = staged_stats
         if staged_empty:
-            from pyspark.sql.types import StructType
-
             # partition columns go LAST — the order a file-backed read of
             # a partitioned snapshot reports, so the schema is stable
             # across the table's first real data commit
@@ -2608,7 +2700,7 @@ def _dv_live_scan(spark: SparkSession, path: str) -> tuple[dict, DataFrame, dict
     snapshot's physical {column: type}."""
     marker = _live_marker(path)
     _check_writer(marker, path)
-    raw = spark.read.parquet(path)
+    raw = _scan(spark.read, _recorded_schema(marker), path)
     tagged = raw.select(
         "*",
         _dv_rel_file(path).alias(_DV_FILE_COL),
@@ -2617,7 +2709,9 @@ def _dv_live_scan(spark: SparkSession, path: str) -> tuple[dict, DataFrame, dict
     logical = _apply_column_mapping(tagged, marker)
     if marker.get("dv"):
         logical = logical.join(
-            F.broadcast(spark.read.parquet(os.path.join(path, _DV_DIR))),
+            F.broadcast(
+                spark.read.schema(_DV_SCHEMA).parquet(os.path.join(path, _DV_DIR))
+            ),
             [_DV_FILE_COL, _DV_IDX_COL],
             "left_anti",
         )
@@ -2636,31 +2730,19 @@ def _dv_publish(
     """Tail of both DV commits: merged vector = old vector + the matched
     positions, the marker (DV cardinality recorded so reads can pick
     broadcast-vs-shuffle for the anti-join without a count job; column
-    metadata carried — physical names are unchanged), the swap, and the
-    raw-SQL-view invalidation."""
-    import pyarrow.parquet as _pq
-
+    metadata carried — physical names are unchanged; stats and
+    file_schema from the staged footers, see _write_marker), the swap,
+    and the raw-SQL-view invalidation."""
     positions = matched.select(_DV_FILE_COL, _DV_IDX_COL)
     if marker.get("dv"):
         positions = positions.unionByName(
-            spark.read.parquet(os.path.join(path, _DV_DIR))
+            spark.read.schema(_DV_SCHEMA).parquet(os.path.join(path, _DV_DIR))
         )
     dv_dir = os.path.join(st.dir, _DV_DIR)
     positions.distinct().write.mode("overwrite").parquet(dv_dir)
-    n_dv = sum(
-        _pq.read_metadata(f).num_rows
-        for f in _fs().glob(os.path.join(dv_dir, "*.parquet"))
-        if _fs().isfile(f)
-    )
-    phys = _snapshot_stats(st.dir)  # excludes the _dv sidecar
-    extra = {
-        "operation": f"{op.lower()}_dv",
-        "stats": {
-            "n_rows": int(phys["n_rows"]) - int(n_dv),
-            "n_files": int(phys["n_files"]),
-            "bytes": int(phys["bytes"]),
-        },
-    }
+    dv_files = _fs().glob(os.path.join(dv_dir, "*.parquet"))
+    n_dv, _ = _footer_stats([f for f in dv_files if _fs().isfile(f)])
+    extra: dict = {"operation": f"{op.lower()}_dv"}
     if n_dv > 0:
         extra["dv"] = {"n_rows": int(n_dv)}
     else:
@@ -3057,8 +3139,13 @@ def _append_rows_once(
             writer = writer.partitionBy(*partition_by)
         writer.parquet(staging)
         appended_files = sorted(set(_data_files(staging)) - linked)
+        appended_rows, appended_schema = _footer_stats(appended_files)
         appended = (
-            spark.read.option("basePath", staging).parquet(*appended_files)
+            _scan(
+                spark.read.option("basePath", staging),
+                appended_schema,
+                *appended_files,
+            )
             if appended_files
             else None
         )
@@ -3116,19 +3203,25 @@ def _append_rows_once(
             # operationMetrics. n_rows in stats excludes DV-deleted
             # rows; the vector carries verbatim, so the exclusion is
             # unchanged (+ n_dv converts back to physical rows here,
-            # the marker write below subtracts it again).
-            import pyarrow.parquet as _pq
-
+            # the marker write below subtracts it again). The live
+            # file_schema holds while the appended files agree with it
+            # (an empty live snapshot takes theirs).
+            live_schema = (
+                marker.get("file_schema")
+                if int(prev_stats["n_files"])
+                else appended_schema
+            )
             staged_stats = {
-                "n_rows": int(prev_stats["n_rows"])
-                + n_dv
-                + sum(_pq.read_metadata(f).num_rows for f in appended_files),
+                "n_rows": int(prev_stats["n_rows"]) + n_dv + appended_rows,
                 "n_files": int(prev_stats["n_files"]) + len(appended_files),
                 "bytes": int(prev_stats["bytes"])
                 + sum(_fs().getsize(f) for f in appended_files),
+                "file_schema": live_schema
+                if not appended_files or appended_schema == live_schema
+                else None,
             }
         else:  # legacy marker without stats: one full footer walk
-            staged_stats = _snapshot_stats(staging)
+            staged_stats = _snapshot_stats(staging, marker.get("file_schema"))
         extra: dict = {
             "operation": "append",
             # blind appends never rewrite data: thread the watermark of
@@ -3136,9 +3229,8 @@ def _append_rows_once(
             # prove its rebase window is append-only (_last_rewrite_version)
             "last_rewrite_version": _last_rewrite_version(marker),
             "stats": {
+                **staged_stats,
                 "n_rows": int(staged_stats["n_rows"]) - n_dv,
-                "n_files": int(staged_stats["n_files"]),
-                "bytes": int(staged_stats["bytes"]),
             },
         }
         if has_cdf:
@@ -3393,14 +3485,29 @@ def convert_to_managed(
         raise ValueError(f"{path} is already a managed table")
     # sanity: it must actually hold parquet (schema readable), and the
     # declared partition columns must be real (partition-dir inferred)
-    schema_cols = set(spark.read.parquet(path).schema.names)
+    inferred = spark.read.parquet(path).schema
+    schema_cols = set(inferred.names)
     missing = [c for c in partition_by if c not in schema_cols]
     if missing:
         raise ValueError(
             f"convert_to_managed: partition column(s) {missing} not found "
             f"in the directory's inferred schema ({sorted(schema_cols)})"
         )
-    _write_marker(path, tuple(keys), tuple(partition_by))
+    # record what was just inferred: its data columns are the file
+    # schema (partition columns, every ``col=`` directory level, come
+    # from the names), and the marker write's footer walk serves it for
+    # files that hold no Spark row schema
+    dir_cols = {
+        seg.split("=", 1)[0]
+        for f in _data_files(path)
+        for seg in os.path.relpath(os.path.dirname(f), path).split(os.sep)
+        if "=" in seg
+    }
+    file_schema = StructType([f for f in inferred.fields if f.name not in dir_cols])
+    _write_marker(
+        path, tuple(keys), tuple(partition_by),
+        extra={"file_schema": file_schema.json()},
+    )
     return table_detail(path)
 
 

@@ -19,20 +19,17 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.scalars import round_portable
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (schema pinned from the
-    batch read; TIMESTAMP(NANOS) normalized to microseconds exactly as
-    catalog.load_table does)."""
-    from ..catalog import table_path
+    catalog's schema memo; ``ts`` normalized by the same function
+    catalog.load_table uses)."""
+    from ..catalog import normalize_events_ts, table_schema
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = table_schema(spark, sf_dir, "events")
     # the file source wants a directory: stream the sf_dir, glob-filtered
     # to the events table file
     stream = (
@@ -40,14 +37,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    dt = schema["ts"].dataType
-    if isinstance(dt, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(dt, T.TimestampNTZType):
-        # same normalization as catalog.load_table: NTZ wall-clock == UTC
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return stream
+    return normalize_events_ts(spark, stream)
 
 
 def tumbling_counts(

@@ -22,7 +22,7 @@ _FIELDS = (
     "generated", "identity", "unique_keys", "properties", "stats",
     "operation", "dv", "has_cdf", "row_tracking", "column_mapping",
     "dropped_columns", "added_columns", "schema_json",
-    "last_rewrite_version",
+    "last_rewrite_version", "file_schema",
 )
 # passed explicitly to every commit's marker write
 _TABLE_DECL = {
@@ -31,16 +31,21 @@ _TABLE_DECL = {
 }
 
 _EXPECTED = {
-    "append": _TABLE_DECL | {"dv", "added_columns", "last_rewrite_version"},
+    # file_schema: the kinds whose staged files all carry the live
+    # schema (the appended and post-image files agree with it); the
+    # ``like`` stagings hold unrelated files, so their footers win
+    "append": _TABLE_DECL | {
+        "dv", "added_columns", "last_rewrite_version", "file_schema",
+    },
     "dv_delete": _TABLE_DECL | {
         "identity", "row_tracking", "column_mapping", "dropped_columns",
-        "added_columns", "schema_json",
+        "added_columns", "schema_json", "file_schema",
     },
     # dropped_columns is left out of the seed: a pending drop sends a
     # DV update down the rewriting path
     "dv_update": _TABLE_DECL | {
         "identity", "row_tracking", "column_mapping", "added_columns",
-        "schema_json",
+        "schema_json", "file_schema",
     },
     "like": _TABLE_DECL | {
         "version", "txn", "identity", "has_cdf", "row_tracking",
