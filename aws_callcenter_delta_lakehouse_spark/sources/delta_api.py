@@ -214,7 +214,10 @@ def general_merge(
     Multiple source rows matching one target row raise (Delta's
     DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW) whenever a
     matched-bucket clause exists — the update/delete would be
-    nondeterministic. The probe is one count over MATCHED target ids.
+    nondeterministic. The probe is one count over MATCHED target ids,
+    skipped when Catalyst proves the source holds at most one row
+    (``maxRows() <= 1``): then no target row can match twice, whatever
+    the condition.
 
     The commit runs through the standard stage-and-swap, so CHECK
     constraints, PRIMARY KEY probes, generated/identity recompute,
@@ -310,6 +313,9 @@ def general_merge(
     # otherwise.)
     from ..operators.materialize import cut_once, scoped_cuts
 
+    # proven on the caller's plan: the checkpointed scan below has no
+    # row bound
+    probe = not managed_table._key_unique(source, ())
     with scoped_cuts(spark):
         source = cut_once(source)
 
@@ -329,7 +335,7 @@ def general_merge(
                 list(m.get("keys", [])),
                 tuple(m.get("partition_by", ()) or ()),
                 managed_table._cdf_on(m),
-                max_history, txn, evolved,
+                max_history, txn, evolved, probe,
             )
 
         managed_table._retry_dml(_attempt, path)
@@ -339,7 +345,7 @@ def _general_merge_body(
     spark, path, source, condition, meta, base_version,
     matched_cl, insert_cl, by_src_cl,
     target_alias, source_alias, keys, partition_by, cdf_on,
-    max_history, txn, evolved=None,
+    max_history, txn, evolved=None, probe=True,
 ) -> None:
     target = managed_table._read_logical(spark, path)
     for c, tp in (evolved or {}).items():
@@ -369,13 +375,13 @@ def _general_merge_body(
     if matched_cl or by_src_cl:
         pairs = t.join(s, on, "left_outer")
         s_present = _q(source_alias, "__s_present").isNotNull()
-        dup = (
+        if probe and not (
             pairs.filter(s_present)
             .groupBy(_q(target_alias, "__tid"))
             .count()
             .filter(F.col("count") > 1)
-        )
-        if not dup.isEmpty():
+            .isEmpty()
+        ):
             raise ValueError(
                 "general_merge: multiple source rows match the same target "
                 "row — the update/delete is nondeterministic (Delta: "
@@ -545,6 +551,7 @@ def _general_merge_body(
         # vetted new columns, so "overwrite" here is exact, not lax
         schema_mode="overwrite" if evolved else "enforce",
         _append_only_ok=True,  # vetted above: insert-only on appendOnly
+        _live_schema=target.schema,
     )
 
 

@@ -110,9 +110,10 @@ def _scrub_cdf(spark: SparkSession, snap: str, match) -> int:
     condition applies directly; ``_change_type`` never collides with
     data columns."""
     cdf = os.path.join(snap, managed_table._CDF_DIR)
-    if not _fs().isdir(cdf):
+    files = managed_table._sidecar_files(snap, managed_table._CDF_DIR)
+    if not files:
         return 0
-    df = spark.read.parquet(cdf)
+    df = spark.read.parquet(*files)
     n = df.filter(match).count()
     if n == 0:
         return 0

@@ -779,6 +779,33 @@ def _dv_rel_file(snap: str):
     return F.substring_index(F.col("_metadata.file_path"), prefix, -1)
 
 
+def _sidecar_files(snap: str, sidecar: str) -> list[str]:
+    """The parquet files of one snapshot sidecar (``_dv``,
+    ``_change_data``). Sidecars are scanned by this file list, never by
+    their directory: Spark's hidden-path rule marks an ``_``-led
+    directory ignorable ("All paths were ignored") and reads it only
+    because it was named explicitly."""
+    return sorted(
+        f
+        for f in _fs().glob(os.path.join(snap, sidecar, "*.parquet"))
+        if _fs().isfile(f)
+    )
+
+
+def _dv_scan(spark: SparkSession, snap: str) -> DataFrame:
+    """The (file, row index) positions of ``snap``'s deletion vector —
+    called only when the marker records one. A vector with no files
+    refuses: serving the rows it hides would resurrect deleted data."""
+    files = _sidecar_files(snap, _DV_DIR)
+    if not files:
+        raise ValueError(
+            f"{snap}: the marker records a deletion vector but its "
+            f"{_DV_DIR} sidecar holds no files — reading would resurrect "
+            "deleted rows"
+        )
+    return spark.read.schema(_DV_SCHEMA).parquet(*files)
+
+
 def _apply_dv(spark: SparkSession, df: DataFrame, snap: str, marker: dict) -> DataFrame:
     """Filter out rows the snapshot's deletion vector marks deleted.
 
@@ -792,7 +819,7 @@ def _apply_dv(spark: SparkSession, df: DataFrame, snap: str, marker: dict) -> Da
     dv_meta = marker.get("dv")
     if not dv_meta:
         return df
-    dv = spark.read.schema(_DV_SCHEMA).parquet(os.path.join(snap, _DV_DIR))
+    dv = _dv_scan(spark, snap)
     tagged = df.select(
         "*",
         _dv_rel_file(snap).alias(_DV_FILE_COL),
@@ -1247,8 +1274,17 @@ def table_changes(
                 "generic overwrite) — use read_changes() for a "
                 "snapshot-diff of that range"
             )
+        # scanned with the schema its own footers record (no Spark
+        # job); inferred only when the files disagree
+        files = _sidecar_files(snap, _CDF_DIR)
+        if not files:
+            raise ValueError(
+                f"version {v} of {path}: its {_CDF_DIR} sidecar holds no "
+                "files — the change record is lost (use read_changes() "
+                "for a snapshot-diff of that range)"
+            )
         parts.append(
-            spark.read.parquet(os.path.join(snap, _CDF_DIR))
+            _scan(spark.read, _footer_stats(files)[1], *files)
             .withColumn("_commit_version", F.lit(v).cast("int"))
             .withColumn(
                 "_commit_timestamp",
@@ -1417,6 +1453,49 @@ def initial_write(
     )
 
 
+_DISTINCT_KEYS_CONF = "spark.sql.optimizer.propagateDistinctKeys.enabled"
+
+
+def _key_unique(df: DataFrame, keys: Sequence[str]) -> bool:
+    """True when Catalyst PROVES ``df`` holds at most one row per
+    ``keys`` tuple, so a MERGE's multiple-source-match probe could not
+    fire: the optimized plan has ``maxRows() <= 1``, or one of its
+    ``distinctKeys()`` sets consists only of the output attributes
+    named by ``keys`` (case-insensitively unless
+    ``spark.sql.caseSensitive``). A set holding any other column or a
+    non-attribute expression proves nothing, and neither does a key
+    that names no output column or more than one. With empty ``keys``
+    only a plan of at most one row proves. False — probe — whenever
+    the session turns off ``propagateDistinctKeys``."""
+    conf = df.sparkSession.conf
+    if conf.get(_DISTINCT_KEYS_CONF, "true").lower() != "true":
+        return False
+    plan = df._jdf.queryExecution().optimizedPlan()
+    max_rows = plan.maxRows()
+    if max_rows.isDefined() and max_rows.get() <= 1:
+        return True
+    sensitive = conf.get("spark.sql.caseSensitive", "false").lower() == "true"
+    fold = (lambda n: n) if sensitive else str.lower
+    out = plan.output()
+    attrs = [out.apply(i) for i in range(out.size())]
+    key_attrs = []
+    for k in keys:
+        named = [a for a in attrs if fold(a.name()) == fold(k)]
+        if len(named) != 1:
+            return False  # the probe reports the unresolved/ambiguous key
+        key_attrs.append(named[0])
+    sets = plan.distinctKeys().iterator()
+    while sets.hasNext():
+        exprs = sets.next().iterator()
+        proven = True
+        while proven and exprs.hasNext():
+            e = exprs.next()
+            proven = any(e.semanticEquals(a) for a in key_attrs)
+        if proven:
+            return True
+    return False
+
+
 def merge_upsert(
     spark: SparkSession,
     path: str,
@@ -1425,7 +1504,6 @@ def merge_upsert(
     partition_by: Sequence[str] = (),
     broadcast_source: bool = False,
     schema_evolution: bool = False,
-    validate_source: bool = True,
     max_history: int = 2,
     txn: dict | None = None,
     not_matched_by_source: str = "keep",
@@ -1438,7 +1516,7 @@ def merge_upsert(
     return _retry_dml(
         lambda: _merge_upsert_impl(
             spark, path, source, keys, partition_by, broadcast_source,
-            schema_evolution, validate_source, max_history, txn,
+            schema_evolution, max_history, txn,
             not_matched_by_source,
         ),
         path,
@@ -1453,7 +1531,6 @@ def _merge_upsert_impl(
     partition_by: Sequence[str] = (),
     broadcast_source: bool = False,
     schema_evolution: bool = False,
-    validate_source: bool = True,
     max_history: int = 2,
     txn: dict | None = None,
     not_matched_by_source: str = "keep",
@@ -1469,12 +1546,15 @@ def _merge_upsert_impl(
     (see :func:`commit_overwrite` / :func:`table_txn`) — the
     Delta ``txnAppId``/``txnVersion`` idempotent-writer analogue.
 
-    ``validate_source=True`` enforces the documented Delta MERGE
-    contract: multiple source rows matching the SAME target row is an
-    error (Delta's DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW —
-    the update would be nondeterministic). Costs one extra key-agg +
-    semi-join job per merge; disable only when the source is key-unique
-    by construction.
+    The documented Delta MERGE contract is enforced: multiple source
+    rows matching the SAME target row is an error (Delta's
+    DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW — the update would
+    be nondeterministic). Prove-or-probe: when Catalyst proves the
+    source holds at most one row per key (:func:`_key_unique` — a
+    ``groupBy(keys)`` aggregate, ``dropDuplicates(keys)``, a one-row
+    ``SELECT``) no probe runs; otherwise one job looks for duplicate
+    keys in the source alone, and only when it finds some does a
+    second one ask whether any of them matches the target.
 
     ``schema_evolution=True`` mirrors Delta's mergeSchema: source
     columns missing from the target are added (existing rows get NULL);
@@ -1544,14 +1624,11 @@ def _merge_upsert_impl(
                 c, F.lit(spec.get("default")).cast(spec["type"])
             )
     src = F.broadcast(source) if broadcast_source else source
-    if validate_source:
-        dup_matched = (
-            src.groupBy(*keys)
-            .count()
-            .filter(F.col("count") > 1)
-            .join(target, on=keys, how="left_semi")
-        )
-        if not dup_matched.isEmpty():
+    if not _key_unique(src, keys):
+        dup_keys = src.groupBy(*keys).count().filter(F.col("count") > 1)
+        if not dup_keys.isEmpty() and not dup_keys.join(
+            target, on=keys, how="left_semi"
+        ).isEmpty():
             raise ValueError(
                 "merge_upsert: multiple source rows match the same target "
                 "row for at least one key — the update is nondeterministic "
@@ -1614,6 +1691,7 @@ def _merge_upsert_impl(
         # vetted above: on appendOnly tables only insert-only merges
         # reach this commit
         _append_only_ok=True,
+        _live_schema=target.schema,
     )
 
 
@@ -1885,6 +1963,7 @@ def commit_overwrite(
     auto_optimize: bool = True,
     schema_mode: str = "enforce",
     _append_only_ok: bool = False,
+    _live_schema: StructType | None = None,
 ) -> None:
     """Atomic full-snapshot commit via stage-and-swap — works whether or
     not the table exists yet, so it is also the crash-safe first write.
@@ -1956,7 +2035,10 @@ def commit_overwrite(
     frame columns widen the table, a TYPE conflict still refuses);
     ``"overwrite"`` mirrors ``overwriteSchema`` (the frame's schema
     replaces the table's). Generated and identity columns are exempt
-    from the comparison — the commit recomputes/fills them itself."""
+    from the comparison — the commit recomputes/fills them itself.
+    The DML callers built ``df`` over :func:`_read_logical` of the
+    version they pass as ``expected_version`` and hand that frame's
+    schema over as ``_live_schema`` instead of a second read."""
     if schema_mode not in ("enforce", "merge", "overwrite"):
         raise ValueError(
             f"schema_mode must be enforce|merge|overwrite, got {schema_mode!r}"
@@ -2001,7 +2083,9 @@ def commit_overwrite(
     if exists and schema_mode != "overwrite":
         df = _align_schema(
             df,
-            read(df.sparkSession, path).schema,
+            _live_schema
+            if _live_schema is not None
+            else read(df.sparkSession, path).schema,
             schema_mode,
             path,
             exempt=set(gen_cols) | set(id_cols) | {_ROWID_COL},
@@ -2563,6 +2647,7 @@ def _delete_where_impl(
         max_history,
         expected_version=base_version,
         changes=changes,
+        _live_schema=target.schema,
     )
 
 
@@ -2709,9 +2794,7 @@ def _dv_live_scan(spark: SparkSession, path: str) -> tuple[dict, DataFrame, dict
     logical = _apply_column_mapping(tagged, marker)
     if marker.get("dv"):
         logical = logical.join(
-            F.broadcast(
-                spark.read.schema(_DV_SCHEMA).parquet(os.path.join(path, _DV_DIR))
-            ),
+            F.broadcast(_dv_scan(spark, path)),
             [_DV_FILE_COL, _DV_IDX_COL],
             "left_anti",
         )
@@ -2735,13 +2818,10 @@ def _dv_publish(
     and the raw-SQL-view invalidation."""
     positions = matched.select(_DV_FILE_COL, _DV_IDX_COL)
     if marker.get("dv"):
-        positions = positions.unionByName(
-            spark.read.schema(_DV_SCHEMA).parquet(os.path.join(path, _DV_DIR))
-        )
+        positions = positions.unionByName(_dv_scan(spark, path))
     dv_dir = os.path.join(st.dir, _DV_DIR)
     positions.distinct().write.mode("overwrite").parquet(dv_dir)
-    dv_files = _fs().glob(os.path.join(dv_dir, "*.parquet"))
-    n_dv, _ = _footer_stats([f for f in dv_files if _fs().isfile(f)])
+    n_dv, _ = _footer_stats(_sidecar_files(st.dir, _DV_DIR))
     extra: dict = {"operation": f"{op.lower()}_dv"}
     if n_dv > 0:
         extra["dv"] = {"n_rows": int(n_dv)}
@@ -2875,6 +2955,7 @@ def _update_where_impl(
         max_history,
         expected_version=base_version,
         changes=changes,
+        _live_schema=target.schema,
     )
 
 

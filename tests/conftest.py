@@ -1,11 +1,26 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from aws_callcenter_delta_lakehouse_spark.session import get_spark
 
 SF001 = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
+
+
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by a fresh job group
+    on the session's SparkContext."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -8,28 +8,16 @@ served a stale schema."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from aws_callcenter_delta_lakehouse_spark import catalog
+from tests.conftest import spark_jobs
 
 _NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 _BINARY = "spark.sql.parquet.binaryAsString"
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran)."""
-    sc = spark.sparkContext
-    group = f"schema-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "catalog schema test")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_second_load_runs_no_job_in_any_session(spark, tmp_path):
@@ -38,12 +26,12 @@ def test_second_load_runs_no_job_in_any_session(spark, tmp_path):
         str(tmp_path / "t.parquet"),
     )
     sf = str(tmp_path)
-    first, n_first = _jobs(spark, lambda: catalog.load_table(spark, sf, "t"))
+    first, n_first = spark_jobs(spark, lambda: catalog.load_table(spark, sf, "t"))
     assert n_first == 1  # the one inference
-    again, n_again = _jobs(spark, lambda: catalog.load_table(spark, sf, "t"))
+    again, n_again = spark_jobs(spark, lambda: catalog.load_table(spark, sf, "t"))
     assert n_again == 0
     other = spark.newSession()
-    fresh, n_fresh = _jobs(other, lambda: catalog.load_table(other, sf, "t"))
+    fresh, n_fresh = spark_jobs(other, lambda: catalog.load_table(other, sf, "t"))
     assert n_fresh == 0
     assert first.schema == again.schema == fresh.schema
     assert sorted(r.id for r in fresh.collect()) == [1, 2, 3]
@@ -59,7 +47,7 @@ def test_rewritten_file_is_reinferred(spark, tmp_path):
     pq.write_table(
         pa.table({"id": pa.array([7], pa.int32()), "extra": ["x"]}), path
     )
-    df, n = _jobs(spark, lambda: catalog.load_table(spark, sf, "t"))
+    df, n = spark_jobs(spark, lambda: catalog.load_table(spark, sf, "t"))
     assert n == 1
     assert df.schema.simpleString() == "struct<id:int,extra:string>"
     assert [tuple(r) for r in df.collect()] == [(7, "x")]
@@ -97,7 +85,7 @@ def test_reader_confs_key_separate_entries(spark, tmp_path):
         assert as_string.simpleString() == "struct<ts:bigint,b:string>"
         for flag, want in (("false", as_long), ("true", as_string)):
             spark.conf.set(_BINARY, flag)
-            got, n = _jobs(spark, lambda: catalog.parquet_schema(spark, path))
+            got, n = spark_jobs(spark, lambda: catalog.parquet_schema(spark, path))
             assert n == 0 and got == want
     finally:
         for c, v in saved.items():

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from aws_callcenter_delta_lakehouse_spark.sources import maintenance
 from aws_callcenter_delta_lakehouse_spark.sources import managed_table as mt
+from tests.conftest import spark_jobs
 
 
 def _make(spark, path, cdf=True):
@@ -469,6 +470,37 @@ def test_table_changes_plan_is_shuffle_free(spark, tmp_path):
         )
     )
     assert "Exchange" not in plan and "Join" not in plan
+
+
+def test_table_changes_builds_without_a_job(spark, tmp_path):
+    """Each ``_change_data`` sidecar is scanned by its file list with
+    the schema its own footers record: building the feed runs no Spark
+    job and serves the rows and schema the inferred directory scans
+    served."""
+    path = str(tmp_path / "t")
+    _make(spark, path)
+    src = spark.createDataFrame(
+        [(2, "upd", 0.0), (9, "new", 99.0)], ["id", "name", "bal"]
+    )
+    mt.merge_upsert(spark, path, src, keys=("id",))
+    mt.delete_where(spark, path, "id = 1", deletion_vectors=True)
+    got, n_jobs = spark_jobs(spark, lambda: mt.table_changes(spark, path, 0, 2))
+    assert n_jobs == 0
+    parts = []
+    for v in (1, 2):
+        snap = path if v == 2 else os.path.join(mt._history_dir(path), f"v{v:06d}")
+        parts.append(
+            spark.read.parquet(os.path.join(snap, mt._CDF_DIR))
+            .withColumn("_commit_version", F.lit(v).cast("int"))
+            .withColumn(
+                "_commit_timestamp", F.lit(float(mt._read_marker(snap)["ts"]))
+            )
+        )
+    want = parts[0].unionByName(parts[1], allowMissingColumns=True)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
 
 
 def test_optimize_records_empty_change_set(spark, tmp_path):

@@ -45,6 +45,27 @@ def _make(spark, path, partition_by=()):
     mt.initial_write(df, path, partition_by=partition_by, keys=("id",))
 
 
+def test_dv_sidecar_is_scanned_by_file_list(spark, tmp_path):
+    """The vector is read from the sidecar's parquet files, never from
+    its ``_``-led directory (Spark's hidden-path rule would ignore it);
+    a vector whose sidecar lost its files refuses instead of serving the
+    rows it hides."""
+    from urllib.parse import urlparse
+
+    path = str(tmp_path / "t")
+    _make(spark, path)
+    mt.delete_where(spark, path, "id IN (2, 7)", deletion_vectors=True)
+    assert {r.id for r in mt.read(spark, path).collect()} == {1, 3, 4, 5, 6, 8}
+    files = mt._sidecar_files(path, mt._DV_DIR)
+    assert files and all(f.endswith(".parquet") for f in files)
+    scanned = {urlparse(f).path for f in mt._dv_scan(spark, path).inputFiles()}
+    assert scanned == set(files)
+    for f in files:
+        os.remove(f)
+    with pytest.raises(ValueError, match="resurrect"):
+        mt.read(spark, path)
+
+
 def test_dv_delete_filters_rows_without_touching_files(spark, tmp_path):
     path = str(tmp_path / "t")
     _make(spark, path)

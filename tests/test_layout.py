@@ -11,7 +11,7 @@ from aws_callcenter_delta_lakehouse_spark.operators.layout import (
     zorder_key,
     zorder_layout,
 )
-from tests.conftest import SF01
+from tests.conftest import SF01, spark_jobs
 
 
 def _avg_span_fraction(spark, path, cols):
@@ -401,16 +401,13 @@ def test_bloom_manifest_folds_bitmaps_executor_side(spark, tmp_path):
     )
     write_clustered(df, path, cluster_by=["day"], num_files=4)
 
-    sc = spark.sparkContext
-    sc.setJobGroup("bloom-build", "bloom manifest build")
-    try:
-        manifest = write_bloom_manifest(
+    manifest, jobs = spark_jobs(
+        spark,
+        lambda: write_bloom_manifest(
             spark, path, ["k", "u"], num_bits=8192, num_hashes=4
-        )
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("bloom-build")
-    assert len(jobs) <= 4, jobs  # constant (AQE stage splits), not per-column
+        ),
+    )
+    assert jobs <= 4, jobs  # constant (AQE stage splits), not per-column
 
     with open(manifest) as fh:
         m = json.load(fh)
@@ -446,18 +443,15 @@ def test_compact_binpack_single_job_regardless_of_bins(spark, tmp_path):
             F.col("id")
         ).coalesce(1).write.mode("append").parquet(path)
 
-    sc = spark.sparkContext
-    sc.setJobGroup("binpack", "compaction")
-    try:
-        stats = compact_binpack(
+    stats, jobs = spark_jobs(
+        spark,
+        lambda: compact_binpack(
             spark, path, target_file_bytes=30_000, small_file_bytes=20_000
-        )
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("binpack")
+        ),
+    )
     n_bins = stats["after"]["n_files"] - stats["carried"]
     assert n_bins >= 3  # the packing genuinely produced multiple bins
-    assert len(jobs) <= 5, (len(jobs), n_bins)  # independent of bin count
+    assert jobs <= 5, (jobs, n_bins)  # independent of bin count
     assert stats["rewritten"] == 12
     assert {r.id for r in mt.read(spark, path).collect()} == set(range(74_000))
     assert len(glob.glob(path + "/*.parquet")) == stats["after"]["n_files"]
@@ -707,20 +701,17 @@ def test_compact_where_single_job_regardless_of_partitions(spark, tmp_path):
     )
     df.repartition(6).write.partitionBy("bucket").parquet(path)
 
-    sc = spark.sparkContext
-    sc.setJobGroup("pcompact", "partition compaction")
-    try:
-        compact(
+    _, jobs = spark_jobs(
+        spark,
+        lambda: compact(
             spark,
             path,
             partition_by=("bucket",),
             where="bucket < 8",
             target_file_bytes=10**9,
-        )
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("pcompact")
-    assert len(jobs) <= 8, jobs  # constant (metadata + distinct + AQE write), not per-dir
+        ),
+    )
+    assert jobs <= 8, jobs  # constant (metadata + distinct + AQE write), not per-dir
     # 8 partitions compacted to 1 file each, 2 untouched
     for b in range(8):
         assert len(glob.glob(os.path.join(path, f"bucket={b}", "*.parquet"))) == 1

@@ -7,7 +7,6 @@ recorded schema is exactly what inference over the snapshot serves."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -16,18 +15,7 @@ from pyspark.sql import functions as F
 
 from aws_callcenter_delta_lakehouse_spark.sources import maintenance as mx
 from aws_callcenter_delta_lakehouse_spark.sources import managed_table as mt
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran)."""
-    sc = spark.sparkContext
-    group = f"read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "recorded schema test")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import spark_jobs
 
 
 def _inferred(spark, path):
@@ -115,7 +103,7 @@ def test_read_after_commit_runs_no_job(spark, tmp_path, op, partitioned):
     _table(spark, path, partitioned)
     _OPS[op](spark, path)
     assert mt._read_marker(path).get("file_schema")
-    df, n_jobs = _jobs(spark, lambda: mt.read(spark, path))
+    df, n_jobs = spark_jobs(spark, lambda: mt.read(spark, path))
     assert n_jobs == 0
     assert df.schema == _inferred(spark, path)
     if partitioned:  # partition types come from the directory names
@@ -133,7 +121,7 @@ def test_marker_without_file_schema_reads_the_same(spark, tmp_path):
     marker = mt._read_marker(path)
     marker.pop("file_schema")
     mt._replace_marker(path, marker)
-    legacy, n_jobs = _jobs(spark, lambda: mt.read(spark, path))
+    legacy, n_jobs = spark_jobs(spark, lambda: mt.read(spark, path))
     assert n_jobs >= 1  # inference
     assert legacy.schema == want_schema
     assert _rows(legacy) == want_rows
@@ -148,7 +136,7 @@ def test_empty_snapshot_reads_schema_in_log_without_a_job(spark, tmp_path):
     )
     marker = mt._read_marker(path)
     assert marker.get("schema_json") and "file_schema" not in marker
-    df, n_jobs = _jobs(spark, lambda: mt.read(spark, path))
+    df, n_jobs = spark_jobs(spark, lambda: mt.read(spark, path))
     assert n_jobs == 0
     assert df.schema.simpleString() == "struct<id:bigint,part:string>"
     assert df.count() == 0
@@ -186,12 +174,12 @@ def test_convert_records_inferred_schema(spark, tmp_path):
     mt.convert_to_managed(spark, path, partition_by=("k",))
     marker = mt._read_marker(path)
     assert "k" not in marker["file_schema"]
-    df, n_jobs = _jobs(spark, lambda: mt.read(spark, path))
+    df, n_jobs = spark_jobs(spark, lambda: mt.read(spark, path))
     assert n_jobs == 0
     assert df.schema == spark.read.parquet(path).schema
     assert _rows(df) == [(1, "a", 1), (2, "a", 2), (10, "b", 1), (20, "b", 2)]
     # a DV commit keeps the files and so the recorded schema
     mt.delete_where(spark, path, "x = 1", deletion_vectors=True)
     assert mt._read_marker(path)["file_schema"] == marker["file_schema"]
-    df, n_jobs = _jobs(spark, lambda: mt.read(spark, path))
+    df, n_jobs = spark_jobs(spark, lambda: mt.read(spark, path))
     assert n_jobs == 0 and len(_rows(df)) == 3
