@@ -69,6 +69,59 @@ def _registry_dir(spark: SparkSession, explicit: str | None = None) -> str:
     return val
 
 
+def _table_placement(
+    spark: SparkSession,
+    name: str,
+    location: str | None,
+    registry_dir: str | None = None,
+    error: type[Exception] = ValueError,
+):
+    """(path, bind) for creating a table under a registry name — the
+    one placement rule of the builder and every SQL CREATE shape
+    (column list, CTAS, CLONE). A name bound to a VIEW refuses before
+    any data is written (resolving a view and an unbound name raise the
+    same error, so the view is looked for explicitly); without
+    ``location`` the table lands under the registry's managed warehouse
+    dir (``<registry>/tables/<name>``) or at the path the name already
+    has; a name bound to a DIFFERENT path refuses. ``bind()`` records
+    the binding after the commit — a lost put-if-absent race is fine
+    iff the winner bound the same path. Refusals raise ``error``."""
+    registry = _registry_dir(spark, registry_dir)
+    try:
+        bound = txn_catalog.resolve_table_name(registry, name)
+    except txn_catalog.TableNameError:
+        try:
+            entry = txn_catalog.resolve_entry(registry, name)
+        except txn_catalog.TableNameError:
+            entry = {}
+        if "view_sql" in entry:
+            raise error(
+                f"{name!r} is a registered VIEW — a table cannot be "
+                "created under a view name (DROP VIEW first)"
+            ) from None
+        bound = None
+    path = location or bound or os.path.join(
+        registry, "tables", name.strip().lower()
+    )
+    if bound is not None and os.path.abspath(bound) != os.path.abspath(path):
+        raise error(
+            f"table name {name!r} is already bound to {bound} — it cannot "
+            f"also be created at {path}"
+        )
+
+    def bind() -> None:
+        if bound == path:
+            return
+        try:
+            txn_catalog.register_table_name(registry, name, path)
+        except txn_catalog.TableNameError:
+            other = txn_catalog.resolve_table_name(registry, name)
+            if os.path.abspath(other) != os.path.abspath(path):
+                raise
+
+    return path, bind
+
+
 def register_sql_view(
     spark: SparkSession,
     name: str,
@@ -838,40 +891,11 @@ class DeltaTableBuilder:
         return self
 
     def execute(self) -> "DeltaTable":
-        registry = bound = None
+        bind = lambda: None  # a path-addressed table has no name to bind
         if self._name is not None:
-            registry = _registry_dir(self._spark)
-            try:
-                bound = txn_catalog.resolve_table_name(registry, self._name)
-            except txn_catalog.TableNameError:
-                # "unbound" and "bound to a VIEW" raise the same error
-                # type — distinguishing matters: treating a view name as
-                # unbound would commit a whole table snapshot and only
-                # fail afterwards at the name binding (round 13)
-                try:
-                    entry = txn_catalog.resolve_entry(registry, self._name)
-                except txn_catalog.TableNameError:
-                    entry = {}
-                if "view_sql" in entry:
-                    raise ValueError(
-                        f"{self._name!r} is a registered VIEW — a table "
-                        "cannot be created under a view name (DROP VIEW "
-                        "first)"
-                    )
-                bound = None
-            if self._path is None:
-                # managed placement: data lives under the registry's
-                # warehouse dir, keyed by the identifier
-                self._path = bound or os.path.join(
-                    registry, "tables", self._name
-                )
-            elif bound is not None and os.path.abspath(
-                bound
-            ) != os.path.abspath(self._path):
-                raise ValueError(
-                    f"table name {self._name!r} is already bound to "
-                    f"{bound} — it cannot also be created at {self._path}"
-                )
+            self._path, bind = _table_placement(
+                self._spark, self._name, self._path
+            )
         if self._path is None:
             raise ValueError(
                 "create builder requires .location(path) or .tableName(name)"
@@ -885,26 +909,12 @@ class DeltaTableBuilder:
                 "trigger maintains flat tables only)"
             )
 
-        def _bind() -> None:
-            # record (or repair) the name binding; a lost put-if-absent
-            # race is fine iff the winner bound the SAME path
-            if self._name is None or bound == self._path:
-                return
-            try:
-                txn_catalog.register_table_name(
-                    registry, self._name, self._path
-                )
-            except txn_catalog.TableNameError:
-                other = txn_catalog.resolve_table_name(registry, self._name)
-                if os.path.abspath(other) != os.path.abspath(self._path):
-                    raise
-
         exists = managed_table.is_table(self._spark, self._path)
         if exists:
             if self._mode == "create":
                 raise ValueError(f"{self._path} is already a managed table")
             if self._mode == "createIfNotExists":
-                _bind()
+                bind()
                 return DeltaTable(self._spark, self._path)
         elif self._mode == "replace":
             raise ValueError(
@@ -918,7 +928,7 @@ class DeltaTableBuilder:
             (name, dtype) for name, dtype, gen in self._cols if gen is None
         ]
         empty = self._spark.createDataFrame(
-            [], ", ".join(f"{n} {t}" for n, t in physical)
+            [], ", ".join(f"`{n.replace('`', '``')}` {t}" for n, t in physical)
         )
         props = dict(self._properties)
         if self._comment is not None:
@@ -932,7 +942,7 @@ class DeltaTableBuilder:
             properties=props,
             schema_mode="overwrite",
         )
-        _bind()
+        bind()
         return DeltaTable(self._spark, self._path)
 
 

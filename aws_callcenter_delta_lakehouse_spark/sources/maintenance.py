@@ -155,7 +155,7 @@ def _refresh_external_exports(
             if _fs().isdir(full):
                 _fs().rmtree(full)
     marker = mt_._read_marker(path)
-    if (marker.get("properties") or {}).get(mt_._LOG_EXPORT_PROP):
+    if mt_._prop_on(marker.get("properties"), mt_._LOG_EXPORT_PROP):
         try:
             export_delta_log(spark, path, versioned=True)
         except mt_.ProtocolError:  # pragma: no cover - reader features
@@ -777,8 +777,8 @@ def purge_rows(
                 _fs().rmtree(full)
                 exported = True
         live_marker = mt._read_marker(path) or {}
-        if exported and (live_marker.get("properties") or {}).get(
-            mt._LOG_EXPORT_PROP
+        if exported and mt._prop_on(
+            live_marker.get("properties"), mt._LOG_EXPORT_PROP
         ):
             export_delta_log(spark, path, versioned=True)
     return {

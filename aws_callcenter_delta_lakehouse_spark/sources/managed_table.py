@@ -125,7 +125,7 @@ class AppendOnlyError(RuntimeError):
 
 
 def _check_append_only(marker: dict, op: str) -> None:
-    if (marker.get("properties") or {}).get(_APPEND_ONLY_PROP):
+    if _prop_on(marker.get("properties"), _APPEND_ONLY_PROP):
         raise AppendOnlyError(
             f"{op} is not allowed on an appendOnly table — rows may be "
             "added, never changed or removed (drop the appendOnly "
@@ -196,7 +196,7 @@ def _required_features(marker: dict) -> tuple[set, set]:
         # it would silently drop the declared column
         reader.add("columnDefaults")
         writer.add("columnDefaults")
-    if marker.get("has_cdf") or (marker.get("properties") or {}).get(_CDF_PROP):
+    if marker.get("has_cdf") or _prop_on(marker.get("properties"), _CDF_PROP):
         writer.add("changeDataFeed")
     if marker.get("constraints"):
         writer.add("checkConstraints")
@@ -214,8 +214,8 @@ def _required_features(marker: dict) -> tuple[set, set]:
         # unreadable.
         reader.add("emptyTableSchema")
         writer.add("emptyTableSchema")
-    if marker.get("row_tracking") or (marker.get("properties") or {}).get(
-        _ROWTRACK_PROP
+    if marker.get("row_tracking") or _prop_on(
+        marker.get("properties"), _ROWTRACK_PROP
     ):
         # writer-only: a read that ignores __row_id is still correct
         # (the column is hidden); a commit that fails to maintain it
@@ -641,7 +641,7 @@ def set_table_property(path: str, name: str, value) -> None:
     values are assigned inside the data commit and cannot be
     reproduced for a separate change frame."""
     marker = _live_marker(path)
-    if name == _CDF_PROP and value and marker.get("identity"):
+    if _prop_on({name: value}, _CDF_PROP) and marker.get("identity"):
         raise ValueError(
             "enableChangeDataFeed is unsupported on tables with identity "
             "columns: identity slot fills happen inside the data commit "
@@ -651,8 +651,16 @@ def set_table_property(path: str, name: str, value) -> None:
     _replace_marker(path, marker)
 
 
+def _prop_on(props: dict | None, name: str) -> bool:
+    """Whether a boolean table property is on. SQL TBLPROPERTIES values
+    can arrive as strings, so a string is on only when it reads
+    ``true`` (``'false'`` is off); any other value keeps its truth."""
+    value = (props or {}).get(name)
+    return value.strip().lower() == "true" if isinstance(value, str) else bool(value)
+
+
 def _cdf_on(marker: dict) -> bool:
-    return bool(marker.get("properties", {}).get(_CDF_PROP))
+    return _prop_on(marker.get("properties"), _CDF_PROP)
 
 
 def _write_cdf(spark_changes: DataFrame, staging: str) -> None:
@@ -1046,7 +1054,7 @@ def read(
         return df.drop(_ROWID_COL) if has_ids else df
     if has_ids:
         return df.withColumnRenamed(_ROWID_COL, _ROWID_PUBLIC)
-    if (_read_marker(path).get("properties") or {}).get(_ROWTRACK_PROP):
+    if _prop_on(_read_marker(path).get("properties"), _ROWTRACK_PROP):
         # enabled but not yet materialized by a commit
         return df.withColumn(_ROWID_PUBLIC, F.lit(None).cast("bigint"))
     raise ValueError(
@@ -1249,9 +1257,7 @@ def table_changes(
                 f"(available: {list_versions(path)})"
             )
         if v == 0 and not marker.get("has_cdf"):
-            if not (marker.get("properties") or {}).get(
-                "enableChangeDataFeed"
-            ):
+            if not _prop_on(marker.get("properties"), _CDF_PROP):
                 raise ValueError(
                     f"version 0 of {path} was created without "
                     "enableChangeDataFeed — its rows cannot be served "
@@ -1579,7 +1585,7 @@ def _merge_upsert_impl(
     partition_by = tuple(partition_by) or tuple(
         meta.get("partition_by", ()) or ()
     )
-    if (meta.get("properties") or {}).get(_APPEND_ONLY_PROP):
+    if _prop_on(meta.get("properties"), _APPEND_ONLY_PROP):
         # Delta delta.appendOnly: INSERT-ONLY merges pass (adding rows
         # is the point of an event log); a matched row would be an
         # update, a BY SOURCE DELETE a removal — both refuse
@@ -2090,7 +2096,7 @@ def commit_overwrite(
             path,
             exempt=set(gen_cols) | set(id_cols) | {_ROWID_COL},
         )
-    tracking = bool(props.get(_ROWTRACK_PROP))
+    tracking = _prop_on(props, _ROWTRACK_PROP)
     row_hw = int(live_marker.get("row_tracking", {}).get("high_water", 0))
     if not tracking and _ROWID_COL in df.columns:
         # tracking switched off: stop materializing the column
@@ -3181,7 +3187,7 @@ def _append_rows_once(
         # last) — the idempotency substrate COPY INTO's loaded-file set
         # rides on; a crash between data and property can't happen
         props.update(extra_properties)
-    tracking = bool(props.get(_ROWTRACK_PROP)) and _ROWID_COL in phys_types
+    tracking = _prop_on(props, _ROWTRACK_PROP) and _ROWID_COL in phys_types
 
     # ---- schema enforcement: the frame must carry exactly the table's
     # non-derived data columns (identity columns MAY be supplied)
@@ -3316,7 +3322,7 @@ def _append_rows_once(
         }
         if has_cdf:
             extra["has_cdf"] = True
-        if bool(props.get(_ROWTRACK_PROP)):
+        if _prop_on(props, _ROWTRACK_PROP):
             extra["row_tracking"] = {"high_water": int(row_hw)}
         if marker.get("schema_json") and int(staged_stats["n_files"]) == 0:
             extra["schema_json"] = marker["schema_json"]  # still empty
@@ -3335,7 +3341,11 @@ def _append_rows_once(
     if not partition_by:
         _auto_optimize(spark, path, props)
     ac = props.get("autoCompact")
-    if ac and not partition_by and not marker.get("dv"):
+    if (
+        _prop_on(props, "autoCompact")
+        and not partition_by
+        and not marker.get("dv")
+    ):
         # Delta autoCompact: continuous appends accrete one small file
         # set per commit — when the property's file-count threshold is
         # crossed, binpack the small files in a data-preserving follow-up
@@ -3716,9 +3726,7 @@ class ManagedWriter:
         Refused on row-tracking tables (the rewrite path that preserves
         ids is MERGE ``withSchemaEvolution``)."""
         spark = self._df.sparkSession
-        if (
-            (_read_marker(path).get("properties") or {}).get(_ROWTRACK_PROP)
-        ):
+        if _prop_on(_read_marker(path).get("properties"), _ROWTRACK_PROP):
             raise ValueError(
                 "mergeSchema append on a row-tracking table: use the "
                 "merge facade's withSchemaEvolution, which preserves "

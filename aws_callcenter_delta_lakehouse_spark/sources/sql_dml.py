@@ -7,15 +7,16 @@ MATCHED ...")`` — plus ``UPDATE`` / ``DELETE FROM`` / ``INSERT INTO``.
 The engine's Python facade (:mod:`sources.delta_api`) already executes
 every one of those semantics; this module adds the SQL SKIN: Spark's
 own SQL parser (``sessionState().sqlParser()``) parses the four DML
-verbs, and this module maps the parsed statement onto names in the
+verbs and the DDL / catalog statements, and this module maps the
+parsed statement onto names in the
 txn-catalog registry (:mod:`sources.txn_catalog`) and the existing
 executors. No new engine semantics live here — every statement
 bottoms out in ``DeltaTable.merge/update/delete`` or ``append_rows`` /
 ``commit_overwrite``, so CDF, row tracking, constraints, OCC retry and
 schema enforcement all apply unchanged.
 
-Entry point: :func:`sql` — DML statements are dispatched here;
-anything else passes through to ``spark.sql`` with registry-name
+Entry point: :func:`sql` — DML, DDL and catalog statements are
+dispatched here; anything else passes through to ``spark.sql`` with registry-name
 references rewritten to per-statement temp views (see "Passthrough
 reads" below), so ``SELECT ... FROM callcenter_analytics.daily_call_summary``
 — the reference's bare-name Athena idiom
@@ -37,36 +38,49 @@ Spark SQL expressions inside conditions/values):
     INSERT INTO tgt [(c, ...)] { VALUES (e,...), ... | SELECT ... }
     INSERT OVERWRITE [TABLE] tgt [(c, ...)] { VALUES ... | SELECT ... }
 
-Commands (``sql_command``, routed automatically by :func:`sql`):
+Commands (``sql_command``; :func:`sql` dispatches them too). Spark's
+parser reads all but the Delta verbs marked ``[regex]``, so clause
+values come from its nodes: any Spark column type (ARRAY, MAP, STRUCT,
+DECIMAL, ...), column COMMENTs, and comments anywhere in the statement.
+``TBLPROPERTIES`` values are typed by one literal rule (``true`` ->
+True, ``7`` -> 7, quoted or not):
 
     CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t
-        (c type [GENERATED ALWAYS AS (expr)], ...)
-        [USING delta] [PARTITIONED BY (...)] [CLUSTER BY (...)]
+        (c type [COMMENT '...'] [GENERATED ALWAYS AS (expr)], ...)
+        [USING delta] [PARTITIONED BY (...) | CLUSTER BY (...)]
         [LOCATION '...'] [TBLPROPERTIES (k=v, ...)] [COMMENT '...']
+    REPLACE TABLE t (...) [clauses as above]
     CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t [clauses as above]
         AS <query>                                  -- CTAS / RTAS
     CREATE TABLE [IF NOT EXISTS] dst [SHALLOW] CLONE src [LOCATION '...']
+                                                    -- [regex]
     ALTER TABLE t { ADD COLUMN[S] (c type [DEFAULT lit], ...)
                   | SET TBLPROPERTIES (k=v, ...)
-                  | RENAME COLUMN a TO b | DROP COLUMN c
+                  | RENAME COLUMN a TO b | DROP COLUMN[S] [IF EXISTS] c, ...
                   | ADD CONSTRAINT n CHECK (expr) | DROP CONSTRAINT n }
-    DESCRIBE { HISTORY | DETAIL } t
-    DESCRIBE [TABLE] t                 -- column name/type listing
+    DESC[RIBE] { HISTORY | DETAIL } t  -- [regex]
+    DESC[RIBE] [TABLE] t               -- column name/type listing
     SHOW TABLES [IN db]                -- name-registry listing (+views)
     DROP TABLE [IF EXISTS] t           -- unbinds the NAME (data stays)
     CREATE [OR REPLACE] VIEW v AS <q>  -- registry LOGICAL view (stored
                                        -- SQL, re-resolved per query)
     DROP VIEW [IF EXISTS] v
-    OPTIMIZE t [WHERE pred] [ZORDER BY (cols)]
-    VACUUM t [RETAIN n HOURS] [DRY RUN]
+    OPTIMIZE t [WHERE pred] [ZORDER BY (cols)]               -- [regex]
+    VACUUM t [RETAIN n HOURS] [DRY RUN]                      -- [regex]
     RESTORE [TABLE] t TO { VERSION AS OF k | TIMESTAMP AS OF '...' }
+                                                             -- [regex]
     ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c, ...]
     TRUNCATE TABLE t
+    SHOW CREATE TABLE t
     SHOW TBLPROPERTIES t
     SHOW PARTITIONS t
-    REORG TABLE t APPLY (PURGE)
+    REORG TABLE t APPLY (PURGE)                              -- [regex]
     COPY INTO t FROM '<dir|file|glob>' [FILEFORMAT = PARQUET|CSV|JSON]
-        [PATTERN = '<glob>'] [FORMAT_OPTIONS (k=v, ...)]
+        [PATTERN = '<glob>'] [FORMAT_OPTIONS (k=v, ...)]     -- [regex]
+
+DESCRIBE and the SHOW forms on a name the registry does not hold (and
+their EXTENDED / PARTITION / LIKE / property-key variants) are Spark's
+own catalog's.
 
 Passthrough reads resolve FOUR registry-name reference shapes, each
 spliced out as a per-statement temp view that :func:`sql` drops after
@@ -113,18 +127,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import managed_table, txn_catalog
-from .delta_api import DeltaTable, _registry_dir
+from .delta_api import DeltaTable, DeltaTableBuilder, _registry_dir, _table_placement
 
 __all__ = ["sql", "sql_command", "sql_script", "SqlDmlError"]
 
 
 class SqlDmlError(ValueError):
-    """Malformed or unsupported DML statement."""
+    """Malformed or unsupported SQL statement."""
 
 
-# -- lexical helpers (commands and scripts) ------------------------------------
-# sql_command's verbs are ones Spark's parser rejects or misreads, so
-# they keep a small scanner: it walks the statement once, tracking
+# -- lexical helpers (Delta verbs and scripts) ---------------------------------
+# The Delta verbs Spark's parser rejects or misreads (_delta_command)
+# keep a small scanner: it walks the statement once, tracking
 # quote/paren state, and finds keyword phrases only at TOP level —
 # expressions, string literals and subqueries pass through verbatim.
 
@@ -269,7 +283,7 @@ def _target(node) -> tuple[str, str | None]:
         node, alias = node.child(), node.alias()
     if node.nodeName() != "UnresolvedRelation":
         raise SqlDmlError(f"DML target must be a table name, got {node.nodeName()}")
-    return ".".join(_seq(node.multipartIdentifier())), alias
+    return _name(node), alias
 
 
 def _text(stmt: str, expr, alias: str | None = None) -> str:
@@ -336,7 +350,7 @@ def _source_df(
         node, alias = node.child(), node.alias()
     kind = node.nodeName()
     if kind == "UnresolvedRelation":
-        name = ".".join(_seq(node.multipartIdentifier()))
+        name = _name(node)
         try:
             df = managed_table.read(spark, _resolve(spark, name, registry_dir))
         except (txn_catalog.TableNameError, ValueError):
@@ -460,7 +474,11 @@ def _insert(spark, stmt, plan, registry_dir, views) -> None:
         managed_table.append_rows(spark, df, path)
 
 
-# -- DDL / utility commands ---------------------------------------------------
+# -- DDL / catalog statements from the parsed plan ----------------------------
+# Every statement Spark's parser reads correctly dispatches on its node
+# class (the _DDL table below) and reads its clause values from node
+# fields. Only the Delta verbs Spark rejects or misreads keep a regex
+# grammar (_delta_command).
 
 
 def _parse_literal(s: str):
@@ -495,194 +513,496 @@ def _parse_props(body: str) -> dict:
     return out
 
 
-_CREATE_HEAD_RE = re.compile(
-    r"CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>" + _IDENT + r")\s*\(",
-    re.I | re.S,
-)
-
-_CREATE_NOPAREN_RE = re.compile(
-    r"CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+"
-    r"(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>" + _IDENT + r")",
-    re.I | re.S,
-)
+def _name(node) -> str:
+    """Dotted name of a parsed table reference: ``UnresolvedIdentifier``
+    (CREATE, DROP) or ``UnresolvedTable[OrView]`` / ``UnresolvedRelation``."""
+    if node.nodeName() == "UnresolvedIdentifier":
+        return ".".join(_seq(node.nameParts()))
+    return ".".join(_seq(node.multipartIdentifier()))
 
 
-def _parse_table_options(rest: str, marks) -> dict:
-    """USING / PARTITIONED BY / CLUSTER BY / LOCATION / TBLPROPERTIES /
-    COMMENT clause values for the column-list-free CREATE forms."""
-    out: dict = {
-        "partition_by": [], "cluster_by": [], "location": None,
-        "props": {}, "comment": None,
-    }
-    for i, (_s0, s1, kw) in enumerate(marks):
-        end = marks[i + 1][0] if i + 1 < len(marks) else len(rest)
-        arg = rest[s1:end].strip()
-        if kw == "USING":
-            if arg.lower() not in ("delta", "managed_table", "parquet"):
-                raise SqlDmlError(f"USING {arg}: unsupported table format")
-        elif kw == "PARTITIONED BY":
-            out["partition_by"] = [
-                c.strip("` ") for c in _split_top(arg.strip("()"))
-            ]
-        elif kw == "CLUSTER BY":
-            out["cluster_by"] = [
-                c.strip("` ") for c in _split_top(arg.strip("()"))
-            ]
-        elif kw == "LOCATION":
-            out["location"] = str(_parse_literal(arg))
-        elif kw == "TBLPROPERTIES":
-            out["props"] = dict(_parse_props(arg.strip("()")))
-        elif kw == "COMMENT":
-            out["comment"] = str(_parse_literal(arg))
-    return out
+def _field(node) -> str:
+    """Top-level column name of a parsed column reference."""
+    parts = _seq(node.name())
+    if len(parts) != 1:
+        raise SqlDmlError(f"nested column {'.'.join(parts)!r} is unsupported")
+    return parts[0]
 
 
-def _refuse_view_target(registry: str, name: str) -> None:
-    """Raise when ``name`` is bound to a VIEW: every CREATE-TABLE shape
-    (column-list DDL, CTAS, CLONE) must refuse BEFORE any data or
-    binding work — a view can never become a table implicitly."""
+def _props(scala_map) -> dict:
+    """Parsed ``TBLPROPERTIES`` -> dict. The parser drops the quoting,
+    so every value arrives as a string; :func:`_parse_literal` types it
+    (``true`` -> True, ``7`` -> 7)."""
+    return {kv._1(): _parse_literal(kv._2()) for kv in _seq(scala_map.toSeq())}
+
+
+def _registry_path(spark, node, registry_dir) -> str | None:
+    """Path of the registry table a parsed reference names, or None
+    when the registry does not hold it (Spark's catalog may)."""
     try:
-        entry = txn_catalog.resolve_entry(registry, name)
-    except txn_catalog.TableNameError:
-        return
-    if "view_sql" in entry:
-        raise SqlDmlError(
-            f"{name!r} is a registered VIEW — a table cannot be "
-            "created under a view name (DROP VIEW first)"
+        return _resolve(spark, _name(node), registry_dir)
+    except (txn_catalog.TableNameError, ValueError):
+        return None
+
+
+def _table_spec(plan) -> tuple[list[str], str | None, dict]:
+    """(partition_by, location, properties) of a parsed CREATE / REPLACE
+    TABLE [AS <query>]: PARTITIONED BY from identity transforms, CLUSTER
+    BY as the ``autoOptimize`` property (``DeltaTableBuilder.clusterBy``'s
+    rule), USING / LOCATION / COMMENT / TBLPROPERTIES from the
+    ``UnresolvedTableSpec``."""
+    spec = plan.tableSpec()
+    provider = _opt(spec.provider())
+    if _opt(spec.serde()) is not None or (provider or "delta").lower() not in (
+        "delta", "managed_table", "parquet",
+    ):
+        raise SqlDmlError(f"USING {provider or 'a Hive serde'}: unsupported table format")
+    if spec.optionExpression().options().size():
+        raise SqlDmlError("CREATE TABLE ... OPTIONS (...) is unsupported — use TBLPROPERTIES")
+    cols: dict[str, list[str]] = {"identity": [], "cluster_by": []}
+    for t in _seq(plan.partitioning()):
+        if t.name() not in cols:
+            raise SqlDmlError(f"unsupported partition transform {t.describe()}")
+        cols[t.name()] += [".".join(r.fieldNames()) for r in t.references()]
+    props = _props(spec.properties())
+    comment = _opt(spec.comment())
+    if comment is not None:
+        props["comment"] = comment
+    if cols["cluster_by"]:
+        props["autoOptimize"] = {"columns": cols["cluster_by"], "max_avg_depth": 2.0}
+    return cols["identity"], _opt(spec.location()), props
+
+
+def _create_table(spark, stmt, plan, registry_dir) -> None:
+    """CREATE [OR REPLACE] TABLE [IF NOT EXISTS] t (cols) ... and
+    REPLACE TABLE: an empty first snapshot through ``DeltaTableBuilder``
+    at the placed path, exactly as a Python caller would build it."""
+    columns = _seq(plan.columns())
+    if not columns:
+        raise SqlDmlError(_CREATE_FORMS)
+    for c in columns:
+        if (
+            not c.nullable()
+            or _opt(c.identityColumnSpec()) is not None
+            or _opt(c.defaultValue()) is not None
+        ):
+            raise SqlDmlError(
+                f"column {c.name()!r}: NOT NULL, IDENTITY and DEFAULT are "
+                "unsupported in CREATE TABLE (column DEFAULTs are added "
+                "post-create via ALTER TABLE ... ADD COLUMN ... DEFAULT)"
+            )
+    partition_by, location, props = _table_spec(plan)
+    path, bind = _table_placement(
+        spark, _name(plan.name()), location, registry_dir, SqlDmlError
+    )
+    if plan.nodeName() == "ReplaceTable":
+        mode = "createOrReplace" if plan.orCreate() else "replace"
+    else:
+        mode = "createIfNotExists" if plan.ignoreIfExists() else "create"
+    builder = DeltaTableBuilder(spark, mode).location(path)
+    builder.partitionedBy(*partition_by)
+    for c in columns:
+        builder.addColumn(
+            c.name(), c.dataType().sql(),
+            generatedAlwaysAs=_opt(c.generationExpression()),
         )
+    for k, v in props.items():
+        builder.property(k, v)
+    builder.execute()
+    bind()
 
 
-def _table_placement(
-    spark: SparkSession,
-    name: str,
-    location: str | None,
-    registry_dir: str | None,
-):
-    """(path, bind) for creating a table under a registry name — same
-    placement + put-if-absent binding rules as
-    ``DeltaTableBuilder.execute`` (managed placement under the
-    registry's warehouse dir when no LOCATION; a name already bound to
-    a DIFFERENT path refuses)."""
-    registry = _registry_dir(spark, registry_dir)
+def _query_df(spark: SparkSession, plan, registry_dir: str | None) -> DataFrame:
+    """The query of a parsed CTAS as a DataFrame. Its text is not sliced
+    — no node spans a plain ``SELECT ... GROUP BY`` (the top node covers
+    only the GROUP BY clause) — so the registry references in the query
+    subtree are spliced out of the parsed statement, the result is
+    parsed again, and its query plan runs as a Dataset (time-travel
+    pins, CTEs and ``table_changes()`` as in any read)."""
+    text = _opt(plan.origin().sqlText())
+    views: list[str] = []
     try:
-        bound = txn_catalog.resolve_table_name(registry, name)
-    except txn_catalog.TableNameError:
-        # distinguish "unbound" from "bound to a VIEW": resolve raises
-        # the same error type for both, and treating a view as unbound
-        # would let CTAS write a whole snapshot before failing at bind
-        # time (orphaned data, late error) — refuse upfront instead
-        _refuse_view_target(registry, name)
-        bound = None
-    path = location or bound or os.path.join(registry, "tables", name)
-    if bound is not None and os.path.abspath(bound) != os.path.abspath(path):
-        raise SqlDmlError(
-            f"table name {name!r} is already bound to {bound} — it cannot "
-            f"also be created at {path}"
+        cuts = _read_cuts(spark, text, plan.query(), registry_dir, views)
+        query = _parse(spark, _splice(text, cuts)).query()
+        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, query
         )
-
-    def bind() -> None:
-        if bound == path:
-            return
-        try:
-            txn_catalog.register_table_name(registry, name, path)
-        except txn_catalog.TableNameError:
-            other = txn_catalog.resolve_table_name(registry, name)
-            if os.path.abspath(other) != os.path.abspath(path):
-                raise
-
-    return path, bind
+        return DataFrame(jdf, spark)
+    finally:
+        for v in views:  # analysis is eager: the views are inlined
+            spark.catalog.dropTempView(v)
 
 
-def _ctas(
-    spark: SparkSession,
-    nm: re.Match,
-    tail: str,
-    registry_dir: str | None,
-) -> None:
-    """CREATE TABLE ... AS <query> (CTAS / CREATE OR REPLACE ... AS):
-    evaluate the query (time-travel pins on registry names honored) and
-    commit it as the table's first (or replacing) snapshot through
+def _ctas(spark, stmt, plan, registry_dir) -> None:
+    """CREATE [OR REPLACE] TABLE ... AS <query> (CTAS / RTAS): evaluate
+    the query (time-travel pins on registry names honored) and commit it
+    as the table's first (or replacing) snapshot through
     ``commit_overwrite`` — constraints, CDF, properties and OCC all
     apply as on any other commit."""
-    marks = _scan(
-        tail,
-        ["USING", "PARTITIONED BY", "CLUSTER BY", "LOCATION",
-         "TBLPROPERTIES", "COMMENT", "AS"],
+    partition_by, location, props = _table_spec(plan)
+    path, bind = _table_placement(
+        spark, _name(plan.name()), location, registry_dir, SqlDmlError
     )
-    as_m = next(
-        (
-            x for x in marks
-            if x[2] == "AS"
-            and re.match(r"\s*(SELECT|WITH|VALUES|TABLE|\()", tail[x[1]:], re.I)
-        ),
-        None,
-    )
-    if as_m is None:
-        raise SqlDmlError(
-            "CREATE TABLE needs a column list, AS <query> (CTAS), or "
-            "[SHALLOW] CLONE <src>"
-        )
-    opts = _parse_table_options(
-        tail[: as_m[0]], [x for x in marks if x[0] < as_m[0] and x[2] != "AS"]
-    )
-    if opts["partition_by"] and opts["cluster_by"]:
-        raise SqlDmlError(
-            "CLUSTER BY and PARTITIONED BY are mutually exclusive "
-            "(Delta's liquid-clustering rule)"
-        )
-    name = nm.group("name").replace("`", "")
-    path, bind = _table_placement(spark, name, opts["location"], registry_dir)
-    exists = managed_table.is_table(spark, path)
-    if exists and not nm.group("replace"):
-        if nm.group("ine"):
-            bind()
-            return
-        raise SqlDmlError(f"{path} is already a managed table")
-    df = _read_df(spark, tail[as_m[1]:].strip(), registry_dir)
-    props = dict(opts["props"])
-    if opts["comment"] is not None:
-        props["comment"] = opts["comment"]
-    if opts["cluster_by"]:
-        props["autoOptimize"] = {
-            "columns": opts["cluster_by"], "max_avg_depth": 2.0,
-        }
+    replace = plan.nodeName() == "ReplaceTableAsSelect"
+    if managed_table.is_table(spark, path):
+        if not replace:
+            if plan.ignoreIfExists():
+                bind()
+                return
+            raise SqlDmlError(f"{path} is already a managed table")
+    elif replace and not plan.orCreate():
+        raise SqlDmlError(f"REPLACE TABLE: {path} is not a managed table")
+    df = _query_df(spark, plan, registry_dir)
     managed_table.commit_overwrite(
         df,
         path,
-        partition_by=opts["partition_by"] or (),
+        partition_by=partition_by,
         properties=props or None,
         schema_mode="overwrite",
     )
     bind()
 
 
-def _clone_table_sql(
-    spark: SparkSession,
-    nm: re.Match,
-    rest: str,
-    kind: str,
-    registry_dir: str | None,
-) -> None:
+def _add_columns(spark, stmt, plan, registry_dir) -> None:
+    path = _resolve(spark, _name(plan.table()), registry_dir)
+    for c in _seq(plan.columnsToAdd()):
+        name = _field(c)
+        if not c.nullable() or _opt(c.position()) is not None:
+            raise SqlDmlError(
+                f"ADD COLUMN {name}: NOT NULL and FIRST / AFTER are unsupported"
+            )
+        default = _opt(c.default())
+        managed_table.add_column(
+            spark, path, name, c.dataType().simpleString(),
+            default=None if default is None else _parse_literal(default.originalSQL()),
+        )
+
+
+def _set_properties(spark, stmt, plan, registry_dir) -> None:
+    path = _resolve(spark, _name(plan.table()), registry_dir)
+    for k, v in _props(plan.properties()).items():
+        managed_table.set_table_property(path, k, v)
+
+
+def _rename_column(spark, stmt, plan, registry_dir) -> None:
+    path = _resolve(spark, _name(plan.table()), registry_dir)
+    managed_table.rename_column(spark, path, _field(plan.column()), plan.newName())
+
+
+def _drop_columns(spark, stmt, plan, registry_dir) -> None:
+    path = _resolve(spark, _name(plan.table()), registry_dir)
+    names = [_field(c) for c in _seq(plan.columnsToDrop())]
+    if plan.ifExists():
+        live = set(managed_table.read(spark, path).columns)
+        names = [n for n in names if n in live]
+    for n in names:
+        managed_table.drop_column(spark, path, n)
+
+
+def _add_check(spark, stmt, plan, registry_dir) -> None:
+    # the parser wraps the table as Filter(NOT cond) over its relation;
+    # the constraint keeps the CHECK's original SQL text
+    path = _resolve(spark, _name(plan.child().child()), registry_dir)
+    check = plan.checkConstraint()
+    managed_table.add_constraint(spark, path, check.name(), check.condition())
+
+
+def _drop_constraint(spark, stmt, plan, registry_dir) -> None:
+    path = _resolve(spark, _name(plan.table()), registry_dir)
+    managed_table.drop_constraint(path, plan.name())  # no-op when absent
+
+
+def _drop_table(spark, stmt, plan, registry_dir) -> None:
+    """DROP TABLE: external-location semantics (every managed table here
+    is path-backed) — DROP removes the NAME BINDING only; the data stays
+    on disk for forPath/vacuum, as Delta does for external tables."""
+    if plan.purge():
+        raise SqlDmlError("DROP TABLE ... PURGE is unsupported: DROP unbinds the name")
+    name = _name(plan.child())
+    try:
+        txn_catalog.unregister_table_name(_registry_dir(spark, registry_dir), name)
+    except txn_catalog.TableNameError as e:
+        # IF EXISTS forgives a MISSING name only; a view binding is
+        # the wrong verb regardless (Spark/Delta: use DROP VIEW)
+        if "is a registered VIEW" in str(e):
+            raise SqlDmlError(f"DROP TABLE: {e}") from None
+        if not plan.ifExists():
+            raise SqlDmlError(f"DROP TABLE: no such table {name!r}") from None
+
+
+def _drop_view(spark, stmt, plan, registry_dir) -> None:
+    try:
+        txn_catalog.unregister_view_name(
+            _registry_dir(spark, registry_dir), _name(plan.child())
+        )
+    except txn_catalog.TableNameError as e:
+        if not plan.ifExists() or "is a registered TABLE" in str(e):
+            raise SqlDmlError(f"DROP VIEW: {e}") from None
+
+
+def _create_view(spark, stmt, plan, registry_dir) -> None:
+    """CREATE [OR REPLACE] VIEW v AS <query>: a registry LOGICAL view —
+    the stored query text is re-resolved by every read."""
+    if (
+        plan.allowExisting()
+        or not plan.userSpecifiedColumns().isEmpty()
+        or _opt(plan.comment()) is not None
+        or not plan.properties().isEmpty()
+    ):
+        raise SqlDmlError("CREATE VIEW supports [OR REPLACE] <name> AS <query> only")
+    # Spark's own text of the query, mapped back onto the statement as
+    # typed: the plan may come from a copy whose `$` metadata tables
+    # were spliced out (sql()), and the view must store their names —
+    # no splice precedes the query and none follows it
+    parsed, query = _opt(plan.origin().sqlText()), _opt(plan.originalText())
+    start = parsed.rindex(query)
+    body = stmt[start : start + len(query) + len(stmt) - len(parsed)]
+    # eager validation (Delta/metastore behavior): the query must
+    # analyze NOW against the live registry — a typo'd column or
+    # unknown table fails the CREATE, not every later read
+    _read_df(spark, body, registry_dir)
+    txn_catalog.register_view_name(
+        _registry_dir(spark, registry_dir),
+        _name(plan.child()),
+        body,
+        replace=plan.replace(),
+    )
+
+
+def _show_tables(spark, stmt, plan, registry_dir):
+    """SHOW TABLES [IN db]: the registry's table and view names. A LIKE
+    pattern is Spark's catalog's business."""
+    if _opt(plan.pattern()) is not None:
+        return spark.sql(stmt)
+    ns = plan.namespace()
+    want_db = (
+        ".".join(_seq(ns.multipartIdentifier()))
+        if ns.nodeName() == "UnresolvedNamespace" else None
+    )
+    registry = _registry_dir(spark, registry_dir)
+    names = sorted(txn_catalog.list_table_names(registry)) + sorted(
+        txn_catalog.list_view_names(registry)
+    )
+    rows = []
+    for n in names:
+        db, _, tbl = n.rpartition(".")
+        if want_db is None or db == want_db:
+            rows.append((db, tbl, False))
+    return spark.createDataFrame(
+        rows, "namespace string, tableName string, isTemporary boolean"
+    )
+
+
+def _describe(spark, stmt, plan, registry_dir):
+    """DESC[RIBE] [TABLE] t: the column name/type listing of a registry
+    table; EXTENDED, a PARTITION spec and names the registry does not
+    hold go to Spark's own catalog."""
+    path = _registry_path(spark, plan.relation(), registry_dir)
+    if path is None or plan.isExtended() or not plan.partitionSpec().isEmpty():
+        return spark.sql(stmt)
+    fields = managed_table.read(spark, path).schema.fields
+    return spark.createDataFrame(
+        [(f.name, f.dataType.simpleString(), None) for f in fields],
+        "col_name string, data_type string, comment string",
+    )
+
+
+def _truncate(spark, stmt, plan, registry_dir) -> None:
+    DeltaTable.forName(spark, _name(plan.table()), registry_dir).delete(None)
+
+
+def _show_create_table(spark, stmt, plan, registry_dir):
+    name = _name(plan.child())
+    path = _registry_path(spark, plan.child(), registry_dir)
+    if path is None or plan.asSerde():
+        return spark.sql(stmt)
+    marker = managed_table._read_marker(path) or {}
+    fields = managed_table.read(spark, path).schema.fields
+    cols = ",\n".join(
+        f"  `{f.name}` {f.dataType.simpleString().upper()}" for f in fields
+    )
+    lines = [f"CREATE TABLE {name} (\n{cols}\n)", "USING delta"]
+    part = marker.get("partition_by") or []
+    if part:
+        lines.append("PARTITIONED BY (" + ", ".join(f"`{c}`" for c in part) + ")")
+    props = marker.get("properties") or {}
+    if props:
+        kv = ", ".join(
+            f"'{k}' = '{v if isinstance(v, str) else json.dumps(v)}'"
+            for k, v in sorted(props.items())
+        )
+        lines.append(f"TBLPROPERTIES ({kv})")
+    lines.append(f"LOCATION '{path}'")
+    return spark.createDataFrame([("\n".join(lines),)], "createtab_stmt string")
+
+
+def _show_properties(spark, stmt, plan, registry_dir):
+    path = _registry_path(spark, plan.table(), registry_dir)
+    if path is None or _opt(plan.propertyKey()) is not None:
+        return spark.sql(stmt)
+    props = (managed_table._read_marker(path) or {}).get("properties") or {}
+    rows = [
+        (k, v if isinstance(v, str) else json.dumps(v))
+        for k, v in sorted(props.items())
+    ]
+    return spark.createDataFrame(rows, "key string, value string")
+
+
+def _show_partitions(spark, stmt, plan, registry_dir):
+    from urllib.parse import unquote
+
+    from .maintenance import _hive_partition_dirs
+
+    path = _registry_path(spark, plan.table(), registry_dir)
+    if path is None or _opt(plan.pattern()) is not None:
+        return spark.sql(stmt)
+    managed_table.recover(path)
+    pby = (managed_table._read_marker(path) or {}).get("partition_by") or []
+    if not pby:
+        raise SqlDmlError("SHOW PARTITIONS: table is not partitioned")
+    rows = []
+    for d in _hive_partition_dirs(path, tuple(pby)).values():
+        rel = os.path.relpath(d, path).split(os.sep)
+        vals = [unquote(seg.split("=", 1)[1]) for seg in rel]
+        rows.append(
+            tuple(None if v == "__HIVE_DEFAULT_PARTITION__" else v for v in vals)
+        )
+    # partition values come back as STRINGS (the on-disk Hive
+    # rendering) — typed reads go through the table scan itself
+    return spark.createDataFrame(
+        sorted(rows, key=lambda t: tuple("" if v is None else v for v in t)),
+        ", ".join(f"`{c}` string" for c in pby),
+    )
+
+
+def _analyze(spark, stmt, plan, registry_dir) -> None:
+    """ANALYZE TABLE t COMPUTE STATISTICS [FOR COLUMNS c, ...] maps onto
+    the engine's skipping indexes: plain COMPUTE STATISTICS refreshes the
+    zone-map stats manifest over every primitive column; FOR COLUMNS
+    narrows the zone maps to the named columns AND builds bloom filters
+    on them."""
+    from pyspark.sql.types import AtomicType
+
+    from .layout import update_bloom_manifest, update_stats_manifest
+
+    by_column = plan.nodeName() == "AnalyzeColumn"
+    if (
+        plan.allColumns() if by_column
+        else plan.noScan() or not plan.partitionSpec().isEmpty()
+    ):
+        raise SqlDmlError(
+            "ANALYZE TABLE supports COMPUTE STATISTICS [FOR COLUMNS c, ...]"
+        )
+    cols = _seq(_opt(plan.columnNames())) if by_column else None
+    path = _resolve(spark, _name(plan.child()), registry_dir)
+
+    def _refresh() -> None:
+        if cols:
+            update_stats_manifest(path, cols)
+            update_bloom_manifest(spark, path, cols)
+        else:
+            schema = managed_table.read(spark, path).schema
+            update_stats_manifest(path, [
+                f.name for f in schema.fields if isinstance(f.dataType, AtomicType)
+            ])
+
+    # state-token re-verify: a concurrent rewriting commit's swap can
+    # interleave so this refresh clobbers the manifest the commit just
+    # rebuilt with one derived from the pre-swap listing. Skipping is
+    # fail-open so correctness holds either way, but the commit-time
+    # freshness guarantee would be silently lost — re-derive from the
+    # post-swap snapshot when the (version, commit-ts) token moved
+    # mid-refresh. Token verification beats holding the commit lock
+    # here: a bloom build is a full Spark scan that could outlive the
+    # lock's stale-steal window on a large table.
+    for _ in range(5):
+        token = managed_table._table_state_token(path)
+        _refresh()
+        if managed_table._table_state_token(path) == token:
+            break
+
+
+# parsed node class -> handler(spark, statement, plan, registry_dir)
+_DDL = {
+    "CreateTable": _create_table,
+    "ReplaceTable": _create_table,
+    "CreateTableAsSelect": _ctas,
+    "ReplaceTableAsSelect": _ctas,
+    "AddColumns": _add_columns,
+    "SetTableProperties": _set_properties,
+    "RenameColumn": _rename_column,
+    "DropColumns": _drop_columns,
+    "AddCheckConstraint": _add_check,
+    "DropConstraint": _drop_constraint,
+    "DropTable": _drop_table,
+    "DropView": _drop_view,
+    "CreateView": _create_view,
+    "ShowTables": _show_tables,
+    "DescribeRelation": _describe,
+    "TruncateTable": _truncate,
+    "ShowCreateTable": _show_create_table,
+    "ShowTableProperties": _show_properties,
+    "ShowPartitions": _show_partitions,
+    "AnalyzeTable": _analyze,
+    "AnalyzeColumn": _analyze,
+}
+
+_CREATE_FORMS = (
+    "CREATE TABLE needs a column list, AS <query> (CTAS), or "
+    "[SHALLOW] CLONE <src>"
+)
+_ALTER_FORMS = (
+    "ALTER TABLE supports ADD COLUMN(S) / SET TBLPROPERTIES / "
+    "RENAME COLUMN / DROP COLUMN(S) / ADD CONSTRAINT ... CHECK (...) / "
+    "DROP CONSTRAINT"
+)
+
+
+def _unhandled(head: str, error: ParseException | None = None) -> SqlDmlError | None:
+    """The refusal for a statement no handler here takes (``error``: its
+    parse failure): ALTER TABLE and CREATE TABLE (``... LIKE``) name the
+    supported forms, an unparsable DML or CREATE carries Spark's
+    message. None leaves the statement to Spark."""
+    verb, noun = ([w.upper() for w in head.split(None, 2)[:2]] + ["", ""])[:2]
+    if (verb, noun) == ("ALTER", "TABLE"):
+        return SqlDmlError(f"{_ALTER_FORMS}, got: {head!r}")
+    if error is None:
+        return SqlDmlError(_CREATE_FORMS) if (verb, noun) == ("CREATE", "TABLE") else None
+    if verb in ("MERGE", "UPDATE", "DELETE", "INSERT", "CREATE", "REPLACE"):
+        return SqlDmlError(str(error))
+    return None
+
+
+# -- Delta verbs Spark's parser rejects or misreads ---------------------------
+
+_COMMAND_RE = re.compile(
+    r"(?:OPTIMIZE|VACUUM|RESTORE|REORG|COPY\s+INTO|DESC(?:RIBE)?\s+(?:HISTORY|DETAIL)"
+    r"|CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    rf"(?P<name>{_IDENT})\s+(?:(?P<kind>SHALLOW|DEEP)\s+)?CLONE)\b",
+    re.I,
+)
+
+
+def _clone_table_sql(spark, m: re.Match, rest: str, registry_dir) -> None:
     """CREATE TABLE dst [SHALLOW] CLONE src [LOCATION '...'] —
     zero-copy clone via ``managed_table.clone_table`` (hardlinked
     snapshot, fresh history). DEEP is refused rather than silently
     aliased: snapshots are immutable, so SHALLOW already yields a fully
     independent table and a byte-copying DEEP would only burn storage."""
-    if kind == "DEEP":
+    if (m.group("kind") or "").upper() == "DEEP":
         raise SqlDmlError(
             "DEEP CLONE is not supported: snapshots are immutable, so "
             "SHALLOW CLONE already yields a fully independent table"
         )
-    if nm.group("replace"):
+    if m.group("replace"):
         raise SqlDmlError(
             "CREATE OR REPLACE ... CLONE is not supported — clone to a "
             "fresh name/location"
         )
-    m = re.match(rf"(?P<src>{_IDENT})\s*(?P<rest>.*)$", rest, re.S)
-    if not m:
+    sm = re.match(rf"(?P<src>{_IDENT})\s*(?P<rest>.*)$", rest, re.S)
+    if not sm:
         raise SqlDmlError(f"cannot parse CLONE source: {rest!r}")
-    extra = m.group("rest").strip()
+    extra = sm.group("rest").strip()
     if re.search(r"(VERSION|TIMESTAMP)\s+AS\s+OF", extra, re.I):
         raise SqlDmlError(
             "CLONE pins the live snapshot; RESTORE the source to the "
@@ -694,182 +1014,18 @@ def _clone_table_sql(
         if not lm:
             raise SqlDmlError(f"cannot parse CLONE options: {extra!r}")
         location = str(_parse_literal(lm.group(1)))
-    src_path = _resolve(spark, m.group("src").replace("`", ""), registry_dir)
-    name = nm.group("name").replace("`", "")
-    path, bind = _table_placement(spark, name, location, registry_dir)
+    src_path = _resolve(spark, sm.group("src").replace("`", ""), registry_dir)
+    path, bind = _table_placement(
+        spark, m.group("name").replace("`", ""), location, registry_dir,
+        SqlDmlError,
+    )
     if managed_table.is_table(spark, path):
-        if nm.group("ine"):
+        if m.group("ine"):
             bind()
             return
         raise SqlDmlError(f"{path} is already a managed table")
     managed_table.clone_table(src_path, path)
     bind()
-
-
-def _balanced(s: str, open_idx: int) -> int:
-    """Index just past the ``)`` matching the ``(`` at ``open_idx``
-    (quote-aware); -1 when unbalanced."""
-    depth, i, n = 0, open_idx, len(s)
-    while i < n:
-        c = s[i]
-        if c in _QUOTES:
-            end = _QUOTES[c]
-            i += 1
-            while i < n and s[i] != end:
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return -1
-
-
-def _create_table(spark: SparkSession, stmt: str, registry_dir: str | None):
-    m = _CREATE_HEAD_RE.match(stmt)
-    close = _balanced(stmt, m.end() - 1) if m else -1
-    if not m or close < 0:
-        nm = _CREATE_NOPAREN_RE.match(stmt)
-        if nm:
-            tail = stmt[nm.end() :].rstrip(";").strip()
-            cm = re.match(r"(?:(SHALLOW|DEEP)\s+)?CLONE\b", tail, re.I)
-            if cm:
-                return _clone_table_sql(
-                    spark, nm, tail[cm.end() :].strip(),
-                    (cm.group(1) or "SHALLOW").upper(), registry_dir,
-                )
-            return _ctas(spark, nm, tail, registry_dir)
-        raise SqlDmlError(
-            "CREATE TABLE needs: CREATE [OR REPLACE] TABLE [IF NOT EXISTS] "
-            "<name> (col type [GENERATED ALWAYS AS (expr)], ...) "
-            "[USING delta] [PARTITIONED BY (...)] [CLUSTER BY (...)] "
-            "[LOCATION '...'] [TBLPROPERTIES (...)] [COMMENT '...'] — "
-            "or the column-list-free forms ... AS <query> (CTAS) and "
-            "... [SHALLOW] CLONE <src>"
-        )
-    cols_body = stmt[m.end() : close - 1]
-    rest_body = stmt[close:]
-    # view-bound names refuse here too (the builder has its own guard,
-    # but this one raises the front-end's error type)
-    _refuse_view_target(
-        _registry_dir(spark, registry_dir), m.group("name").replace("`", "")
-    )
-    if m.group("replace"):
-        builder = DeltaTable.createOrReplace(spark)
-    elif m.group("ine"):
-        builder = DeltaTable.createIfNotExists(spark)
-    else:
-        builder = DeltaTable.create(spark)
-    builder = builder.tableName(m.group("name").replace("`", ""))
-    for coldef in _split_top(cols_body):
-        cm = re.match(
-            r"(`[^`]+`|\w+)\s+(\w+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)"
-            r"(?:\s+GENERATED\s+ALWAYS\s+AS\s*\((?P<gen>.+)\))?\s*$",
-            coldef.strip(),
-            re.I,
-        )
-        if not cm:
-            raise SqlDmlError(
-                f"cannot parse column definition: {coldef!r} (column "
-                "DEFAULTs are added post-create via ALTER TABLE ... ADD "
-                "COLUMN ... DEFAULT)"
-            )
-        builder = builder.addColumn(
-            cm.group(1).strip("`"),
-            cm.group(2).lower(),
-            generatedAlwaysAs=cm.group("gen"),
-        )
-    rest = rest_body.rstrip(";").strip()
-    # one clause grammar for every CREATE form: the column-list shape
-    # maps _parse_table_options' dict onto the builder instead of
-    # re-implementing the keyword loop (review r12 — the two parsers
-    # had already started to drift)
-    opts = _parse_table_options(
-        rest,
-        _scan(
-            rest,
-            ["USING", "PARTITIONED BY", "CLUSTER BY", "LOCATION",
-             "TBLPROPERTIES", "COMMENT"],
-        ),
-    )
-    if opts["partition_by"]:
-        builder = builder.partitionedBy(*opts["partition_by"])
-    if opts["cluster_by"]:
-        builder = builder.clusterBy(*opts["cluster_by"])
-    if opts["location"]:
-        builder = builder.location(opts["location"])
-    for k, v in opts["props"].items():
-        builder = builder.property(k, v)
-    if opts["comment"]:
-        builder = builder.comment(opts["comment"])
-    builder.execute()
-
-
-def _alter_table(spark: SparkSession, body: str, registry_dir: str | None):
-    m = re.match(rf"\s*({_IDENT})\s+(?P<rest>.*)$", body, re.S)
-    if not m:
-        raise SqlDmlError(f"cannot parse ALTER TABLE target: {body!r}")
-    path = _resolve(spark, m.group(1).replace("`", ""), registry_dir)
-    rest = m.group("rest").rstrip(";").strip()
-    am = re.match(
-        r"ADD\s+COLUMNS?\s*\((?P<cols>.*)\)\s*$", rest, re.I | re.S
-    )
-    if am:
-        for coldef in _split_top(am.group("cols")):
-            cm = re.match(
-                r"(`[^`]+`|\w+)\s+(\w+)(?:\s+DEFAULT\s+(?P<dflt>.+))?\s*$",
-                coldef.strip(),
-                re.I,
-            )
-            if not cm:
-                raise SqlDmlError(f"cannot parse column: {coldef!r}")
-            managed_table.add_column(
-                spark, path, cm.group(1).strip("`"), cm.group(2).lower(),
-                default=_parse_literal(cm.group("dflt"))
-                if cm.group("dflt") else None,
-            )
-        return
-    pm = re.match(
-        r"SET\s+TBLPROPERTIES\s*\((?P<props>.*)\)\s*$", rest, re.I | re.S
-    )
-    if pm:
-        for k, v in _parse_props(pm.group("props")).items():
-            managed_table.set_table_property(path, k, v)
-        return
-    rm = re.match(
-        r"RENAME\s+COLUMN\s+(`[^`]+`|\w+)\s+TO\s+(`[^`]+`|\w+)\s*$",
-        rest, re.I,
-    )
-    if rm:
-        managed_table.rename_column(
-            spark, path, rm.group(1).strip("`"), rm.group(2).strip("`")
-        )
-        return
-    dm = re.match(r"DROP\s+COLUMN\s+(`[^`]+`|\w+)\s*$", rest, re.I)
-    if dm:
-        managed_table.drop_column(spark, path, dm.group(1).strip("`"))
-        return
-    acm = re.match(
-        r"ADD\s+CONSTRAINT\s+(`[^`]+`|\w+)\s+CHECK\s*\((?P<expr>.+)\)\s*$",
-        rest,
-        re.I | re.S,
-    )
-    if acm:
-        managed_table.add_constraint(
-            spark, path, acm.group(1).strip("`"), acm.group("expr").strip()
-        )
-        return
-    dcm = re.match(r"DROP\s+CONSTRAINT\s+(`[^`]+`|\w+)\s*$", rest, re.I)
-    if dcm:
-        managed_table.drop_constraint(path, dcm.group(1).strip("`"))
-        return
-    raise SqlDmlError(
-        "ALTER TABLE supports ADD COLUMN(S) / SET TBLPROPERTIES / "
-        "RENAME COLUMN / DROP COLUMN / ADD CONSTRAINT ... CHECK (...) / "
-        f"DROP CONSTRAINT, got: {rest!r}"
-    )
 
 
 def _optimize(spark: SparkSession, body: str, registry_dir: str | None):
@@ -888,339 +1044,110 @@ def _optimize(spark: SparkSession, body: str, registry_dir: str | None):
     return b.executeCompaction()
 
 
-def sql_command(
-    spark: SparkSession, statement: str, registry_dir: str | None = None
+def _delta_command(
+    spark: SparkSession, stmt: str, m: re.Match, registry_dir: str | None
 ):
-    """DDL / utility verbs of the Delta SQL surface (split from
-    :func:`sql` so callers can see DML vs command intent; :func:`sql`
-    routes here automatically)."""
-    stmt = statement.strip()
-    m = re.match(r"CREATE\s+(OR\s+REPLACE\s+)?TABLE\b", stmt, re.I)
-    if m:
-        return _create_table(spark, stmt, registry_dir)
-    m = re.match(r"ALTER\s+TABLE\b", stmt, re.I)
-    if m:
-        return _alter_table(spark, stmt[m.end() :], registry_dir)
-    m = re.match(r"DESCRIBE\s+(HISTORY|DETAIL)\b", stmt, re.I)
-    if m:
-        name, _a = _parse_relation(stmt[m.end() :].rstrip(";").strip())
+    """The Delta verbs Spark's parser rejects (OPTIMIZE, VACUUM, RESTORE,
+    REORG, COPY INTO, CLONE) or misreads (``DESCRIBE HISTORY t`` parses
+    as a DescribeColumn of a table named HISTORY). ``stmt`` is the
+    comment-free statement, ``m`` its :data:`_COMMAND_RE` match."""
+    if m.group("name"):
+        return _clone_table_sql(spark, m, stmt[m.end() :].rstrip(";").strip(), registry_dir)
+    words = m.group(0).upper().split()
+    body = stmt[m.end() :].rstrip(";").strip()
+    if words[0] in ("DESC", "DESCRIBE"):
+        name, _a = _parse_relation(body)
         dt = DeltaTable.forName(spark, name, registry_dir)
-        return dt.history() if m.group(1).upper() == "HISTORY" else dt.detail()
-    m = re.match(r"OPTIMIZE\b", stmt, re.I)
-    if m:
+        return dt.history() if words[1] == "HISTORY" else dt.detail()
+    if words[0] == "OPTIMIZE":
         return _optimize(spark, stmt[m.end() :], registry_dir)
-    m = re.match(r"VACUUM\b", stmt, re.I)
-    if m:
-        body = stmt[m.end() :].rstrip(";").strip()
-        vm = re.match(
-            rf"({_IDENT})(?:\s+RETAIN\s+(\d+(?:\.\d+)?)\s+HOURS)?"
-            r"(\s+DRY\s+RUN)?\s*$",
+    if words[0] == "VACUUM":
+        vm = re.fullmatch(
+            rf"({_IDENT})(?:\s+RETAIN\s+(\d+(?:\.\d+)?)\s+HOURS)?(\s+DRY\s+RUN)?",
             body,
             re.I,
         )
         if not vm:
             raise SqlDmlError(f"cannot parse VACUUM: {body!r}")
-        dt = DeltaTable.forName(
-            spark, vm.group(1).replace("`", ""), registry_dir
-        )
+        dt = DeltaTable.forName(spark, vm.group(1).replace("`", ""), registry_dir)
         return dt.vacuum(
             retentionHours=float(vm.group(2)) if vm.group(2) else 168.0,
             dry_run=bool(vm.group(3)),
         )
-    m = re.match(
-        rf"RESTORE\s+(?:TABLE\s+)?({_IDENT})\s+TO\s+"
-        r"(?:VERSION\s+AS\s+OF\s+(?P<ver>\d+)"
-        r"|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')\s*;?\s*$",
-        stmt,
-        re.I,
-    )
-    if m:
-        path = _resolve(spark, m.group(1).replace("`", ""), registry_dir)
-        if m.group("ver") is not None:
-            version = int(m.group("ver"))
-        else:
-            version = managed_table.version_as_of(
-                path, _parse_ts_utc(m.group("ts"))
-            )
-        return managed_table.restore_table(spark, path, version)
-    m = re.match(
-        rf"ANALYZE\s+TABLE\s+({_IDENT})\s+COMPUTE\s+STATISTICS"
-        rf"(?:\s+FOR\s+COLUMNS\s+(?P<cols>[^;]+))?\s*;?\s*$",
-        stmt,
-        re.I,
-    )
-    if m:
-        # maps onto the engine's skipping indexes: plain COMPUTE
-        # STATISTICS refreshes the zone-map stats manifest over every
-        # primitive column; FOR COLUMNS narrows the zone maps to the
-        # named columns AND builds bloom filters on them
-        from pyspark.sql.types import AtomicType
-
-        from .layout import update_bloom_manifest, update_stats_manifest
-
-        path = _resolve(spark, m.group(1).replace("`", ""), registry_dir)
-
-        def _refresh() -> None:
-            if m.group("cols"):
-                cols = [
-                    c.strip().strip("`") for c in _split_top(m.group("cols"))
-                ]
-                update_stats_manifest(path, cols)
-                update_bloom_manifest(spark, path, cols)
-            else:
-                schema = managed_table.read(spark, path).schema
-                cols = [
-                    f.name for f in schema.fields
-                    if isinstance(f.dataType, AtomicType)
-                ]
-                update_stats_manifest(path, cols)
-
-        # state-token re-verify (advice r11): a concurrent rewriting
-        # commit's swap can interleave so this refresh clobbers the
-        # manifest the commit just rebuilt with one derived from the
-        # pre-swap listing. Skipping is fail-open so correctness holds
-        # either way, but the commit-time freshness guarantee would be
-        # silently lost — re-derive from the post-swap snapshot when
-        # the (version, commit-ts) token moved mid-refresh. Token
-        # verification beats holding the commit lock here: a bloom
-        # build is a full Spark scan that could outlive the lock's
-        # stale-steal window on a large table.
-        for _ in range(5):
-            token = managed_table._table_state_token(path)
-            _refresh()
-            if managed_table._table_state_token(path) == token:
-                break
-        return None
-    m = re.match(
-        rf"COPY\s+INTO\s+(?P<name>{_IDENT})\s+FROM\s+(?P<src>'[^']*')\s*"
-        r"(?:FILEFORMAT\s*=\s*(?P<fmt>\w+))?\s*"
-        r"(?:PATTERN\s*=\s*(?P<pat>'[^']*'))?\s*"
-        r"(?:FORMAT_OPTIONS\s*\((?P<opts>[^)]*)\))?\s*;?\s*$",
-        stmt,
-        re.I | re.S,
-    )
-    if m:
-        from .copy_into import copy_into
-
-        path = _resolve(spark, m.group("name").replace("`", ""), registry_dir)
-        return copy_into(
-            spark,
-            path,
-            str(_parse_literal(m.group("src"))),
-            file_format=(m.group("fmt") or "parquet").lower(),
-            pattern=(
-                str(_parse_literal(m.group("pat"))) if m.group("pat") else None
-            ),
-            format_options=(
-                {
-                    str(k): str(v)
-                    for k, v in _parse_props(m.group("opts")).items()
-                }
-                if m.group("opts")
-                else None
-            ),
-        )
-    m = re.match(rf"TRUNCATE\s+TABLE\s+({_IDENT})\s*;?\s*$", stmt, re.I)
-    if m:
-        DeltaTable.forName(
-            spark, m.group(1).replace("`", ""), registry_dir
-        ).delete(None)
-        return None
-    m = re.match(
-        rf"SHOW\s+TABLES(?:\s+(?:IN|FROM)\s+({_IDENT}))?\s*;?\s*$", stmt, re.I
-    )
-    if m:
-        registry = _registry_dir(spark, registry_dir)
-        names = sorted(txn_catalog.list_table_names(registry)) + sorted(
-            txn_catalog.list_view_names(registry)
-        )
-        want_db = m.group(1).replace("`", "") if m.group(1) else None
-        rows = []
-        for n in names:
-            db, _, tbl = n.rpartition(".")
-            if want_db is None or db == want_db:
-                rows.append((db, tbl, False))
-        return spark.createDataFrame(
-            rows or [],
-            "namespace string, tableName string, isTemporary boolean",
-        )
-    m = re.match(
-        rf"CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(?P<name>{_IDENT})\s+AS\s+"
-        r"(?P<body>.+?)\s*;?\s*$",
-        stmt,
-        re.I | re.S,
-    )
-    if m:
-        name = m.group("name").replace("`", "")
-        body = m.group("body").strip()
-        # eager validation (Delta/metastore behavior): the SELECT must
-        # analyze NOW against the live registry — a typo'd column or
-        # unknown table fails the CREATE, not every later read
-        _read_df(spark, body, registry_dir)
-        txn_catalog.register_view_name(
-            _registry_dir(spark, registry_dir),
-            name,
+    if words[0] == "RESTORE":
+        rm = re.fullmatch(
+            rf"(?:TABLE\s+)?({_IDENT})\s+TO\s+"
+            r"(?:VERSION\s+AS\s+OF\s+(?P<ver>\d+)"
+            r"|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')",
             body,
-            replace=bool(m.group(1)),
+            re.I,
         )
-        return None
-    m = re.match(
-        rf"DROP\s+VIEW\s+(IF\s+EXISTS\s+)?({_IDENT})\s*;?\s*$", stmt, re.I
-    )
-    if m:
-        name = m.group(2).replace("`", "")
-        try:
-            txn_catalog.unregister_view_name(
-                _registry_dir(spark, registry_dir), name
-            )
-        except txn_catalog.TableNameError as e:
-            if not m.group(1) or "is a registered TABLE" in str(e):
-                raise SqlDmlError(f"DROP VIEW: {e}") from None
-        return None
-    m = re.match(
-        rf"DESCRIBE\s+(?:TABLE\s+)?({_IDENT})\s*;?\s*$", stmt, re.I
-    )
-    if m:
-        try:
-            path = _resolve(spark, m.group(1).replace("`", ""), registry_dir)
-        except txn_catalog.TableNameError:
-            # not a registry name — Spark's own catalog may describe it
-            # (temp views, catalog tables); review r12: raising here
-            # broke the module's names-fall-through contract
-            return spark.sql(stmt)
-        fields = managed_table.read(spark, path).schema.fields
-        return spark.createDataFrame(
-            [(f.name, f.dataType.simpleString(), None) for f in fields],
-            "col_name string, data_type string, comment string",
-        )
-    m = re.match(
-        rf"DROP\s+TABLE\s+(IF\s+EXISTS\s+)?({_IDENT})\s*;?\s*$", stmt, re.I
-    )
-    if m:
-        # external-location semantics (every managed table here is
-        # path-backed): DROP removes the NAME BINDING only; the data
-        # stays on disk for forPath/vacuum. Delta behaves the same for
-        # external tables.
-        name = m.group(2).replace("`", "")
-        try:
-            txn_catalog.unregister_table_name(
-                _registry_dir(spark, registry_dir), name
-            )
-        except txn_catalog.TableNameError as e:
-            # IF EXISTS forgives a MISSING name only; a view binding is
-            # the wrong verb regardless (Spark/Delta: use DROP VIEW)
-            if "is a registered VIEW" in str(e):
-                raise SqlDmlError(f"DROP TABLE: {e}") from None
-            if not m.group(1):
-                raise SqlDmlError(
-                    f"DROP TABLE: no such table {name!r}"
-                ) from None
-        return None
-    m = re.match(
-        rf"SHOW\s+CREATE\s+TABLE\s+({_IDENT})\s*;?\s*$", stmt, re.I
-    )
-    if m:
-        name = m.group(1).replace("`", "")
-        try:
-            path = _resolve(spark, name, registry_dir)
-        except txn_catalog.TableNameError:
-            return spark.sql(stmt)  # Spark's catalog may know the name
-        marker = managed_table._read_marker(path) or {}
-        fields = managed_table.read(spark, path).schema.fields
-        cols = ",\n".join(
-            f"  `{f.name}` {f.dataType.simpleString().upper()}"
-            for f in fields
-        )
-        lines = [f"CREATE TABLE {name} (\n{cols}\n)", "USING delta"]
-        part = marker.get("partition_by") or []
-        if part:
-            lines.append(
-                "PARTITIONED BY (" + ", ".join(f"`{c}`" for c in part) + ")"
-            )
-        props = marker.get("properties") or {}
-        if props:
-            kv = ", ".join(
-                f"'{k}' = '{v if isinstance(v, str) else json.dumps(v)}'"
-                for k, v in sorted(props.items())
-            )
-            lines.append(f"TBLPROPERTIES ({kv})")
-        lines.append(f"LOCATION '{path}'")
-        return spark.createDataFrame(
-            [("\n".join(lines),)], "createtab_stmt string"
-        )
-    m = re.match(rf"SHOW\s+TBLPROPERTIES\s+({_IDENT})\s*;?\s*$", stmt, re.I)
-    if m:
-        try:
-            path = _resolve(spark, m.group(1).replace("`", ""), registry_dir)
-        except txn_catalog.TableNameError:
-            return spark.sql(stmt)  # Spark's catalog may know the name
-        props = (managed_table._read_marker(path) or {}).get(
-            "properties"
-        ) or {}
-        rows = [
-            (k, v if isinstance(v, str) else json.dumps(v))
-            for k, v in sorted(props.items())
-        ]
-        return spark.createDataFrame(rows or [], "key string, value string")
-    m = re.match(rf"SHOW\s+PARTITIONS\s+({_IDENT})\s*;?\s*$", stmt, re.I)
-    if m:
-        from urllib.parse import unquote
-
-        from .maintenance import _hive_partition_dirs
-
-        try:
-            path = _resolve(spark, m.group(1).replace("`", ""), registry_dir)
-        except txn_catalog.TableNameError:
-            return spark.sql(stmt)  # Spark's catalog may know the name
-        managed_table.recover(path)
-        pby = (managed_table._read_marker(path) or {}).get(
-            "partition_by"
-        ) or []
-        if not pby:
-            raise SqlDmlError("SHOW PARTITIONS: table is not partitioned")
-        rows = []
-        for d in _hive_partition_dirs(path, tuple(pby)).values():
-            rel = os.path.relpath(d, path).split(os.sep)
-            vals = [unquote(seg.split("=", 1)[1]) for seg in rel]
-            rows.append(
-                tuple(
-                    None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                    for v in vals
-                )
-            )
-        # partition values come back as STRINGS (the on-disk Hive
-        # rendering) — typed reads go through the table scan itself
-        return spark.createDataFrame(
-            sorted(rows, key=lambda t: tuple("" if v is None else v
-                                             for v in t)),
-            ", ".join(f"`{c}` string" for c in pby),
-        )
-    m = re.match(
-        rf"REORG\s+TABLE\s+({_IDENT})\s+APPLY\s*\(\s*PURGE\s*\)\s*;?\s*$",
-        stmt,
-        re.I,
-    )
-    if m:
+        if not rm:
+            raise SqlDmlError(f"cannot parse RESTORE: {body!r}")
+        path = _resolve(spark, rm.group(1).replace("`", ""), registry_dir)
+        if rm.group("ver") is not None:
+            version = int(rm.group("ver"))
+        else:
+            version = managed_table.version_as_of(path, _parse_ts_utc(rm.group("ts")))
+        return managed_table.restore_table(spark, path, version)
+    if words[0] == "REORG":
+        rm = re.fullmatch(rf"TABLE\s+({_IDENT})\s+APPLY\s*\(\s*PURGE\s*\)", body, re.I)
+        if not rm:
+            raise SqlDmlError(f"cannot parse REORG (APPLY (PURGE) only): {body!r}")
         from .maintenance import materialize_deletes
 
-        path = _resolve(spark, m.group(1).replace("`", ""), registry_dir)
+        path = _resolve(spark, rm.group(1).replace("`", ""), registry_dir)
         return materialize_deletes(spark, path)
-    if re.match(r"(DESCRIBE|DESC|SHOW)\b", stmt, re.I):
-        # metadata verbs we don't model (DESCRIBE QUERY/FUNCTION, SHOW
-        # DATABASES/FUNCTIONS/...) — Spark's own catalog serves them
-        return spark.sql(stmt)
-    raise SqlDmlError(f"unsupported command: {stmt.split()[0] if stmt else ''}")
+    # COPY INTO
+    cm = re.fullmatch(
+        rf"(?P<name>{_IDENT})\s+FROM\s+(?P<src>'[^']*')\s*"
+        r"(?:FILEFORMAT\s*=\s*(?P<fmt>\w+))?\s*"
+        r"(?:PATTERN\s*=\s*(?P<pat>'[^']*'))?\s*"
+        r"(?:FORMAT_OPTIONS\s*\((?P<opts>[^)]*)\))?",
+        body,
+        re.I | re.S,
+    )
+    if not cm:
+        raise SqlDmlError(f"cannot parse COPY INTO: {body!r}")
+    from .copy_into import copy_into
+
+    path = _resolve(spark, cm.group("name").replace("`", ""), registry_dir)
+    return copy_into(
+        spark,
+        path,
+        str(_parse_literal(cm.group("src"))),
+        file_format=(cm.group("fmt") or "parquet").lower(),
+        pattern=str(_parse_literal(cm.group("pat"))) if cm.group("pat") else None,
+        format_options=(
+            {str(k): str(v) for k, v in _parse_props(cm.group("opts")).items()}
+            if cm.group("opts")
+            else None
+        ),
+    )
 
 
-_COMMAND_RE = re.compile(
-    r"(CREATE\s+(OR\s+REPLACE\s+)?TABLE|ALTER\s+TABLE|"
-    r"DESCRIBE|OPTIMIZE|VACUUM|RESTORE|"
-    r"TRUNCATE\s+TABLE|SHOW\s+TBLPROPERTIES|SHOW\s+PARTITIONS|"
-    r"SHOW\s+TABLES|DROP\s+TABLE|SHOW\s+CREATE\s+TABLE|"
-    r"CREATE\s+(OR\s+REPLACE\s+)?VIEW|DROP\s+VIEW|ANALYZE\s+TABLE|"
-    r"REORG\s+TABLE|COPY\s+INTO)\b",
-    re.I,
-)
+def sql_command(
+    spark: SparkSession, statement: str, registry_dir: str | None = None
+):
+    """DDL, catalog and Delta utility statements (split from :func:`sql`
+    so callers can see DML vs command intent; :func:`sql` dispatches
+    the same statements itself). The Delta verbs Spark's parser rejects
+    or misreads are read by :data:`_COMMAND_RE`; every other statement
+    is parsed by Spark and dispatched on its node class."""
+    head = _strip_comments(statement).strip()
+    m = _COMMAND_RE.match(head)
+    if m:
+        return _delta_command(spark, head, m, registry_dir)
+    try:
+        plan = _parse(spark, statement)
+    except ParseException as e:
+        raise _unhandled(head, e) or SqlDmlError(str(e)) from None
+    ddl = _DDL.get(plan.nodeName())
+    if ddl is None:
+        raise _unhandled(head) or SqlDmlError(
+            f"unsupported command: {head.split(None, 1)[0] if head else ''}"
+        )
+    return ddl(spark, statement, plan, registry_dir)
 
 
 # -- passthrough reads: registry references from the parsed plan -------------
@@ -1523,17 +1450,19 @@ _DML = {
 def sql(
     spark: SparkSession, statement: str, registry_dir: str | None = None
 ) -> DataFrame | None:
-    """Execute one SQL statement. Command verbs Spark's parser rejects
-    or misreads (OPTIMIZE, VACUUM, DESCRIBE HISTORY, ...) go to
-    :func:`sql_command`; anything else is parsed once by Spark. MERGE /
-    UPDATE / DELETE / INSERT run on the managed-table executors by
-    registry NAME and return None (as delta-spark's Python DML does);
-    other statements return ``spark.sql`` over the registry-spliced
-    text — or over the original text when it does not parse, so
-    Spark's own error surfaces."""
-    stmt = statement.strip()
-    if _COMMAND_RE.match(stmt):
-        out = sql_command(spark, statement, registry_dir)
+    """Execute one SQL statement. The Delta verbs Spark's parser rejects
+    or misreads (OPTIMIZE, VACUUM, DESCRIBE HISTORY, CLONE, ...) are
+    read by :data:`_COMMAND_RE`; anything else is parsed once by Spark
+    and dispatched on its node class. DDL and catalog statements run on
+    the registry (:data:`_DDL`); MERGE / UPDATE / DELETE / INSERT run on
+    the managed-table executors by registry NAME and return None (as
+    delta-spark's Python DML does); other statements return
+    ``spark.sql`` over the registry-spliced text — or over the original
+    text when it does not parse, so Spark's own error surfaces."""
+    head = _strip_comments(statement).lstrip()
+    m = _COMMAND_RE.match(head)
+    if m:
+        out = _delta_command(spark, head.rstrip(), m, registry_dir)
         return out if isinstance(out, DataFrame) else None
     views: list[str] = []
     try:
@@ -1541,14 +1470,24 @@ def sql(
         try:
             plan = _parse(spark, text)
         except ParseException as e:
-            verb = stmt.split(None, 1)[0].upper() if stmt else ""
-            if verb in ("MERGE", "UPDATE", "DELETE", "INSERT"):
-                raise SqlDmlError(str(e)) from None
+            refusal = _unhandled(head, e)
+            if refusal is not None:
+                raise refusal from None
             return spark.sql(statement)
-        dml = _DML.get(plan.nodeName())
+        kind = plan.nodeName()
+        ddl = _DDL.get(kind)
+        if ddl is not None:
+            # the original text: only a query tail (CTAS, CREATE VIEW)
+            # is sliced from it, and no metadata splice precedes one
+            out = ddl(spark, statement, plan, registry_dir)
+            return out if isinstance(out, DataFrame) else None
+        dml = _DML.get(kind)
         if dml is not None:
             dml(spark, text, plan, registry_dir, views)
             return None
+        refusal = _unhandled(head)
+        if refusal is not None:
+            raise refusal
         cuts = _read_cuts(spark, text, plan, registry_dir, views)
         return spark.sql(_splice(text, cuts))
     finally:
@@ -1559,43 +1498,35 @@ def sql(
             spark.catalog.dropTempView(v)
 
 
-def _strip_line_comments(text: str) -> str:
-    """Remove ``--`` line comments, quote-aware (a ``--`` inside a
-    string literal survives)."""
-    out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in _QUOTES:
-            end = _QUOTES[c]
-            j = i + 1
-            while j < n and text[j] != end:
-                j += 2 if text[j] == "\\" and end != "`" else 1
-            out.append(text[i : min(j + 1, n)])
-            i = j + 1
-        elif c == "-" and i + 1 < n and text[i + 1] == "-":
-            while i < n and text[i] != "\n":
-                i += 1
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
+# a string literal or quoted name (kept whole), or a comment; an
+# unterminated one runs to the end of the text
+_LEX_RE = re.compile(
+    r"""('(?:\\.|[^'\\])*'?|"(?:\\.|[^"\\])*"?|`[^`]*`?)"""
+    r"|--[^\n]*|/\*.*?(?:\*/|\Z)",
+    re.S,
+)
+
+
+def _strip_comments(text: str) -> str:
+    """Replace ``--`` and ``/* */`` comments with a space, quote-aware
+    (a comment marker inside a string literal or quoted name survives)."""
+    return _LEX_RE.sub(lambda m: m.group(1) or " ", text)
 
 
 def sql_script(
     spark: SparkSession, script: str, registry_dir: str | None = None
 ) -> list[DataFrame | None]:
     """Execute a multi-statement SQL script (the ``.sql``-file idiom,
-    e.g. the reference's ``sql/athena_queries.sql``): strip ``--``
-    comments, split on top-level ``;`` (quote/paren-aware — a ``;``
-    inside a string literal or subquery survives), run each statement
-    through :func:`sql` in order, and return the per-statement results
-    (a DataFrame for reads/commands that produce one, else None).
-    Statements run sequentially with no implicit transaction — each
-    DML commit is individually atomic exactly as in single-statement
-    use; a failing statement raises and leaves earlier commits in
-    place (same as running the file line by line)."""
+    e.g. the reference's ``sql/athena_queries.sql``): strip ``--`` and
+    ``/* */`` comments, split on top-level ``;`` (quote/paren-aware — a
+    ``;`` inside a string literal or subquery survives), run each
+    statement through :func:`sql` in order, and return the
+    per-statement results (a DataFrame for reads/commands that produce
+    one, else None). Statements run sequentially with no implicit
+    transaction — each DML commit is individually atomic exactly as in
+    single-statement use; a failing statement raises and leaves earlier
+    commits in place (same as running the file line by line)."""
     results: list[DataFrame | None] = []
-    for stmt in _split_top(_strip_line_comments(script), ";"):
+    for stmt in _split_top(_strip_comments(script), ";"):
         results.append(sql(spark, stmt, registry_dir))
     return results
