@@ -19,6 +19,7 @@ SURVEY §3.2 step 5) — at 100 TB the three scans are the dominant cost.
 from __future__ import annotations
 
 import datetime as dt
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,28 +42,19 @@ def _status_agg(df: DataFrame, keys: list[str]) -> DataFrame:
     return with_rate(df.groupBy(*keys).agg(*aggs), "completed_calls")
 
 
-def gold_job(
-    spark: SparkSession,
-    silver_path: str,
-    gold_root: str,
-    processing_date: dt.date | None = None,
-) -> dict[str, str]:
-    """Build/merge the three Gold tables; returns per-table action."""
-    processing_date = processing_date or dt.date.today()
-    prcsd_date = F.lit(processing_date)
-
-    silver = managed_table.read(spark, silver_path)
-
+@contextmanager
+def _gold_tables(spark: SparkSession, silver_path: str, processing_date: dt.date):
+    """The three Gold aggregates over one cached Silver scan, as
+    ``(table name, frame, merge keys)``; the scan is released on exit,
+    so publish inside the ``with``."""
     # Column pruning + call_date stamp (02_gold_analytics.py:35-38).
-    base = silver.select(
-        "call_id", "agent_id", "call_start_time", "call_end_time", "call_status"
-    ).withColumn("call_date", prcsd_date)
-    base = base.cache()
+    base = (
+        managed_table.read(spark, silver_path)
+        .select("call_id", "agent_id", "call_start_time", "call_end_time", "call_status")
+        .withColumn("call_date", F.lit(processing_date))
+        .cache()
+    )
     try:
-        daily = _status_agg(base, ["call_date"])
-
-        agent = _status_agg(base, ["agent_id", "call_date"])
-
         # duration_sec from HH:mm:ss strings; negative (midnight-crossing)
         # durations dropped (02_gold_analytics.py:40-43, quirk Q4).
         # try_to_timestamp keeps the reference's Spark-3 semantics
@@ -72,23 +64,43 @@ def gold_job(
             F.unix_timestamp(F.try_to_timestamp(F.col("call_end_time"), F.lit("HH:mm:ss")))
             - F.unix_timestamp(F.try_to_timestamp(F.col("call_start_time"), F.lit("HH:mm:ss"))),
         ).filter(F.col("duration_sec") >= 0)
-        duration = duration_metrics(with_duration, "call_date", "duration_sec")
-
-        actions = {}
-        for name, df, keys in (
-            ("gold_call_daily_summary", daily, ["call_date"]),
-            ("gold_agent_performance", agent, ["call_date", "agent_id"]),
-            ("gold_call_duration_metrics", duration, ["call_date"]),
-        ):
-            stamped = df.withColumns(
-                {"year": F.year(prcsd_date), "month": F.month(prcsd_date)}
-            )
-            actions[name] = managed_table.write_or_merge(
-                spark, stamped, f"{gold_root}/{name}", keys, PARTITIONS
-            )
+        yield (
+            ("gold_call_daily_summary", _status_agg(base, ["call_date"]), ("call_date",)),
+            (
+                "gold_agent_performance",
+                _status_agg(base, ["agent_id", "call_date"]),
+                ("call_date", "agent_id"),
+            ),
+            (
+                "gold_call_duration_metrics",
+                duration_metrics(with_duration, "call_date", "duration_sec"),
+                ("call_date",),
+            ),
+        )
     finally:
         base.unpersist()
-    return actions
+
+
+def gold_job(
+    spark: SparkSession,
+    silver_path: str,
+    gold_root: str,
+    processing_date: dt.date | None = None,
+) -> dict[str, str]:
+    """Build/merge the three Gold tables; returns per-table action."""
+    processing_date = processing_date or dt.date.today()
+    prcsd_date = F.lit(processing_date)
+    with _gold_tables(spark, silver_path, processing_date) as tables:
+        return {
+            name: managed_table.write_or_merge(
+                spark,
+                df.withColumns({"year": F.year(prcsd_date), "month": F.month(prcsd_date)}),
+                f"{gold_root}/{name}",
+                keys,
+                PARTITIONS,
+            )
+            for name, df, keys in tables
+        }
 
 
 def gold_job_txn(
@@ -99,7 +111,7 @@ def gold_job_txn(
     processing_date: dt.date | None = None,
 ) -> int:
     """The Gold publish as ONE multi-table transaction: all three
-    aggregates (same builders as :func:`gold_job`) become visible to
+    aggregates (same builder as :func:`gold_job`) become visible to
     catalog readers in a single atomic pointer flip — an analytics
     dashboard can never observe today's daily summary next to
     yesterday's agent table, the skew the per-table MERGE loop of
@@ -112,43 +124,8 @@ def gold_job_txn(
     from ..sources import txn_catalog
 
     processing_date = processing_date or dt.date.today()
-    prcsd_date = F.lit(processing_date)
-    silver = managed_table.read(spark, silver_path)
-    base = silver.select(
-        "call_id", "agent_id", "call_start_time", "call_end_time", "call_status"
-    ).withColumn("call_date", prcsd_date)
-    base = base.cache()
-    try:
-        daily = _status_agg(base, ["call_date"])
-        agent = _status_agg(base, ["agent_id", "call_date"])
-        with_duration = base.withColumn(
-            "duration_sec",
-            F.unix_timestamp(
-                F.try_to_timestamp(F.col("call_end_time"), F.lit("HH:mm:ss"))
-            )
-            - F.unix_timestamp(
-                F.try_to_timestamp(F.col("call_start_time"), F.lit("HH:mm:ss"))
-            ),
-        ).filter(F.col("duration_sec") >= 0)
-        duration = duration_metrics(with_duration, "call_date", "duration_sec")
-        version = txn_catalog.commit_tables(
-            {
-                "gold_call_daily_summary": (
-                    daily, f"{gold_root}/gold_call_daily_summary", ("call_date",)
-                ),
-                "gold_agent_performance": (
-                    agent,
-                    f"{gold_root}/gold_agent_performance",
-                    ("call_date", "agent_id"),
-                ),
-                "gold_call_duration_metrics": (
-                    duration,
-                    f"{gold_root}/gold_call_duration_metrics",
-                    ("call_date",),
-                ),
-            },
+    with _gold_tables(spark, silver_path, processing_date) as tables:
+        return txn_catalog.commit_tables(
+            {name: (df, f"{gold_root}/{name}", keys) for name, df, keys in tables},
             catalog_dir,
         )
-    finally:
-        base.unpersist()
-    return version

@@ -220,7 +220,7 @@ def incremental_join_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join for removed keys (none here), O(|Δ|) instead of the full
     fact rescan the oracle performs. Parity with the recompute IS the
     check."""
-    from ..sources.incremental import refresh_join_mv_fact_changes
+    from ..sources.incremental_mv import refresh_join_mv_fact_changes
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"

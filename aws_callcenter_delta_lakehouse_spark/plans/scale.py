@@ -244,7 +244,7 @@ def incremental_gold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources import managed_table as mt
-    from ..sources.incremental import refresh_count_sum_aggregate
+    from ..sources.incremental_mv import fold_change_deltas
 
     # cut once: base / inserts / updates all slice this projection, and
     # the merge machinery re-evaluates its source — uncut, the orders
@@ -273,7 +273,7 @@ def incremental_gold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     mt.merge_upsert(spark, path, inserts.unionByName(updates), keys=("o_orderkey",))
     mt.delete_where(spark, path, "o_orderkey % 11 = 0")
     changes = mt.read_changes(spark, path, v0, keys=("o_orderkey",))
-    return refresh_count_sum_aggregate(
-        old_agg, changes, keys=["grp"], count_col="n_rows",
-        sums={"sum_cents": "cents"},
+    return fold_change_deltas(
+        old_agg, changes, ["grp"], {"sum_cents": ("sum", "cents")},
+        count_col="n_rows",
     )

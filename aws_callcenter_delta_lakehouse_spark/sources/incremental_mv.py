@@ -28,9 +28,14 @@ the base is re-aggregated under a semi-join on exactly those groups
 group key), and untouched groups keep their stored values. Cost:
 O(changes) + O(scan of touched groups), still never O(base) — unless
 every group was touched, which is the recompute case anyway.
+
+A fact-dim JOIN view refreshes by the delta-join rule
+(:func:`refresh_join_mv_fact_changes`, :func:`refresh_join_mv_dim_update`).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,25 +94,34 @@ def fold_change_deltas(
     changes: DataFrame,
     group_cols: list,
     aggs: dict,
+    count_col: str = _COUNT_COL,
 ) -> DataFrame:
     """Merge a change frame's SIGNED per-group deltas into an MV frame
     (insert/update_postimage add, delete/update_preimage retract) —
-    the retractable-aggregate fold shared by the batch refresh
-    (:func:`refresh_agg_mv`) and the streaming CDF sink
-    (``streaming.streams.foreach_batch_mv_from_cdf``). ``mv=None``
-    starts from an empty view (the MV as a pure function of the feed).
-    Zero-count groups leave the result — keeping them would serve
-    sum=0 for a group that no longer exists."""
+    the one retractable-aggregate fold: the batch refresh
+    (:func:`refresh_agg_mv`), the streaming sinks
+    (``streaming.streams.foreach_batch_mv_from_cdf`` and
+    ``foreach_batch_incremental_gold``) and the ``incremental_gold_refresh``
+    registry query all call it. ``count_col`` names the per-group row
+    count the retraction keys on (the Gold tables call it ``n_rows``).
+    ``mv=None`` starts from an empty view (the MV as a pure function of
+    the feed). Zero-count groups leave the result — keeping them would
+    serve sum=0 for a group that no longer exists.
+
+    The merge with ``mv`` is NULL-SAFE on the group columns: GROUP BY
+    puts all NULL keys in one group, so a NULL group's delta must fold
+    into its stored row, not dangle beside it. Parity with a full
+    recompute is pinned in tests/test_incremental.py."""
     sign = F.when(
         F.col("_change_type").isin(*_INSERTS), F.lit(1)
     ).otherwise(F.lit(-1))
-    delta_exprs = [F.sum(sign).cast("bigint").alias(f"__d_{_COUNT_COL}")]
+    delta_exprs = [F.sum(sign).cast("bigint").alias(f"__d_{count_col}")]
     for out, (kind, col) in sorted(aggs.items()):
         src = F.col(col) if kind == "sum" else F.lit(1)
         delta_exprs.append(F.sum(sign * src).alias(f"__d_{out}"))
     deltas = changes.groupBy(*group_cols).agg(*delta_exprs)
 
-    value_cols = [_COUNT_COL, *sorted(aggs)]
+    value_cols = [count_col, *sorted(aggs)]
     if mv is None:
         merged = deltas.select(
             *group_cols,
@@ -129,7 +143,7 @@ def fold_change_deltas(
                 for c in value_cols
             ],
         )
-    return merged.filter(F.col(_COUNT_COL) > 0)
+    return merged.filter(F.col(count_col) > 0)
 
 
 def create_agg_mv(
@@ -245,3 +259,64 @@ def refresh_agg_mv(
         "from": last + 1,
         "strategy": strategy,
     }
+
+
+def refresh_join_mv_fact_changes(
+    old_mv: DataFrame,
+    changes: DataFrame,
+    dim: DataFrame,
+    fact_key: Sequence[str],
+    join_on: Sequence[str],
+    change_col: str = "_change_type",
+) -> DataFrame:
+    """CDC-driven maintenance of a fact-side JOIN materialized view
+    (``MV = fact JOIN dim``) — the delta-join rule: because the dim
+    side is unchanged, ``MV' = (MV ANTI removed-keys) UNION
+    (inserted-facts JOIN dim)``, which costs O(|changes|) join work
+    plus one anti-join probe of the MV, never a fact-table rescan.
+
+    ``changes`` carries ``change_col`` rows from ``read_changes``
+    (insert / delete / update_pre/postimage). The removed-key set is
+    tiny (it IS the change batch), so the anti-join broadcasts; the
+    re-join of inserted rows against ``dim`` is the only shuffle and
+    it is |Δ|-sized. Parity with a full recompute is pinned in
+    tests/test_incremental.py and by the registry oracle.
+    """
+    removed = (
+        changes.filter(F.col(change_col).isin("delete", "update_preimage"))
+        .select(*fact_key)
+        .distinct()
+    )
+    added = (
+        changes.filter(F.col(change_col).isin("insert", "update_postimage"))
+        .drop(change_col)
+        .join(dim, on=list(join_on))
+    )
+    survivors = old_mv.join(
+        F.broadcast(removed), on=list(fact_key), how="left_anti"
+    ).select(*old_mv.columns)
+    return survivors.unionByName(added.select(*old_mv.columns))
+
+
+def refresh_join_mv_dim_update(
+    old_mv: DataFrame,
+    dim_post: DataFrame,
+    dim_key: Sequence[str],
+    dim_cols: Sequence[str],
+) -> DataFrame:
+    """Dim-side maintenance of the same join MV: when dimension
+    ATTRIBUTES change (key set unchanged), every MV row carrying an
+    affected key gets its dim columns rewritten in place — one scan of
+    the MV with a BROADCAST join against the (small) post-image, no
+    fact re-join, no shuffle of the MV itself.
+
+    ``dim_post`` holds ``dim_key`` + the refreshed ``dim_cols``.
+    """
+    changed_keys = dim_post.select(*dim_key)
+    untouched = old_mv.join(
+        F.broadcast(changed_keys), on=list(dim_key), how="left_anti"
+    ).select(*old_mv.columns)
+    rewritten = old_mv.drop(*dim_cols).join(
+        F.broadcast(dim_post), on=list(dim_key)
+    )
+    return untouched.unionByName(rewritten.select(*old_mv.columns))

@@ -276,11 +276,16 @@ def _column(attr) -> str:
     return _seq(attr.nameParts())[-1]
 
 
+def _unalias(node):
+    """(node under a ``SubqueryAlias``, its alias), or (node, None)."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.child(), node.alias()
+    return node, None
+
+
 def _target(node) -> tuple[str, str | None]:
     """DML target ``relation [[AS] alias]`` -> (registry name, alias)."""
-    alias = None
-    if node.nodeName() == "SubqueryAlias":
-        node, alias = node.child(), node.alias()
+    node, alias = _unalias(node)
     if node.nodeName() != "UnresolvedRelation":
         raise SqlDmlError(f"DML target must be a table name, got {node.nodeName()}")
     return _name(node), alias
@@ -316,16 +321,6 @@ def _text(stmt: str, expr, alias: str | None = None) -> str:
     return _splice(stmt[start:stop], [(a - start, b - start, r) for a, b, r in cuts])
 
 
-def _extent(node) -> tuple[int, int]:
-    """Span of a whole query subtree: the top node can carry only its
-    own clause's span (``ORDER BY ... LIMIT`` wraps the query body)."""
-    start, stop = _span(node) or (float("inf"), -1)
-    for child in _seq(node.children()):
-        s, e = _extent(child)
-        start, stop = min(start, s), max(stop, e)
-    return start, stop
-
-
 # -- statement executors -----------------------------------------------------
 
 
@@ -336,18 +331,12 @@ def _resolve(spark: SparkSession, name: str, registry_dir: str | None) -> str:
 
 
 def _source_df(
-    spark: SparkSession,
-    stmt: str,
-    node,
-    registry_dir: str | None,
-    views: list[str],
+    spark: SparkSession, plan, registry_dir: str | None
 ) -> tuple[DataFrame, str | None]:
     """MERGE USING -> (DataFrame, declared alias). The source is a
     registered managed-table name, a Spark temp view / catalog table,
-    or a parenthesized query (run through the read path)."""
-    alias = None
-    if node.nodeName() == "SubqueryAlias":
-        node, alias = node.child(), node.alias()
+    or a parenthesized query (run as a parsed plan, :func:`_query_df`)."""
+    node, alias = _unalias(plan.sourceTable())
     kind = node.nodeName()
     if kind == "UnresolvedRelation":
         name = _name(node)
@@ -360,9 +349,9 @@ def _source_df(
         raise SqlDmlError(
             "MERGE USING takes a table name or a parenthesized query"
         )
-    start, stop = _extent(node)
-    query = _rewrite_reads(spark, stmt[start:stop], registry_dir, views)
-    return spark.sql(query), alias
+    return _query_df(
+        spark, plan, lambda p: _unalias(p.sourceTable())[0], registry_dir
+    ), alias
 
 
 # (clause group, parsed action class) -> DeltaMergeBuilder method
@@ -379,9 +368,7 @@ _MERGE_ACTIONS = {
 
 def _merge(spark, stmt, plan, registry_dir, views) -> None:
     name, tgt_alias = _target(plan.targetTable())
-    src_df, src_alias = _source_df(
-        spark, stmt, plan.sourceTable(), registry_dir, views
-    )
+    src_df, src_alias = _source_df(spark, plan, registry_dir)
     dt = DeltaTable.forName(spark, name, registry_dir)
     if tgt_alias:
         dt = dt.alias(tgt_alias)
@@ -612,20 +599,23 @@ def _create_table(spark, stmt, plan, registry_dir) -> None:
     bind()
 
 
-def _query_df(spark: SparkSession, plan, registry_dir: str | None) -> DataFrame:
-    """The query of a parsed CTAS as a DataFrame. Its text is not sliced
-    — no node spans a plain ``SELECT ... GROUP BY`` (the top node covers
-    only the GROUP BY clause) — so the registry references in the query
-    subtree are spliced out of the parsed statement, the result is
-    parsed again, and its query plan runs as a Dataset (time-travel
-    pins, CTEs and ``table_changes()`` as in any read)."""
+def _query_df(
+    spark: SparkSession, plan, query, registry_dir: str | None
+) -> DataFrame:
+    """The query inside a parsed statement (``query(plan)``: a CTAS body,
+    a MERGE source) as a DataFrame. Its text is not sliced — no node
+    spans a plain ``SELECT ... GROUP BY`` (the top node covers only the
+    GROUP BY clause, the select list carries no ``SELECT``) — so the
+    registry references in the query subtree are spliced out of the
+    parsed statement, the result is parsed again, and ``query`` of that
+    plan runs as a Dataset (time-travel pins, CTEs and
+    ``table_changes()`` as in any read)."""
     text = _opt(plan.origin().sqlText())
     views: list[str] = []
     try:
-        cuts = _read_cuts(spark, text, plan.query(), registry_dir, views)
-        query = _parse(spark, _splice(text, cuts)).query()
+        cuts = _read_cuts(spark, text, query(plan), registry_dir, views)
         jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, query
+            spark._jsparkSession, query(_parse(spark, _splice(text, cuts)))
         )
         return DataFrame(jdf, spark)
     finally:
@@ -652,7 +642,7 @@ def _ctas(spark, stmt, plan, registry_dir) -> None:
             raise SqlDmlError(f"{path} is already a managed table")
     elif replace and not plan.orCreate():
         raise SqlDmlError(f"REPLACE TABLE: {path} is not a managed table")
-    df = _query_df(spark, plan, registry_dir)
+    df = _query_df(spark, plan, lambda p: p.query(), registry_dir)
     managed_table.commit_overwrite(
         df,
         path,

@@ -140,27 +140,45 @@ def run_to_memory(
     return spark.table(name)
 
 
-def foreach_batch_upsert(
-    stream: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    checkpoint: str,
-) -> "object":
-    """Streaming MERGE sink: every micro-batch upserts into the managed
-    table — the streaming analogue of the reference's batch late-data
-    MERGE (01_silver_delta_upsert.py:103-112). Returns the query handle."""
-    from ..sources import managed_table
+class _ExactlyOnce:
+    """The exactly-once contract of every ``foreachBatch`` sink here —
+    Delta's ``txnAppId``/``txnVersion``: the highest applied epoch is
+    recorded under ``_KEY`` in a ``txn`` dict that the sink's apply step
+    commits ATOMICALLY with its data. A crash at ANY point leaves either
+    (old data, old epoch) — the replayed micro-batch re-applies onto the
+    pre-image — or (new data, new epoch) — the replay is skipped; a
+    batch is never applied twice (fault injection:
+    ``tests/test_crash_consistency.py``).
 
-    def _upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        managed_table.write_or_merge(
-            batch_df.sparkSession, batch_df, path, keys
+    ``recorded()`` reads the txn dict the sink's epoch lives in (its
+    table's ``managed_table.table_txn`` or ``txn_catalog.catalog_txn``);
+    ``apply(batch_df, txn)`` commits ``txn`` with the batch's data.
+    Calling the instance runs one micro-batch and returns True iff it
+    applied; :meth:`start` runs it as the stream's query."""
+
+    _KEY = "last_epoch"
+
+    def __init__(self, recorded, apply) -> None:
+        self._recorded, self._apply = recorded, apply
+
+    @classmethod
+    def landed(cls, recorded: dict, txn: dict) -> bool:
+        """The replay rule: ``txn``'s epoch is at or below the recorded one."""
+        return txn[cls._KEY] <= int(recorded.get(cls._KEY, -1))
+
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> bool:
+        txn = {self._KEY: int(epoch_id)}
+        if self.landed(self._recorded(), txn):
+            return False  # replayed batch: already applied
+        self._apply(batch_df, txn)
+        return True
+
+    def start(self, stream: DataFrame, checkpoint: str) -> "object":
+        return (
+            stream.writeStream.foreachBatch(self)
+            .option("checkpointLocation", checkpoint)
+            .start()
         )
-
-    return (
-        stream.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
 
 
 def stream_static_enrich(
@@ -301,64 +319,28 @@ def foreach_batch_incremental_gold(
     checkpoint: str,
 ) -> "object":
     """Streaming INCREMENTAL materialized-view sink: each micro-batch
-    applies its signed delta to the persisted Gold aggregate
-    (``sources.incremental.refresh_count_sum_aggregate``) instead of
-    re-merging a complete-mode aggregate — per batch the work is
-    O(|batch|) + a join against the (group-sized) state table, so the
-    maintained view never rescans history. Completes the lakehouse
-    loop: stream -> managed table -> incrementally-maintained Gold.
+    folds into the persisted Gold aggregate ``(keys..., n_rows,
+    sum_value)`` as an insert-only change feed
+    (``sources.incremental_mv.fold_change_deltas``, the fold the CDF
+    sink :func:`foreach_batch_mv_from_cdf` runs) instead of re-merging a
+    complete-mode aggregate — per batch the work is O(|batch|) + a join
+    against the (group-sized) state table, so the maintained view never
+    rescans history. Completes the lakehouse loop: stream -> managed
+    table -> incrementally-maintained Gold.
 
-    Exactly-once: a delta-apply is NOT naturally idempotent (a replayed
-    batch would double-count), so the highest applied epoch is recorded
-    as ``txn`` metadata in the state table's own marker, which
-    ``managed_table.commit_overwrite`` stages WITH the refreshed data
-    and publishes in one atomic rename — the same contract as Delta's
-    ``txnAppId``/``txnVersion``, where the version commits atomically
-    with the files. A crash at ANY point therefore leaves either
-    (old state, old epoch) — the replayed batch re-applies onto the
-    pre-image — or (new state, new epoch) — the replay is skipped;
-    double-apply is impossible (fault-injection-tested in
-    ``tests/test_streaming.py``). Returns the query handle.
+    Exactly-once: a delta fold is NOT naturally idempotent (a replayed
+    batch would double-count), so the applied epoch commits in the
+    state table's own marker with the folded data (:class:`_ExactlyOnce`,
+    fault-injection-tested in ``tests/test_crash_consistency.py``).
+    Returns the query handle.
     """
-    from ..sources import managed_table as mt
-    from ..sources.incremental import refresh_count_sum_aggregate
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = int(mt.table_txn(agg_path).get("last_epoch", -1))
-        if epoch_id <= last:
-            return  # replayed batch: already applied
-        changes = batch_df.withColumn("_change_type", F.lit("insert"))
-        if mt.is_table(spark, agg_path):
-            old = mt.read(spark, agg_path)
-        else:
-            old = (
-                changes.groupBy(*keys)
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    F.sum(sum_col).alias("sum_value"),
-                )
-                .limit(0)
-            )
-        refreshed = refresh_count_sum_aggregate(
-            old, changes, keys=list(keys), count_col="n_rows",
-            sums={"sum_value": sum_col},
-        )
-        # no pre-materialization needed: the refreshed snapshot is
-        # written to a STAGING dir while the source snapshot stays live,
-        # then swapped in with the epoch in one rename
-        mt.commit_overwrite(
-            refreshed,
-            agg_path,
-            keys=tuple(keys),
-            max_history=0,
-            txn={"last_epoch": int(epoch_id)},
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _fold_sink(
+        stream.withColumn("_change_type", F.lit("insert")),
+        agg_path,
+        keys,
+        {"sum_value": ("sum", sum_col)},
+        checkpoint,
+        count_col="n_rows",
     )
 
 
@@ -389,11 +371,8 @@ def foreach_batch_merge_upsert(
 
     from ..sources import managed_table as mt
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+    def _apply(batch_df: DataFrame, txn: dict) -> None:
         spark = batch_df.sparkSession
-        last = int(mt.table_txn(path).get("last_epoch", -1))
-        if epoch_id <= last:
-            return  # replayed batch: already merged
         src = batch_df
         if dedupe_order_col is not None:
             w = Window.partitionBy(*keys).orderBy(
@@ -404,16 +383,13 @@ def foreach_batch_merge_upsert(
                 .filter(F.col("__rn") == 1)
                 .drop("__rn")
             )
-        txn = {"last_epoch": int(epoch_id)}
         if mt.is_table(spark, path):
             mt.merge_upsert(spark, path, src, keys=keys, txn=txn)
         else:
             mt.commit_overwrite(src, path, keys=tuple(keys), txn=txn)
 
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _ExactlyOnce(lambda: mt.table_txn(path), _apply).start(
+        stream, checkpoint
     )
 
 
@@ -438,25 +414,15 @@ def foreach_batch_append(
     exactly what the property licenses."""
     from ..sources import managed_table as mt
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+    def _apply(batch_df: DataFrame, txn: dict) -> None:
         spark = batch_df.sparkSession
         if mt.is_table(spark, path):
-            last = int(mt.table_txn(path).get("last_epoch", -1))
-            if epoch_id <= last:
-                return  # replayed batch: already appended
-            mt.append_rows(
-                spark, batch_df, path, txn={"last_epoch": int(epoch_id)}
-            )
+            mt.append_rows(spark, batch_df, path, txn=txn)
         else:
-            mt.commit_overwrite(
-                batch_df, path, keys=tuple(keys),
-                txn={"last_epoch": int(epoch_id)},
-            )
+            mt.commit_overwrite(batch_df, path, keys=tuple(keys), txn=txn)
 
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _ExactlyOnce(lambda: mt.table_txn(path), _apply).start(
+        stream, checkpoint
     )
 
 
@@ -481,23 +447,18 @@ def foreach_batch_apply_changes(
     batch, state unchanged)."""
     from ..sources import managed_table as mt
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        last = int(mt.table_txn(path).get("last_epoch", -1))
-        if epoch_id <= last:
-            return  # replayed batch: already applied
+    def _apply(batch_df: DataFrame, txn: dict) -> None:
         mt.apply_changes(
             batch_df.sparkSession,
             path,
             batch_df,
             keys=keys,
             sequence_col=sequence_col,
-            txn={"last_epoch": int(epoch_id)},
+            txn=txn,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _ExactlyOnce(lambda: mt.table_txn(path), _apply).start(
+        stream, checkpoint
     )
 
 
@@ -532,11 +493,8 @@ def foreach_batch_scd2(
     from ..operators.scd2 import scd2_apply, scd2_init
     from ..sources import managed_table as mt
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+    def _apply(batch_df: DataFrame, txn: dict) -> None:
         spark = batch_df.sparkSession
-        last = int(mt.table_txn(path).get("last_epoch", -1))
-        if epoch_id <= last:
-            return  # replayed batch: history already reflects it
         if batch_df.isEmpty():
             return  # nothing to apply; replaying an empty batch is a no-op
         batch_date = batch_df.agg(
@@ -553,17 +511,14 @@ def foreach_batch_scd2(
         src = src.drop(batch_date_col)
         if dedupe_order_col is not None:
             src = src.drop(dedupe_order_col)
-        txn = {"last_epoch": int(epoch_id)}
         if mt.is_table(spark, path):
             new_hist = scd2_apply(mt.read(spark, path), src, keys, batch_date)
         else:
             new_hist = scd2_init(src, batch_date)
         mt.commit_overwrite(new_hist, path, txn=txn)
 
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _ExactlyOnce(lambda: mt.table_txn(path), _apply).start(
+        stream, checkpoint
     )
 
 
@@ -607,14 +562,10 @@ def foreach_batch_lsh_index(
     buckets_path = index_path + "_buckets"
     shingles_path = index_path + "_shingles"
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+    def _apply(batch_df: DataFrame, txn: dict) -> None:
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
-        if catalog_dir is not None:
-            last = int(tc.catalog_txn(catalog_dir).get("last_epoch", -1))
-            if epoch_id <= last:
-                return  # replayed batch: the whole transaction landed
         # persist (NOT localCheckpoint): the shingle frame is consumed
         # twice (signature chain + the shingle-table merge), but this
         # closure runs once PER MICRO-BATCH for the stream's lifetime —
@@ -629,7 +580,6 @@ def foreach_batch_lsh_index(
             buckets = lsh_band_buckets(
                 sigs, id_col, bands, num_hashes // bands
             )
-            txn = {"last_epoch": int(epoch_id)}
             if catalog_dir is not None:
                 # merge into the (catalog-pinned) previous index, then
                 # publish both refreshed snapshots in one pointer flip
@@ -653,8 +603,7 @@ def foreach_batch_lsh_index(
                 (buckets_path, buckets, (id_col, "band", "bucket")),
                 (shingles_path, sh, (id_col, "sh")),
             ):
-                last = int(mt.table_txn(path).get("last_epoch", -1))
-                if epoch_id <= last:
+                if _ExactlyOnce.landed(mt.table_txn(path), txn):
                     continue  # this table already has the replayed batch
                 if mt.is_table(spark, path):
                     mt.merge_upsert(spark, path, df, keys=keys, txn=txn)
@@ -663,11 +612,11 @@ def foreach_batch_lsh_index(
         finally:
             sh.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    # default mode records no batch-level epoch: each table skips alone
+    recorded = dict if catalog_dir is None else (
+        lambda: tc.catalog_txn(catalog_dir)
     )
+    return _ExactlyOnce(recorded, _apply).start(stream, checkpoint)
 
 
 def apply_multi_table_epoch(
@@ -697,42 +646,21 @@ def apply_multi_table_epoch(
     (False = replayed epoch skipped)."""
     from ..sources import txn_catalog as tc
 
-    spark = batch_df.sparkSession
-    last = int(tc.catalog_txn(catalog_dir).get("last_epoch", -1))
-    if epoch_id <= last:
-        return False  # replayed batch: the whole transaction landed
-    pinned = tc.snapshot(catalog_dir)
-    updates = {}
-    for name, (derive, path, keys) in tables.items():
-        old = (
-            tc.read_table(spark, catalog_dir, name, manifest=pinned)
-            if name in pinned
-            else None
-        )
-        updates[name] = (derive(batch_df, old), path, tuple(keys))
-    tc.commit_tables(
-        updates, catalog_dir, txn={"last_epoch": int(epoch_id)}
-    )
-    return True
+    def _apply(batch_df: DataFrame, txn: dict) -> None:
+        spark = batch_df.sparkSession
+        pinned = tc.snapshot(catalog_dir)
+        updates = {}
+        for name, (derive, path, keys) in tables.items():
+            old = (
+                tc.read_table(spark, catalog_dir, name, manifest=pinned)
+                if name in pinned
+                else None
+            )
+            updates[name] = (derive(batch_df, old), path, tuple(keys))
+        tc.commit_tables(updates, catalog_dir, txn=txn)
 
-
-def foreach_batch_multi_table(
-    stream: DataFrame,
-    catalog_dir: str,
-    tables: dict,
-    checkpoint: str,
-) -> "object":
-    """Streaming sink wrapper over :func:`apply_multi_table_epoch`:
-    stream -> N managed tables, published atomically per epoch through
-    the transactional catalog. Returns the query handle."""
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_multi_table_epoch(batch_df, epoch_id, catalog_dir, tables)
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _ExactlyOnce(lambda: tc.catalog_txn(catalog_dir), _apply)(
+        batch_df, epoch_id
     )
 
 
@@ -756,14 +684,12 @@ def foreach_batch_mv_from_cdf(
     base table to re-scan for min/max's touched groups — declare those
     on the batch refresher instead.
 
-    Exactly-once: a delta fold double-applies on replay, so the highest
-    applied epoch commits as ``txn`` metadata ATOMICALLY with the MV
-    snapshot (the house sink contract); a replayed micro-batch is
-    skipped by ``last_epoch``. Per batch the work is O(|batch|) + one
+    Exactly-once: a delta fold double-applies on replay, so the applied
+    epoch commits ATOMICALLY with the MV snapshot (:class:`_ExactlyOnce`,
+    the house sink contract). Per batch the work is O(|batch|) + one
     keyed merge against the group-cardinality MV — never a base scan.
     Returns the query handle."""
     from ..sources import incremental_mv as imv
-    from ..sources import managed_table as mt
 
     imv._validate(aggs)
     bad = {k for k, (kind, _) in aggs.items() if kind in imv._RECOMPUTE}
@@ -774,28 +700,49 @@ def foreach_batch_mv_from_cdf(
             "groups; maintain min/max with the batch refresh_agg_mv"
         )
 
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
+    return _fold_sink(
+        stream, mv_path, group_cols, aggs, checkpoint, imv._COUNT_COL
+    )
+
+
+def _fold_sink(
+    stream: DataFrame,
+    path: str,
+    group_cols: Sequence[str],
+    aggs: dict,
+    checkpoint: str,
+    count_col: str,
+) -> "object":
+    """The fold sink behind :func:`foreach_batch_mv_from_cdf` and
+    :func:`foreach_batch_incremental_gold`: each micro-batch of change
+    rows folds into the aggregate table at ``path``
+    (``incremental_mv.fold_change_deltas``; the first fold starts from
+    an empty view and creates the table's schema, later folds keep it)."""
+    from ..sources import incremental_mv as imv
+    from ..sources import managed_table as mt
+
+    def _apply(batch_df: DataFrame, txn: dict) -> None:
         spark = batch_df.sparkSession
-        exists = mt.is_table(spark, mv_path)
-        last = int(mt.table_txn(mv_path).get("last_epoch", -1)) if exists else -1
-        if epoch_id <= last:
-            return  # replayed batch: already folded
-        mv = mt.read(spark, mv_path) if exists else None
-        merged = imv.fold_change_deltas(
-            mv, batch_df, list(group_cols), aggs
+        exists = mt.is_table(spark, path)
+        folded = imv.fold_change_deltas(
+            mt.read(spark, path) if exists else None,
+            batch_df,
+            list(group_cols),
+            aggs,
+            count_col=count_col,
         )
+        # no pre-materialization needed: the folded snapshot is written
+        # to a STAGING dir while the source snapshot stays live, then
+        # swapped in with the epoch in one rename
         mt.commit_overwrite(
-            merged,
-            mv_path,
+            folded,
+            path,
             keys=tuple(group_cols),
             max_history=0,
-            txn={"last_epoch": int(epoch_id)},
-            # the first fold CREATES the MV schema; later folds keep it
-            schema_mode="overwrite" if not exists else "enforce",
+            txn=txn,
+            schema_mode="enforce" if exists else "overwrite",
         )
 
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _ExactlyOnce(lambda: mt.table_txn(path), _apply).start(
+        stream, checkpoint
     )

@@ -6,8 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from aws_callcenter_delta_lakehouse_spark.sources import managed_table as mt
-from aws_callcenter_delta_lakehouse_spark.sources.incremental import (
-    refresh_count_sum_aggregate,
+from aws_callcenter_delta_lakehouse_spark.sources.incremental_mv import (
+    fold_change_deltas,
 )
 
 
@@ -47,9 +47,9 @@ def test_incremental_refresh_matches_recompute(spark, tmp_path):
     v2 = mt.table_version(path)
 
     changes = mt.read_changes(spark, path, v0, v2, keys=("id",))
-    refreshed = refresh_count_sum_aggregate(
-        old_agg, changes, keys=["grp"], count_col="n_rows",
-        sums={"sum_cents": "cents"},
+    refreshed = fold_change_deltas(
+        old_agg, changes, ["grp"], {"sum_cents": ("sum", "cents")},
+        count_col="n_rows",
     )
     recomputed = _agg(mt.read(spark, path))
     assert _snap(refreshed) == _snap(recomputed)
@@ -74,9 +74,9 @@ def test_incremental_refresh_noop_changes(spark, tmp_path):
         keys=("id",),
     )
     changes = mt.read_changes(spark, path, v0, keys=("id",))
-    refreshed = refresh_count_sum_aggregate(
-        old_agg, changes, keys=["grp"], count_col="n_rows",
-        sums={"sum_cents": "cents"},
+    refreshed = fold_change_deltas(
+        old_agg, changes, ["grp"], {"sum_cents": ("sum", "cents")},
+        count_col="n_rows",
     )
     assert _snap(refreshed) == _snap(old_agg)
 
@@ -101,9 +101,9 @@ def test_incremental_refresh_null_grouping_key(spark, tmp_path):
     mt.delete_where(spark, path, "id = 2")
     changes = mt.read_changes(spark, path, v0, mt.table_version(path), keys=("id",))
 
-    refreshed = refresh_count_sum_aggregate(
-        old_agg, changes, keys=["grp"], count_col="n_rows",
-        sums={"sum_cents": "cents"},
+    refreshed = fold_change_deltas(
+        old_agg, changes, ["grp"], {"sum_cents": ("sum", "cents")},
+        count_col="n_rows",
     )
     assert _snap(refreshed) == _snap(_agg(mt.read(spark, path)))
     # exactly ONE row for the NULL group
@@ -115,7 +115,7 @@ def _rows(df):
 
 
 def test_join_mv_fact_changes_matches_recompute(spark, tmp_path):
-    from aws_callcenter_delta_lakehouse_spark.sources.incremental import (
+    from aws_callcenter_delta_lakehouse_spark.sources.incremental_mv import (
         refresh_join_mv_fact_changes,
     )
 
@@ -151,7 +151,7 @@ def test_join_mv_fact_changes_matches_recompute(spark, tmp_path):
 
 
 def test_join_mv_dim_update_rewrites_in_place(spark):
-    from aws_callcenter_delta_lakehouse_spark.sources.incremental import (
+    from aws_callcenter_delta_lakehouse_spark.sources.incremental_mv import (
         refresh_join_mv_dim_update,
     )
 

@@ -107,6 +107,50 @@ def test_merge_explicit_clauses_and_subquery_source(spark, named_table):
     }
 
 
+def test_merge_grouped_subquery_source_reads_registry(spark, named_table, tmp_path):
+    """A parenthesized MERGE source is a whole query, not the span of
+    its top node: GROUP BY (whose node spans only that clause), DISTINCT
+    with ORDER BY / LIMIT, and a registry name read inside it."""
+    name, path, registry = named_table
+    feed_path = str(tmp_path / "feed")
+    mt.commit_overwrite(
+        spark.createDataFrame(
+            [(1, 10.0), (1, 5.0), (2, 1.0), (4, 7.0), (4, 7.0)],
+            "id INT, amt DOUBLE",
+        ),
+        feed_path,
+    )
+    txn_catalog.register_table_name(registry, "sqldb.feed", feed_path)
+    sql_dml.sql(
+        spark,
+        f"""
+        MERGE INTO {name} t
+        USING (SELECT id, count(*) AS n, sum(amt) AS amt
+               FROM sqldb.feed GROUP BY id) s
+        ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET balance = t.balance + s.amt
+        WHEN NOT MATCHED THEN
+          INSERT (id, name, balance) VALUES (s.id, 'new', s.amt * s.n)
+        """,
+    )
+    sql_dml.sql(
+        spark,
+        f"""
+        MERGE INTO {name} t
+        USING (SELECT DISTINCT id, amt FROM sqldb.feed WHERE id > 1
+               ORDER BY id DESC LIMIT 1) s
+        ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET name = 'top'
+        """,
+    )
+    assert _rows(spark, path) == {
+        (1, "alice", 115.0),
+        (2, "bob", 201.0),
+        (3, "carol", 300.0),
+        (4, "top", 28.0),
+    }
+
+
 def test_merge_by_source_delete(spark, named_table):
     name, path, _ = named_table
     spark.createDataFrame([(1,), (2,)], "id INT").createOrReplaceTempView(

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from aws_callcenter_delta_lakehouse_spark.sources import managed_table
 from aws_callcenter_delta_lakehouse_spark.streaming.streams import (
     dedup_stream,
-    foreach_batch_upsert,
     run_to_memory,
     stream_events,
     tumbling_counts,
